@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .ngram import doc_shingle_arrays, shingles
+from .ngram import shingles
 
 
 #: 2-universal permutation family for the engine-portable ("md5") hash

@@ -122,13 +122,15 @@ def literal_frame(spark, rows: list[tuple], schema_ddl: str) -> DataFrame:
     struct = T.StructType.fromDDL(schema_ddl)
     if not rows:
         return spark.createDataFrame([], struct)
-    # Column-wise array literals when every field is primitive: ONE py4j
-    # call per COLUMN (F.lit(list) ships the whole column as one array
-    # literal) instead of one per CELL — the per-cell struct form cost
-    # ~rows x fields driver round-trips (measured 4.2s -> 0.4s building a
-    # 200x4 registry; the drift/check registries pay this on every
-    # benched plan build). arrays_zip + explode preserves row order and
-    # the element-wise cast is the same Cast the per-cell form applied.
+    # Column-wise array literals when every field is primitive. On
+    # classic py4j, F.lit(list) still expands to array(lit(x) for x in
+    # the column) — about one py4j call per cell (it is a single array
+    # literal only under Spark Connect) — but the per-cell struct form
+    # paid ~3-4 per cell (lit, cast, alias, plus a struct call per row).
+    # Measured 4.2s -> 0.4s building a 200x4 registry; the drift/check
+    # registries pay this on every benched plan build. arrays_zip +
+    # explode preserves row order and the element-wise cast is the same
+    # Cast the per-cell form applied.
     # Complex field types (array/map/struct cells) and columns lit()
     # cannot infer (e.g. mixed int/float) fall back to the per-cell form.
     if all(

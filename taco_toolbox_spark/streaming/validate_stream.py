@@ -122,9 +122,19 @@ def transcript_violations_stateful(
 
     Per-conversation state is BOUNDED: (last_turn, last_ts) for the
     monotone boundary, plus two <=8 KiB bitmaps (turns seen, duplicates
-    already reported) for uniqueness/contiguity. Within a micro-batch all
-    comparisons are vectorized (pandas shift / numpy bitmap ops); only the
-    boundary row consults state — no per-row Python loop.
+    already reported) for uniqueness/contiguity. The function runs once
+    per conversation per micro-batch, on frames of a few rows, so its
+    cost is per call, not per row: the body is one numpy kernel — each
+    column read once with ``to_numpy``, one stable argsort, duplicates
+    found by comparing adjacent sorted keys, bitmap ops for the state —
+    and a pandas frame is built only for the (rare) violation rows.
+    ``ts`` enters the worker as epoch microseconds (``unix_micros``, a
+    long column): Arrow->pandas conversion of a timestamp column costs
+    several times that of an int64 one per call, and integer
+    microseconds make the comparisons exact and independent of the
+    session and OS time zones. Emitted ``ts`` values are converted back
+    as tz-aware UTC timestamps; the state keeps ``last_ts timestamp``,
+    so existing streaming checkpoints resume.
 
     Emission semantics vs batch:
     - ts_monotone / unique_turn rows are violations (passed=False), one
@@ -144,14 +154,17 @@ def transcript_violations_stateful(
       pairs must be allowed transitions (checks.base.ROLE_TRANSITIONS),
       the conversation's FIRST arriving valid row must open with a
       checks.base.ROLE_FIRST role. State adds one string (role at the
-      highest turn) + one opened flag; pair tests are a vectorized
-      str.cat + isin over the batch, boundary row vs state — exact under
-      the same in-turn-order arrival contract as ts_monotone.
+      highest turn) + one opened flag; each adjacent pair is one set
+      lookup, boundary row vs state — exact under the same in-turn-order
+      arrival contract as ts_monotone.
     - ts_gap (when ``max_gap_s`` is given): the batch GapCheck's bounded
       adjacent step on the stream — consecutive turns more than
-      ``max_gap_s`` seconds apart. Reuses the monotone pass's shifted-ts
+      ``max_gap_s`` seconds apart, ``(cur - prev) / 1e6 > max_gap_s`` on
+      the microsecond vector. Reuses the monotone pass's previous-ts
       vector and the SAME (last_turn, last_ts) state — zero added state.
     """
+    import datetime as dt
+
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -186,6 +199,20 @@ def transcript_violations_stateful(
     do_mono = "ts_monotone" in check_ids
     do_uniq = "unique_turn" in check_ids
     do_contig = "turn_contiguous" in check_ids
+    ts_us = "_ts_us"
+    nat = np.iinfo(np.int64).min  # null ts; datetime64's NaT bit pattern
+    epoch = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
+    cap_detail = (
+        f"{order_col} >= {STATE_CAP} — uniqueness/contiguity no longer tracked"
+    )
+    gap_detail = f"gap > {max_gap_s}s (stateful)"
+
+    def _grow(arr, nbytes):
+        if arr is None:
+            return np.zeros(nbytes, dtype=np.uint8)
+        if len(arr) < nbytes:
+            return np.concatenate([arr, np.zeros(nbytes - len(arr), np.uint8)])
+        return arr
 
     def fn(key, pdf_iter, state: GroupState):
         (conv,) = key
@@ -198,158 +225,118 @@ def transcript_violations_stateful(
             opened = vals[8] if role_col else True
             seen = np.frombuffer(seen_b, dtype=np.uint8).copy() if seen_b else None
             dup = np.frombuffer(dup_b, dtype=np.uint8).copy() if dup_b else None
+            if last_ts is not None:
+                # the state's timestamp arrives as a naive OS-local
+                # datetime (TimestampType.fromInternal); .timestamp() is
+                # its exact inverse, DST fold included
+                last_ts = (
+                    int(last_ts.replace(microsecond=0).timestamp()) * 1_000_000
+                    + last_ts.microsecond
+                )
         else:
             last_turn = last_ts = seen = dup = last_role = None
             n_rows, contig_bad, overflow, opened = 0, False, False, False
 
-        def _grow(arr, nbytes):
-            if arr is None:
-                return np.zeros(nbytes, dtype=np.uint8)
-            if len(arr) < nbytes:
-                return np.concatenate([arr, np.zeros(nbytes - len(arr), np.uint8)])
-            return arr
+        # emitted blocks: (order values, ts micros, check_id, detail,
+        # passed, n_seen); a pandas frame is built once, at the end
+        out = []
 
         for pdf in pdf_iter:
-            if not len(pdf):
+            n = len(pdf)
+            if not n:
                 continue
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            n_rows += len(pdf)
-            frames = []
+            order_all = pdf[order_col].to_numpy()
+            perm = np.argsort(order_all, kind="stable")  # NaN keys sort last
+            order_all = order_all[perm]
+            ts_all = pdf[ts_us].to_numpy()[perm]
+            if ts_all.dtype.kind == "f":  # nulls arrive as float64 NaN
+                ts_all = np.where(np.isnan(ts_all), nat, ts_all).astype(np.int64)
+            n_rows += n
+            emit = []
 
             # Null/negative order keys arrive from Arrow as float64 NaN /
             # negatives and would poison the int bitmap math. Batch parity:
             # they are turn_idx_nonneg violations (range_check null_ok=False)
             # and are excluded from the mono/uniq/contig passes. They still
             # count in n_rows, so contiguity goes bad — as in batch, where
-            # a null turn can't be part of 0..n-1.
-            bad_key = pdf[order_col].isna() | (pdf[order_col] < 0)
-            if bad_key.any():
-                v = pdf[bad_key]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            group_col: v[group_col],
-                            order_col: None,
-                            ts_col: v[ts_col],
-                            "check_id": "turn_idx_nonneg",
-                            "detail": "null or negative turn_idx (stateful)",
-                            "passed": False,
-                        }
+            # a null turn can't be part of 0..n-1. Sorted, they are the
+            # negative head and the NaN tail; the valid keys lie between.
+            lo = int(np.searchsorted(order_all, 0))
+            hi = n
+            if order_all.dtype.kind == "f":
+                hi -= int(np.isnan(order_all).sum())
+            if lo or hi < n:
+                bad = np.r_[0:lo, hi:n]
+                emit.append(
+                    (
+                        np.full(len(bad), np.nan),
+                        ts_all[bad],
+                        "turn_idx_nonneg",
+                        "null or negative turn_idx (stateful)",
+                        False,
                     )
                 )
-                pdf = pdf[~bad_key]
+            idx = order_all[lo:hi].astype(np.int64)
+            ts = ts_all[lo:hi]
+            m = len(idx)
 
-            if (do_mono or max_gap_s is not None) and len(pdf):
-                prev_ts = pdf[ts_col].shift()
-                if last_ts is not None:
-                    prev_ts.iloc[0] = last_ts
+            def flag(rows, check_id, detail):
+                emit.append((idx[rows], ts[rows], check_id, detail, False))
+
+            if (do_mono or max_gap_s is not None) and m:
+                prev = np.empty(m, dtype=np.int64)
+                prev[1:] = ts[:-1]
+                prev[0] = nat if last_ts is None else last_ts
+                both = (prev != nat) & (ts != nat)  # a null ts never fires
                 if do_mono:
-                    bad = prev_ts > pdf[ts_col]
-                    if bad.any():
-                        v = pdf[bad]
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    group_col: v[group_col],
-                                    order_col: v[order_col],
-                                    ts_col: v[ts_col],
-                                    "check_id": "ts_monotone",
-                                    "detail": "ts regression (stateful)",
-                                    "passed": False,
-                                }
-                            )
-                        )
+                    rows = np.flatnonzero(both & (prev > ts))
+                    if len(rows):
+                        flag(rows, "ts_monotone", "ts regression (stateful)")
                 if max_gap_s is not None:
-                    # same shifted vector as monotone: NaT prev never fires
-                    gap = (pdf[ts_col] - prev_ts).dt.total_seconds()
-                    bad_gap = gap > max_gap_s
-                    if bad_gap.any():
-                        v = pdf[bad_gap]
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    group_col: v[group_col],
-                                    order_col: v[order_col],
-                                    ts_col: v[ts_col],
-                                    "check_id": "ts_gap",
-                                    "detail": f"gap > {max_gap_s}s (stateful)",
-                                    "passed": False,
-                                }
-                            )
-                        )
+                    step_s = (ts - prev) / 1e6
+                    rows = np.flatnonzero(both & (step_s > max_gap_s))
+                    if len(rows):
+                        flag(rows, "ts_gap", gap_detail)
 
-            if role_col and len(pdf):
-                roles = pdf[role_col].astype("string")
-                prev_role = roles.shift()
+            if role_col and m:
+                roles = pdf[role_col].to_numpy()[perm][lo:hi]
+                roles = [None if pd.isna(r) else str(r) for r in roles]
+                prev_role = [None, *roles[:-1]]
                 if not opened:
                     # opening rule: the conversation's first arriving row
                     # (lowest turn this batch — exact under in-turn-order
                     # arrival) must open with an allowed role
-                    if str(roles.iloc[0]) not in first_roles:
-                        v = pdf.iloc[[0]]
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    group_col: v[group_col],
-                                    order_col: v[order_col],
-                                    ts_col: v[ts_col],
-                                    "check_id": "role_transitions",
-                                    "detail": "opening role not allowed "
-                                    "(stateful)",
-                                    "passed": False,
-                                }
-                            )
+                    if roles[0] not in first_roles:
+                        flag(
+                            [0],
+                            "role_transitions",
+                            "opening role not allowed (stateful)",
                         )
-                elif last_role is not None:
-                    prev_role.iloc[0] = last_role
+                else:
+                    prev_role[0] = last_role
                 opened = True
-                pair = prev_role.str.cat(roles, sep="\x1f", na_rep=None)
-                bad_pair = (
-                    (prev_role.notna() & ~pair.isin(allowed_keys).fillna(False))
-                    .fillna(False)
-                    .to_numpy(dtype=bool)
-                )
-                if bad_pair.any():
-                    v = pdf[bad_pair]
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                group_col: v[group_col],
-                                order_col: v[order_col],
-                                ts_col: v[ts_col],
-                                "check_id": "role_transitions",
-                                "detail": "role transition not allowed "
-                                "(stateful)",
-                                "passed": False,
-                            }
-                        )
+                rows = [
+                    i
+                    for i, (a, b) in enumerate(zip(prev_role, roles))
+                    if a is not None
+                    and (b is None or f"{a}\x1f{b}" not in allowed_keys)
+                ]
+                if rows:
+                    flag(
+                        rows,
+                        "role_transitions",
+                        "role transition not allowed (stateful)",
                     )
 
-            idx = (
-                pdf[order_col].to_numpy(dtype=np.int64)
-                if len(pdf)
-                else np.empty(0, dtype=np.int64)
-            )
-            if (do_uniq or do_contig) and not overflow and len(idx):
-                if idx.max() >= STATE_CAP:
+            if (do_uniq or do_contig) and not overflow and m:
+                if idx[-1] >= STATE_CAP:
                     overflow = True
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                group_col: [conv],
-                                order_col: [int(idx.max())],
-                                ts_col: [pd.NaT],
-                                "check_id": ["stream_state_cap"],
-                                "detail": [
-                                    f"{order_col} >= {STATE_CAP} — "
-                                    "uniqueness/contiguity no longer tracked"
-                                ],
-                                "passed": False,
-                            }
-                        )
+                    emit.append(
+                        (idx[-1:], np.array([nat]), "stream_state_cap",
+                         cap_detail, False)
                     )
                 else:
-                    nbytes = (int(idx.max()) >> 3) + 1
+                    nbytes = (int(idx[-1]) >> 3) + 1
                     seen = _grow(seen, nbytes)
                     dup = _grow(dup, nbytes)
                     byte_pos, bit = idx >> 3, (1 << (idx & 7)).astype(np.uint8)
@@ -360,37 +347,27 @@ def transcript_violations_stateful(
                     already = (dup[byte_pos] & bit) != 0
                     np.bitwise_or.at(seen, byte_pos, bit)
                     if do_uniq:
-                        s = pd.Series(idx)
-                        multi = s.map(s.value_counts()).to_numpy() > 1
+                        # sorted keys: a key repeats in this batch iff it
+                        # equals a neighbour; the first of a run represents it
+                        same = idx[1:] == idx[:-1]
+                        multi = np.zeros(m, dtype=bool)
+                        multi[1:] = same
+                        multi[:-1] |= same
                         key_dup = was_set | multi
                         if key_dup.any():
-                            # one representative row per newly-dup key
-                            rep = ~s.duplicated().to_numpy()
-                            fresh = key_dup & rep & ~already
-                            if fresh.any():
-                                v = pdf[fresh]
-                                frames.append(
-                                    pd.DataFrame(
-                                        {
-                                            group_col: v[group_col],
-                                            order_col: v[order_col],
-                                            ts_col: v[ts_col],
-                                            "check_id": "unique_turn",
-                                            "detail": "duplicate key (stateful)",
-                                            "passed": False,
-                                        }
-                                    )
-                                )
+                            rep = np.ones(m, dtype=bool)
+                            rep[1:] = ~same
+                            rows = np.flatnonzero(key_dup & rep & ~already)
+                            if len(rows):
+                                flag(rows, "unique_turn", "duplicate key (stateful)")
                             np.bitwise_or.at(
                                 dup, byte_pos[key_dup], bit[key_dup]
                             )
 
             if do_contig and not overflow and (seen is not None or n_rows > 0):
-                max_turn = int(
-                    max(
-                        idx.max() if len(idx) else -1,
-                        last_turn if last_turn is not None else -1,
-                    )
+                max_turn = max(
+                    int(idx[-1]) if m else -1,
+                    last_turn if last_turn is not None else -1,
                 )
                 if seen is None:
                     # every row so far had a null/negative key: zero valid
@@ -412,42 +389,47 @@ def transcript_violations_stateful(
                     )
                 if ok == contig_bad:  # status flip (incl. first bad batch)
                     contig_bad = not ok
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                group_col: [conv],
-                                order_col: [None],
-                                ts_col: [pd.NaT],
-                                "check_id": ["turn_contiguous"],
-                                "detail": [
-                                    f"idx not 0..n-1: n={n_rows} "
-                                    f"distinct={distinct} max={max_turn}"
-                                    if not ok
-                                    else "contiguity restored"
-                                ],
-                                "passed": ok,
-                            }
+                    emit.append(
+                        (
+                            np.array([np.nan]),
+                            np.array([nat]),
+                            "turn_contiguous",
+                            f"idx not 0..n-1: n={n_rows} "
+                            f"distinct={distinct} max={max_turn}"
+                            if not ok
+                            else "contiguity restored",
+                            ok,
                         )
                     )
 
-            mt = int(idx.max()) if len(idx) else None
-            if mt is not None and (last_turn is None or mt >= last_turn):
-                last_turn = mt
+            if m and (last_turn is None or idx[-1] >= last_turn):
                 # ts of the HIGHEST turn (not max ts): the next batch's
                 # boundary row must compare against its predecessor by
                 # turn order, matching the batch lag-window semantics
-                hi = int(np.flatnonzero(idx == mt)[-1])
-                last_ts = pdf[ts_col].iloc[hi]
+                last_turn = int(idx[-1])
+                last_ts = None if ts[-1] == nat else int(ts[-1])
                 if role_col:
-                    r = pdf[role_col].iloc[hi]
-                    last_role = None if pd.isna(r) else str(r)
-            for f in frames:
-                f["n_seen"] = n_rows
-                yield f
+                    last_role = roles[-1]
+            out.extend(e + (n_rows,) for e in emit)
+
+        if out:
+            sizes = [len(e[1]) for e in out]
+            ts_out = np.concatenate([e[1] for e in out]).view("datetime64[us]")
+            yield pd.DataFrame(
+                {
+                    group_col: [conv] * sum(sizes),
+                    order_col: np.concatenate([e[0] for e in out]),
+                    ts_col: pd.Series(ts_out).dt.tz_localize("UTC"),
+                    "check_id": np.repeat([e[2] for e in out], sizes),
+                    "detail": np.repeat([e[3] for e in out], sizes),
+                    "passed": np.repeat([e[4] for e in out], sizes),
+                    "n_seen": np.repeat([e[5] for e in out], sizes),
+                }
+            )
 
         new_state = (
             last_turn,
-            last_ts,
+            None if last_ts is None else epoch + dt.timedelta(microseconds=last_ts),
             seen.tobytes() if seen is not None else None,
             dup.tobytes() if dup is not None else None,
             n_rows,
@@ -458,11 +440,17 @@ def transcript_violations_stateful(
             new_state += (last_role, opened)
         state.update(new_state)
 
-    cols = [group_col, order_col, ts_col]
-    if role_col:
-        cols.append(role_col)
+    # a SQL projection, not F.* Column calls: PySpark's call-site capture
+    # on Column calls imports IPython where it is installed (~20 MB and
+    # ~0.4 s in a Spark driver process that has made no Column call yet)
+    def q(c):
+        return "`" + c.replace("`", "``") + "`"
+
+    cols = [q(group_col), q(order_col)] + ([q(role_col)] if role_col else [])
     return (
-        stream_df.select(*cols)
+        stream_df.selectExpr(
+            *cols, f"unix_micros(CAST({q(ts_col)} AS TIMESTAMP)) AS {ts_us}"
+        )
         .groupBy(group_col)
         .applyInPandasWithState(
             fn,

@@ -84,11 +84,56 @@ def _prefix_corpus(spark):
     # rarest-first order but nothing else: multiple prefix collisions
     # (c >= 2) with low true overlap — the shape the collision-count
     # positional bound prunes before verification; parity below asserts
-    # the tightened filter never changes the returned pair set
+    # the tightened filter never changes the returned pair set. Each
+    # filler run also appears in two padded carrier docs (jaccard ~0.2
+    # with the pair's docs), so the filler shingles have df=3 and the
+    # shared df=2 head shingles rank inside both prefixes.
     shared_head = "omega sigma lambda rho tau phi chi psi"
-    rows.append((9101, f"{shared_head} " + " ".join(f"lefty{j}" for j in range(20))))
-    rows.append((9102, f"{shared_head} " + " ".join(f"righty{j}" for j in range(20))))
+    for doc_id, side in ((9101, "lefty"), (9102, "righty")):
+        run = " ".join(f"{side}{j}" for j in range(20))
+        rows.append((doc_id, f"{shared_head} {run}"))
+        for c in range(2):
+            pad = " ".join(f"{side}pad{c}_{j}" for j in range(60))
+            rows.append((doc_id + 10 * (c + 1), f"{run} {pad}"))
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _prefix_candidates(docs, t):
+    """(id_a, id_b, _c) for every pair colliding in the prefix join of
+    jaccard_pairs_prefix at threshold ``t``: prefixes under the same
+    (df, hash, shingle) rarest-first order, before the length and
+    positional filters."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    sh = shingles(docs, "text", "doc_id", 3)
+    ranked = sh.select(
+        "id",
+        "shingle",
+        F.count(F.lit(1)).over(Window.partitionBy("shingle")).alias("_f"),
+    ).select(
+        "id",
+        "shingle",
+        F.row_number()
+        .over(
+            Window.partitionBy("id").orderBy(
+                "_f", F.xxhash64("shingle"), "shingle"
+            )
+        )
+        .alias("_p"),
+        F.count(F.lit(1)).over(Window.partitionBy("id")).alias("_l"),
+    )
+    prefix = ranked.filter(
+        F.col("_p") <= F.col("_l") - F.ceil(F.lit(t) * F.col("_l")) + 1
+    )
+    a = prefix.select(F.col("id").alias("id_a"), "shingle")
+    b = prefix.select(F.col("id").alias("id_b"), "shingle")
+    return (
+        a.join(b, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("_c"))
+    )
 
 
 def test_jaccard_prefix_equals_bruteforce(spark):
@@ -119,39 +164,32 @@ def test_jaccard_prefix_prunes_hot_shingle_candidates(spark):
     generation: the prefix self-join's candidate count stays near the
     true pair count, orders of magnitude below the brute join's
     every-doc-pairs-with-every-doc blowup."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from taco_toolbox_spark.dedup.ngram import shingles
-
     docs = _prefix_corpus(spark)
-    t = 0.5
-    sh = shingles(docs, "text", "doc_id", 3)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-    ranked = sh.join(freq, "shingle").select(
-        "id",
-        "shingle",
-        F.row_number()
-        .over(Window.partitionBy("id").orderBy("_f", "shingle"))
-        .alias("_p"),
-        F.count(F.lit(1)).over(Window.partitionBy("id")).alias("_l"),
-    )
-    prefix = ranked.filter(
-        F.col("_p") <= F.col("_l") - F.ceil(F.lit(t) * F.col("_l")) + 1
-    )
-    a = prefix.select(F.col("id").alias("id_a"), "shingle")
-    b = prefix.select(F.col("id").alias("id_b"), "shingle")
-    n_cand = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .count()
-    )
+    n_cand = _prefix_candidates(docs, 0.5).count()
     n_docs = docs.count()
     # brute candidate blowup would be ~C(n_docs, 2) thanks to the hot
     # shingle; prefix candidates must stay far below it
     assert n_cand < (n_docs * (n_docs - 1) // 2) * 0.2
+
+
+def test_jaccard_prefix_low_overlap_pair_reaches_candidates(spark):
+    """The 9101/9102 pair exists to exercise the collision-count bound:
+    it must collide on several prefix shingles (_c >= 2) at every
+    threshold, yet never be returned (true jaccard ~0.15)."""
+    from taco_toolbox_spark.dedup.ngram import jaccard_pairs_prefix
+
+    docs = _prefix_corpus(spark)
+    for t in (0.3, 0.5, 0.8):
+        cand = {
+            (r.id_a, r.id_b): r._c
+            for r in _prefix_candidates(docs, t).collect()
+        }
+        assert cand.get((9101, 9102), 0) >= 2, f"threshold {t}"
+        got = {
+            (r.id_a, r.id_b)
+            for r in jaccard_pairs_prefix(docs, threshold=t).collect()
+        }
+        assert (9101, 9102) not in got, f"threshold {t}"
 
 
 def test_minhash_recall_vs_bruteforce(spark):

@@ -678,3 +678,51 @@ def test_engine_periodic_pass_shares_exchange(spark):
     assert plan.count("Window") == 3, plan
     for bad in ("Join", "BatchEvalPython", "ArrowEvalPython"):
         assert bad not in plan, bad
+
+
+def test_stream_battery_passes_no_timestamp_to_python(spark, tmp_path):
+    """The stateful battery hands Python epoch microseconds, not a
+    timestamp column: Arrow->pandas timestamp conversion costs several
+    times an int64 one per conversation call. The operator's input is
+    the group, order and ``_us`` columns only."""
+    import datetime as dt
+
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
+
+    path = str(tmp_path / "in")
+    spark.createDataFrame(
+        [("c", 0, dt.datetime(2025, 1, 1), "x")],
+        "conv_id string, turn_idx int, ts timestamp, text string",
+    ).write.parquet(path)
+    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(
+        path
+    )
+    q = (
+        transcript_violations_stateful(stream)
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("t_battery_plan")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        todo = [q._jsq.streamingQuery().lastExecution().executedPlan()]
+    finally:
+        q.stop()
+    found = []
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            found.append(
+                [
+                    (f.name(), f.dataType().simpleString())
+                    for f in node.child().schema().fields()
+                ]
+            )
+    assert found == [
+        [("conv_id", "string"), ("turn_idx", "int"), ("_ts_us", "bigint")]
+    ], found

@@ -2036,3 +2036,137 @@ def test_stream_periodic_guards(spark):
         )
     with pytest.raises(ValueError, match="not in stream schema"):
         stream_periodic_violations(df, "value", ["nope"], "value")
+
+
+def _append_turns(spark, path, rows):
+    """Append one single-file batch of (conv_id, turn_idx, ts) rows; each
+    call becomes its own micro-batch of run_durable_battery."""
+    spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, ts timestamp"
+    ).repartition(1).write.mode("append").parquet(path)
+
+
+def test_stateful_battery_state_cap_then_monotone(tmp_path, spark):
+    """A turn_idx >= STATE_CAP emits exactly one stream_state_cap row
+    (uniqueness/contiguity stop), and ts_monotone keeps firing after it,
+    in the same batch and across the next one."""
+    import datetime as dt
+
+    from taco_toolbox_spark.streaming.validate_stream import (
+        STATE_CAP,
+        run_durable_battery,
+    )
+
+    t0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    s = dt.timedelta(seconds=1)
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _append_turns(
+        spark,
+        inp,
+        [("c", 0, t0), ("c", 1, t0 + 2 * s), ("c", STATE_CAP, t0 + s)],
+    )
+    run_durable_battery(spark, inp, out, ckpt)
+    _append_turns(
+        spark,
+        inp,
+        [("c", STATE_CAP + 1, t0 + 3 * s), ("c", STATE_CAP + 2, t0)],
+    )
+    run_durable_battery(spark, inp, out, ckpt)
+    got = spark.read.parquet(out).toPandas()
+
+    cap = got[got.check_id == "stream_state_cap"]
+    assert list(zip(cap.conv_id, cap.turn_idx)) == [("c", STATE_CAP)]
+    assert cap.ts.isna().all()
+    mono = got[got.check_id == "ts_monotone"]
+    assert sorted(mono.turn_idx) == [STATE_CAP, STATE_CAP + 2]
+    assert not got.check_id.isin(["unique_turn", "turn_contiguous"]).any()
+
+
+def test_stateful_battery_session_timezone_boundary(tmp_path, spark):
+    """The battery's ts state is time-zone independent: under a non-UTC
+    session time zone a regression across a micro-batch boundary is
+    caught, and the emitted ts is the input instant."""
+    import datetime as dt
+
+    from taco_toolbox_spark.streaming.validate_stream import run_durable_battery
+
+    t0 = dt.datetime(2025, 3, 9, 9, 59, 59, 250_000, tzinfo=dt.timezone.utc)
+    s = dt.timedelta(seconds=1)
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/Los_Angeles")
+    try:
+        _append_turns(spark, inp, [("c", 0, t0), ("c", 1, t0 + 10 * s)])
+        run_durable_battery(spark, inp, out, ckpt)
+        _append_turns(spark, inp, [("c", 2, t0 + 5 * s)])
+        run_durable_battery(spark, inp, out, ckpt)
+        got = (
+            spark.read.parquet(out)
+            .select("conv_id", "turn_idx", "check_id",
+                    F.unix_micros("ts").alias("us"))
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+    want_us = (t0 + 5 * s - dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)) // (
+        dt.timedelta(microseconds=1)
+    )
+    assert [(r.conv_id, r.turn_idx, r.check_id, r.us) for r in got] == [
+        ("c", 2, "ts_monotone", want_us)
+    ]
+
+
+def test_stateful_battery_duplicates_reported_once(tmp_path, spark):
+    """A duplicate turn inside one micro-batch and one split across two
+    are each reported exactly once — a further copy in a later batch is
+    not re-reported."""
+    import datetime as dt
+
+    from taco_toolbox_spark.streaming.validate_stream import run_durable_battery
+
+    t0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    s = dt.timedelta(seconds=1)
+    inp, out, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    _append_turns(
+        spark,
+        inp,
+        [
+            ("a", 0, t0), ("a", 1, t0 + s), ("a", 1, t0 + s),
+            ("b", 0, t0), ("b", 1, t0 + s),
+        ],
+    )
+    run_durable_battery(spark, inp, out, ckpt)
+    _append_turns(
+        spark, inp, [("a", 1, t0 + s), ("b", 1, t0 + s), ("b", 2, t0 + 2 * s)]
+    )
+    run_durable_battery(spark, inp, out, ckpt)
+    got = spark.read.parquet(out).toPandas()
+    dup = got[got.check_id == "unique_turn"]
+    assert sorted(zip(dup.conv_id, dup.turn_idx)) == [("a", 1), ("b", 1)]
+
+
+def test_stateful_gap_boundary_is_exclusive(tmp_path, spark):
+    """ts_gap fires on a step strictly above max_gap_s: a gap of exactly
+    max_gap_s passes, one microsecond more fails."""
+    import datetime as dt
+
+    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+
+    t0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    gap = dt.timedelta(seconds=120)
+    path = str(tmp_path / "gap_in")
+    _append_turns(
+        spark,
+        path,
+        [
+            ("c", 0, t0),
+            ("c", 1, t0 + gap),
+            ("c", 2, t0 + 2 * gap + dt.timedelta(microseconds=1)),
+        ],
+    )
+    out = run_battery_smoke(
+        spark, path, query_name="t_gap_edge", max_gap_s=120
+    ).toPandas()
+    flagged = out[out.check_id == "ts_gap"]
+    assert list(zip(flagged.conv_id, flagged.turn_idx)) == [("c", 2)]
