@@ -81,7 +81,7 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
         "--record-sketches",
         action="store_true",
         help="store per-partition sketch state in the manifest alongside "
-        "lineage/metrics: t-digest centroids for length(text), HLL "
+        "lineage/metrics: KLL quantile sketches for length(text), HLL "
         "distinct sketches for conv_id, and (with --cat-drift COL) the "
         "exact per-partition category histogram — a later run (or another "
         "table's run) merges them into global quantiles/distincts/"
@@ -90,7 +90,7 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
     p.add_argument(
         "--sketch-expr",
         default="length(text)",
-        help="value expression for the stored t-digest quantile state",
+        help="value expression for the stored KLL quantile state",
     )
     p.add_argument(
         "--sketch-distinct",
@@ -332,6 +332,15 @@ def main(argv: list[str] | None = None, stop_session: bool = True) -> int:
             ensure_digest_params(manifest, digest_cols)
         except ValueError as e:
             raise SystemExit(f"--record-digests: {e}")
+    if args.resume and args.record_sketches:
+        # same up-front rule for quantile-sketch state: KLL bytes must not
+        # land beside a previous run's t-digest centroids
+        from taco_toolbox_spark.checkpoint import ensure_kll_sketch_state
+
+        try:
+            ensure_kll_sketch_state(manifest)
+        except ValueError as e:
+            raise SystemExit(f"--record-sketches: {e}")
     if args.resume:
         pinned = manifest.doc.get("snapshot_id")
         if pinned and pinned != current_snapshot:

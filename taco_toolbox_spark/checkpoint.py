@@ -134,26 +134,42 @@ def record_sketch_state(
     df: DataFrame,
     value_expr: str,
     partition_col: str = "part",
-    n_centroids: int = 128,
 ) -> None:
-    """Persist per-partition t-digest centroid state into the manifest
-    (north_star: checkpoint records "sketch state"). Sketches are mergeable,
-    so a later run can (a) compare new partitions against stored baselines
-    and (b) merge stored partials into a global distribution without
-    rescanning finished partitions."""
-    from .checks.drift import sketch_by_partition
+    """Persist per-partition KLL quantile-sketch state into the manifest
+    (north_star: checkpoint records "sketch state"): the bytes of Spark's
+    ``kll_sketch_agg_double`` (base64, as :func:`record_distinct_state`
+    stores its HLL bytes) plus the exact count, min and max, all from one
+    grouped JVM aggregation. KLL sketches are mergeable, so a later run can
+    (a) compare new partitions against stored baselines and (b) merge
+    stored partials into a global distribution
+    (:func:`merged_quantiles_from_manifest`) without rescanning finished
+    partitions. NaN values are dropped like nulls."""
+    import base64
 
-    rows = sketch_by_partition(
-        df, value_expr, partition_col, n_centroids
-    ).collect()
+    v = F.nanvl(F.expr(value_expr).cast("double"), F.lit(None).cast("double"))
+    rows = (
+        df.select(
+            # partition columns read back from partitioned storage may be
+            # date/int-typed — the sketch key is always a string
+            F.col(partition_col).cast("string").alias("part"),
+            v.alias("v"),
+        )
+        .groupBy("part")
+        .agg(
+            F.kll_sketch_agg_double("v").alias("kll"),
+            F.count("v").alias("n"),
+            F.min("v").alias("vmin"),
+            F.max("v").alias("vmax"),
+        )
+        .collect()
+    )
     for r in rows:
         rec = manifest.doc["partitions"].setdefault(r["part"], {})
         rec.setdefault("sketch", {})[value_expr] = {
-            "means": [round(float(m), 6) for m in r["means"]],
-            "weights": [float(w) for w in r["weights"]],
+            "kll": base64.b64encode(bytes(r["kll"])).decode(),
             "n": int(r["n"]),
-            "vmin": float(r["vmin"]),
-            "vmax": float(r["vmax"]),
+            "vmin": float("nan") if r["vmin"] is None else float(r["vmin"]),
+            "vmax": float("nan") if r["vmax"] is None else float(r["vmax"]),
         }
 
 
@@ -233,6 +249,35 @@ def ensure_digest_params(
             f"with {params}"
         )
     manifest.doc["digest_params"] = params
+
+
+def ensure_kll_sketch_state(
+    manifest: CheckpointManifest, value_expr: str | None = None
+) -> None:
+    """Refuse quantile-sketch state that predates the KLL format — a
+    pure-metadata check, callable BEFORE any heavy work, like
+    :func:`ensure_digest_params`. Older runs stored t-digest centroid
+    lists (``means``/``weights``); they cannot merge with KLL bytes, and
+    skipping them would silently drop their partitions from every merged
+    quantile. ``value_expr`` limits the check to one expression; None
+    checks every stored expression."""
+    old = sorted(
+        part
+        for part, rec in manifest.doc["partitions"].items()
+        if any(
+            "kll" not in sk
+            for expr, sk in rec.get("sketch", {}).items()
+            if value_expr in (None, expr)
+        )
+    )
+    if old:
+        shown = ", ".join(old[:10]) + (" ..." if len(old) > 10 else "")
+        raise ValueError(
+            f"manifest holds t-digest centroid sketch state (means/weights) "
+            f"in {len(old)} partition(s): {shown}; sketch state is now KLL "
+            "and the formats do not merge — re-record those partitions "
+            "into a fresh manifest"
+        )
 
 
 def record_digest_state(
@@ -537,24 +582,36 @@ def merged_quantiles_from_manifest(
     manifest: CheckpointManifest,
     value_expr: str,
     probes,
-    n_centroids: int = 128,
 ) -> list[float]:
-    """Merge all stored per-partition sketches into global quantiles —
-    the partial→final pattern across *runs*, no data rescan."""
-    import numpy as np
+    """Merge all stored per-partition KLL sketches into global quantiles —
+    the partial→final pattern across *runs*, no data rescan. The merge and
+    the quantile probes run on the JVM (``kll_merge_agg_double``,
+    ``kll_sketch_get_quantile_double``) over a literal relation of the
+    stored bytes. Raises ValueError when any partition holds pre-KLL
+    centroid state for ``value_expr``."""
+    from pyspark.sql import SparkSession
 
-    from .checks.drift import merge_centroids, quantiles_from_centroids
+    from .schema import literal_frame
 
-    means_list, weights_list = [], []
-    for rec in manifest.doc["partitions"].values():
-        sk = rec.get("sketch", {}).get(value_expr)
-        if sk:
-            means_list.append(np.asarray(sk["means"]))
-            weights_list.append(np.asarray(sk["weights"]))
-    if not means_list:
+    ensure_kll_sketch_state(manifest, value_expr)
+    blobs = [
+        (sk["kll"],)
+        for rec in manifest.doc["partitions"].values()
+        if (sk := rec.get("sketch", {}).get(value_expr)) and sk["n"]
+    ]
+    if not blobs:
         return [float("nan")] * len(probes)
-    means, weights = merge_centroids(means_list, weights_list, n_centroids)
-    return quantiles_from_centroids(means, weights, probes).tolist()
+    merged = F.kll_merge_agg_double(F.unbase64("kll"))
+    q = (
+        literal_frame(SparkSession.active(), blobs, "kll string")
+        .agg(
+            F.kll_sketch_get_quantile_double(
+                merged, F.array(*[F.lit(float(p)) for p in probes])
+            ).alias("q")
+        )
+        .first()["q"]
+    )
+    return [float(x) for x in q]
 
 
 def run_resumable(

@@ -5,10 +5,11 @@ The reference approximates percentiles with a 100-bucket histogram per band
 merges per-partition summaries into global ones (min-of-mins / max-of-maxes,
 _tacollection.py:343-466). At 10^12 rows we need a *mergeable, bounded-size*
 sketch, so drift vs a stored baseline can be computed with a two-phase
-(treeAggregate-style) merge and the sketch state can live in the checkpoint
-manifest.
+(treeAggregate-style) merge. (The checkpoint manifest stores Spark's native
+KLL sketches instead: checkpoint.record_sketch_state.)
 
-Implementation: a simplified t-digest — equal-weight centroid compression.
+Implementation of the ``tdigest`` drift method: a simplified t-digest —
+equal-weight centroid compression.
   phase 1: salted partial sketches  groupBy(part, salt).applyInPandas(compress)
   phase 2: final merge              groupBy(part).applyInPandas(merge)
 The salt bounds the rows any single task must hold; centroids are ≤

@@ -1,42 +1,20 @@
 """Per-turn text equality against a clean reference copy.
 
 BASELINE input_hint: "per-row invariant vs the reference: per-turn text
-equality under stable (conv_id, turn_idx) ordering", computed through a
-vectorized pandas/Arrow UDF (no per-row Python). Reference analog: the
+equality under stable (conv_id, turn_idx) ordering". Reference analog: the
 extension row-count/consistency contract (tortilla/datamodel.py:342-374).
 
 Plan shape: equi-join on the key (Catalyst picks sort-merge or broadcast;
-AQE splits skewed keys), then one Arrow-batched comparison. The join is the
-only shuffle; the UDF is a pure map.
+AQE splits skewed keys), then one JVM filter on Spark's null-safe ``<=>``
+(NULL equals NULL, NULL differs from any value). The join is the only
+shuffle; the judgment is a codegen'd predicate, so the pass starts no
+Python workers.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-@F.pandas_udf(T.BooleanType())
-def _texts_equal_impl(a: pd.Series, b: pd.Series) -> pd.Series:
-    na_a, na_b = a.isna(), b.isna()
-    return (na_a & na_b) | (~na_a & ~na_b & (a == b))
-
-
-#: Vectorized NULL-safe equality: NULL == NULL is True, NULL vs value is
-#: False (matches a <=> comparison; kept as a pandas UDF per the
-#: input_hint's vectorized-UDF requirement and as the extension point for
-#: normalization — e.g. unicode NFC — without leaving Arrow batches).
-#:
-#: Marked non-deterministic ON PURPOSE (it is in fact deterministic): it
-#: forbids CombineFilters from collapsing the UDF filter into the JVM
-#: prefilter below it. Collapsed, ExtractPythonUDFs plants ArrowEvalPython
-#: UNDER the merged filter and the UDF evaluates on every joined row —
-#: measured 70s of a 106s validation pass at 16M turns, i.e. the prefilter
-#: silently dead. Non-deterministic, the prefilter stays a separate lower
-#: filter and only the ~0.1% sliver crosses into Python.
-texts_equal = _texts_equal_impl.asNondeterministic()
 
 
 def text_equality_violations(
@@ -56,7 +34,7 @@ def text_equality_violations(
     key join is exchange-free there, so carrying the text payload through it
     is FREE and the whole fingerprint dance (hash both sides, join slivers,
     re-scan both tables to fetch texts) collapses to ONE scan of each table
-    with an inline JVM inequality prefilter. Default False = the
+    judged by one inline JVM filter. Default False = the
     fingerprint plan below, which stays right when the join must shuffle
     (shuffling full text ~6x the bytes of a 9-byte fingerprint).
 
@@ -69,32 +47,17 @@ def text_equality_violations(
     0.1%-violation contract; an explicit hint because AQE's runtime
     conversion was not reliable for the semi-join shape), deduplicated on
     (keys, fingerprint) so duplicate-key rows keep the exact pair
-    multiplicity of a direct text join. The Arrow/pandas UDF judges only
-    the sliver (see texts_equal's non-determinism note). Equal hashes with
-    unequal texts (2^-64/pair) are the standard content-fingerprint trade.
+    multiplicity of a direct text join. The null-safe ``<=>`` filter then
+    judges only the sliver. Equal hashes with unequal texts (2^-64/pair)
+    are the standard content-fingerprint trade.
     """
     keys = list(key_cols)
     c = F.col(text_col)
-    if colocated:
-        joined = df.select(partition_col, *keys, text_col).join(
-            reference.select(
-                *keys,
-                c.alias("_ref_text"),
-                F.lit(True).alias("_ref_present"),
-            ),
-            keys,
-            "left",
-        )
-        # JVM prefilter: only the ~0.1% sliver (missing ref row or unequal
-        # text under null-safe <=>) ever reaches the Arrow batch; the UDF
-        # stays the semantic judge above it (see texts_equal's
-        # non-determinism note — the two filters must not merge)
-        sliver = joined.filter(
+
+    def judge(joined: DataFrame) -> DataFrame:
+        # the whole judgment: no reference row, or text unequal under <=>
+        bad = joined.filter(
             F.col("_ref_present").isNull() | ~c.eqNullSafe(F.col("_ref_text"))
-        )
-        eq = texts_equal(c, F.col("_ref_text"))
-        bad = sliver.filter(
-            F.col("_ref_present").isNull() | ~F.coalesce(eq, F.lit(False))
         )
         return bad.select(
             F.col(partition_col).alias("part"),
@@ -112,6 +75,19 @@ def text_equality_violations(
                 )
             )
             .alias("detail"),
+        )
+
+    if colocated:
+        return judge(
+            df.select(partition_col, *keys, text_col).join(
+                reference.select(
+                    *keys,
+                    c.alias("_ref_text"),
+                    F.lit(True).alias("_ref_present"),
+                ),
+                keys,
+                "left",
+            )
         )
     fp = F.xxhash64(F.coalesce(c, F.lit("")))
     left = df.select(
@@ -148,27 +124,8 @@ def text_equality_violations(
         )
         .dropDuplicates(keys + ["_rh"])
     )
-    both = sliver.join(F.broadcast(got), keys + ["_h"], "left").join(
-        F.broadcast(want), keys + ["_rh"], "left"
-    )
-    # the UDF remains the semantic judge on the sliver; rows it deems equal
-    # (e.g. under a normalizing override) are dropped
-    eq = texts_equal(F.col(text_col), F.col("_ref_text"))
-    bad = both.filter(
-        F.col("_ref_present").isNull() | ~F.coalesce(eq, F.lit(False))
-    )
-    return bad.select(
-        F.col(partition_col).alias("part"),
-        F.lit(check_id).alias("check_id"),
-        F.col(keys[0]).cast("string").alias("conv_id"),
-        F.col(keys[1]).cast("int").alias("turn_idx"),
-        F.when(F.col("_ref_present").isNull(), F.lit("no reference row"))
-        .otherwise(
-            F.format_string(
-                "text mismatch: got=%s want=%s",
-                F.substring(F.coalesce(F.col(text_col), F.lit("<null>")), 1, 60),
-                F.substring(F.coalesce(F.col("_ref_text"), F.lit("<null>")), 1, 60),
-            )
+    return judge(
+        sliver.join(F.broadcast(got), keys + ["_h"], "left").join(
+            F.broadcast(want), keys + ["_rh"], "left"
         )
-        .alias("detail"),
     )

@@ -22,7 +22,8 @@ Pass plan (the scale story — adding checks never adds scans):
   drift pass    two-phase salted sketch merge (checks/drift.py);
                 categorical drift = one grouped count + broadcast grid
                 joins, TV distance exact in integer arithmetic.
-  text pass     key join + vectorized pandas UDF (checks/text_equality.py).
+  text pass     key join + JVM null-safe <=> filter, no Python
+                (checks/text_equality.py).
 
 Verdict aggregation replaces the reference's typed-exception reports
 (/root/reference/tacotoolbox/_exceptions.py:19-171): per (partition, check)
@@ -109,11 +110,6 @@ class EngineConfig:
     drift_salt_buckets: int = 16
     drift_centroids: int = 128
     persist_violations: bool = False
-    #: pre-shuffle the input once by the group key and persist it, so the
-    #: window pass and every group aggregation consume ONE exchange instead
-    #: of re-shuffling per pass. Worth it whenever >1 shuffled pass runs;
-    #: at cluster scale pair with StorageLevel DISK_ONLY if memory-tight.
-    share_group_shuffle: bool = False
     #: fold uniqueness of (group, order) into the window pass: a duplicate
     #: key shows up as order == lag(order), so only flagged rows are
     #: aggregated — avoids shuffling every row by the full key.
@@ -144,16 +140,12 @@ class EngineConfig:
 class ValidationResult:
     verdicts: DataFrame  # (part, check_id, passed, n_violations)
     violations: DataFrame  # (part, check_id, conv_id, turn_idx, detail)
-    #: input persisted by share_group_shuffle (None otherwise)
-    cached_input: DataFrame | None = None
 
     def release(self) -> None:
-        """Unpersist everything this run cached (persist_violations,
-        share_group_shuffle) — call after the terminal action in long-lived
-        sessions so repeated runs don't accumulate executor storage."""
+        """Unpersist what this run cached (persist_violations) — call after
+        the terminal action in long-lived sessions so repeated runs don't
+        accumulate executor storage."""
         self.violations.unpersist()
-        if self.cached_input is not None:
-            self.cached_input.unpersist()
 
     def summary(self) -> dict:
         """Materialize the battery with ONE action and return headline
@@ -1005,11 +997,6 @@ def run_validation(
     cfg = cfg or EngineConfig()
     spark = df.sparkSession
 
-    cached_input = None
-    if cfg.share_group_shuffle:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        df = cached_input = df.repartition(n, cfg.group_col).persist()
-
     row_checks = [c for c in checks if isinstance(c, RowCheck)]
     mono_checks = [c for c in checks if isinstance(c, MonotoneCheck)]
     gap_checks = [c for c in checks if isinstance(c, GapCheck)]
@@ -1252,9 +1239,7 @@ def run_validation(
             (F.coalesce(F.col("n_violations"), F.lit(0)) == 0).alias("passed"),
         )
     )
-    return ValidationResult(
-        verdicts=verdicts, violations=violations, cached_input=cached_input
-    )
+    return ValidationResult(verdicts=verdicts, violations=violations)
 
 
 def sample_violations(violations: DataFrame, k: int = 10) -> DataFrame:

@@ -133,7 +133,6 @@ _ENGINE_KEYS = {
     "drift_salt_buckets",
     "drift_centroids",
     "persist_violations",
-    "share_group_shuffle",
     "uniqueness_via_window",
     "window_chunk_size",
     "concurrent_actions",

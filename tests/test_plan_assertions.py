@@ -53,8 +53,8 @@ def test_verdicts_plan_is_python_free(corpus):
 
 
 # ---------------------------------------------------------------------------
-# text equality: colocated fast path == fingerprint path, and both keep the
-# ArrowEvalPython judge ABOVE the JVM prefilter
+# text equality: colocated fast path == fingerprint path; the batch battery
+# plans no Python evaluation node
 # ---------------------------------------------------------------------------
 
 
@@ -111,18 +111,50 @@ def test_colocated_is_single_scan(te_inputs):
     assert fp_scans > co_scans
 
 
+#: physical nodes that run Python: scalar (Arrow or pickled) UDFs and
+#: grouped pandas functions
+PYTHON_EVAL_NODES = ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+
+
 @pytest.mark.parametrize("colocated", [False, True])
 def test_text_equality_python_judge_above_jvm_prefilter(te_inputs, colocated):
-    """texts_equal is non-deterministic ON PURPOSE so CombineFilters cannot
-    merge the UDF filter into the JVM prefilter (merged, ArrowEvalPython
-    lands under the filter and every joined row crosses into Python). Plans
-    print parents first: the UDF node must appear before (above) the
-    prefilter."""
+    """The judge that used to be a Python UDF above the JVM prefilter is now
+    the JVM's null-safe <=> itself: no Python evaluation node in the plan,
+    and the <=> judgment sits at the top. Colocated, the prefilter IS the
+    judgment (one <=> filter); on the fingerprint path it stays above the
+    xxhash64 prefilter, so only the sliver reaches it. Plans print parents
+    first."""
     left, right = te_inputs
     plan = _plan(text_equality_violations(left, right, colocated=colocated))
-    assert "ArrowEvalPython" in plan
-    prefilter_token = "<=>" if colocated else "xxhash64"
-    assert plan.index("ArrowEvalPython") < plan.index(prefilter_token)
+    assert not [n for n in PYTHON_EVAL_NODES if n in plan]
+    assert plan.count("<=>") == 1
+    if not colocated:
+        assert plan.index("<=>") < plan.index("xxhash64")
+
+
+def test_batch_battery_has_no_python_eval(te_inputs, corpus):
+    """The batch battery judges text equality with the JVM's null-safe
+    <=> and the verdict registry is a literal relation, so none of its
+    plans starts a Python worker (a pandas UDF costs seconds of worker
+    start-up for a handful of rows)."""
+    left, right = te_inputs
+    res = run_validation(
+        corpus.corrupted,
+        transcript_checks(reference=corpus.clean),
+        baseline=corpus.clean,
+    )
+    plans = {
+        "text_equality fingerprint": text_equality_violations(left, right),
+        "text_equality colocated": text_equality_violations(
+            left, right, colocated=True
+        ),
+        "battery violations": res.violations,
+        "battery verdicts": res.verdicts,
+    }
+    for name, df in plans.items():
+        plan = _plan(df)
+        found = [n for n in PYTHON_EVAL_NODES if n in plan]
+        assert not found, f"{name} plans {found}"
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,13 @@
 """Sketch state in the checkpoint manifest: persist, reload, merge."""
 
+import base64
+
 import numpy as np
 import pytest
 
 from taco_toolbox_spark.checkpoint import (
     CheckpointManifest,
+    ensure_kll_sketch_state,
     merged_quantiles_from_manifest,
     record_sketch_state,
 )
@@ -21,7 +24,7 @@ def test_sketch_roundtrip_and_merge(tmp_path, corpus, clean_pdf):
     m2 = CheckpointManifest.load_or_create(path, "r", "mem://c")
     some_part = next(iter(m2.doc["partitions"]))
     sk = m2.doc["partitions"][some_part]["sketch"]["length(text)"]
-    assert sk["n"] > 0 and len(sk["means"]) == len(sk["weights"])
+    assert sk["n"] > 0 and base64.b64decode(sk["kll"])
 
     q = merged_quantiles_from_manifest(m2, "length(text)", PROBES)
     exact = np.quantile(clean_pdf["text"].str.len().to_numpy(), PROBES)
@@ -32,6 +35,39 @@ def test_sketch_roundtrip_and_merge(tmp_path, corpus, clean_pdf):
         for rec in m2.doc["partitions"].values()
     )
     assert total == len(clean_pdf)
+
+
+def test_sketch_state_refuses_centroid_format(tmp_path, corpus):
+    """A manifest holding pre-KLL t-digest centroids (means/weights) is
+    rejected by name, alone or mixed with KLL partitions — never merged
+    around silently."""
+    m = CheckpointManifest.load_or_create(
+        str(tmp_path / "mk.json"), "r", "mem://c"
+    )
+    record_sketch_state(m, corpus.clean, "length(text)")
+    ensure_kll_sketch_state(m)  # all KLL: accepted
+    old = {"means": [1.0, 2.0], "weights": [3.0, 4.0], "n": 7,
+           "vmin": 1.0, "vmax": 2.0}
+
+    # mixed: one partition recorded by an older run
+    m.doc["partitions"]["1999-01-01"] = {"sketch": {"length(text)": old}}
+    for call in (
+        lambda: ensure_kll_sketch_state(m),
+        lambda: ensure_kll_sketch_state(m, "length(text)"),
+        lambda: merged_quantiles_from_manifest(m, "length(text)", PROBES),
+    ):
+        with pytest.raises(ValueError, match=r"centroid .*1999-01-01"):
+            call()
+    # other expressions' state does not block this one
+    ensure_kll_sketch_state(m, "other_expr")
+
+    # old only
+    m_old = CheckpointManifest.load_or_create(
+        str(tmp_path / "mo.json"), "r", "mem://c"
+    )
+    m_old.doc["partitions"]["p"] = {"sketch": {"length(text)": old}}
+    with pytest.raises(ValueError, match="centroid"):
+        merged_quantiles_from_manifest(m_old, "length(text)", PROBES)
 
 
 def test_distinct_sketch_merge_equals_whole_table(corpus, clean_pdf):

@@ -308,6 +308,43 @@ def test_record_sketches_flag(spark, corpus_dir, tmp_path):
     assert abs(est - exact) / exact < 0.05
 
 
+def test_resume_refuses_centroid_sketch_state(corpus_dir, tmp_path):
+    """--resume --record-sketches over a manifest whose sketch state is
+    pre-KLL t-digest centroids stops before the first batch, naming the
+    partitions, instead of writing KLL bytes beside them."""
+    out = tmp_path / "out_old_sk"
+    out.mkdir()
+    manifest_path = out / "manifest.json"
+    old = {"means": [5.0], "weights": [1.0], "n": 1, "vmin": 5.0, "vmax": 5.0}
+    manifest_path.write_text(
+        json.dumps(
+            {
+                "run_id": "old",
+                "input_path": f"{corpus_dir}/transcripts",
+                "snapshot_id": None,
+                "created_at": 0.0,
+                "partitions": {
+                    "1999-01-01": {
+                        "status": "done",
+                        "sketch": {"length(text)": old},
+                    }
+                },
+            }
+        )
+    )
+    with pytest.raises(SystemExit, match=r"--record-sketches: .*1999-01-01"):
+        validate_main(
+            [
+                "--input", f"{corpus_dir}/transcripts",
+                "--output", str(out),
+                "--resume",
+                "--record-sketches",
+            ],
+            stop_session=False,
+        )
+    assert not (out / "verdicts").exists()
+
+
 def test_validate_cli_role_grammar_and_cat_drift(spark, corpus_dir, tmp_path):
     """--role-grammar surfaces bad_role injections as transition
     violations; --cat-drift judges per-partition role distributions against
