@@ -47,13 +47,13 @@ def _stage_stream(
     table: str,
     suffix: str,
     build: Callable[[DataFrame], DataFrame] | None = None,
-) -> tuple[str, str]:
+) -> str:
     """Stage ``table`` under /tmp/spark_graft_stream/<suffix>_<tag> for the
     STREAMING queries (one shared copy per sf_dir), restaging whenever the
     SOURCE is newer than the staged copy — a cached stale copy would
     silently diverge from the oracle's fresh read of the source. ``build``
     transforms the frame before writing (filtered/derived stream corpora).
-    Returns (staged_path, tag) — the tag keys per-sf memory-sink names."""
+    The tag (a hash of ``sf_dir``) keeps one staged copy per scale factor."""
     import hashlib
     import os
 
@@ -71,7 +71,7 @@ def _stage_stream(
         if build is not None:
             df = build(df)
         df.write.mode("overwrite").parquet(staged)
-    return staged, tag
+    return staged
 
 
 # ---------------------------------------------------------------------------
@@ -1579,18 +1579,23 @@ def q_stream_transitions(spark, sf_dir):
     these counts ARE the live side of a transition-matrix TV comparison
     against a stored baseline."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_transition_smoke,
+        drain,
+        stream_transition_pairs,
     )
 
     # one file per user bucket: every sequence inside one micro-batch
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "events", "events_trans",
         build=lambda d: d.repartition(8, "user_id"),
     )
-    out = run_stream_transition_smoke(
-        spark, staged, seq_col="user_id", order_col=("ts", "event_id"),
-        state_col="event_type", query_name=f"q_strans_{tag}",
-        max_files_per_trigger=2,
+    out = drain(
+        spark,
+        staged,
+        lambda s: stream_transition_pairs(
+            s, "user_id", ("ts", "event_id"), "event_type"
+        ),
+        "update",
+        2,
     )
     return out.groupBy("from_state", "to_state").agg(
         F.count(F.lit(1)).alias("n")
@@ -1738,12 +1743,16 @@ def q_stream_sessionize(spark, sf_dir):
     DuckDB oracle computes in SQL. A structured-streaming operator held
     to the same rows+schema+hash gate as the batch queries."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_sessionize_smoke,
+        drain,
+        stream_sessionize,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events")
-    out = run_stream_sessionize_smoke(
-        spark, staged, query_name=f"q_sessions_{tag}"
+    staged = _stage_stream(spark, sf_dir, "events", "events")
+    out = drain(
+        spark,
+        staged,
+        lambda s: stream_sessionize(s, ("user_id",), "ts", "1800 seconds"),
+        "complete",
     )
     return out.select(
         "user_id",
@@ -1767,7 +1776,8 @@ def q_stream_dedup(spark, sf_dir):
     rows are dups by construction). WHICH raw duplicate survives is
     arrival-order dependent and deliberately not part of the contract."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_dedup_smoke,
+        drain,
+        stream_dedup,
     )
 
     def _with_planted_dups(docs):
@@ -1787,12 +1797,12 @@ def q_stream_dedup(spark, sf_dir):
         )
         return orig.unionByName(dups)
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "documents", "docs_dedup", build=_with_planted_dups
     )
-    out = run_stream_dedup_smoke(
-        spark, staged, query_name=f"q_sdedup_{tag}", watermark="24 hours",
-        max_files_per_trigger=4,
+    out = drain(
+        spark, staged, lambda s: stream_dedup(s, watermark="24 hours"),
+        "append", 4,
     )
     return out.select(
         F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))).alias(
@@ -1818,18 +1828,23 @@ def q_stream_minhash_cands(spark, sf_dir):
     permutation minima, band-concat buckets, bucket cap, pairs
     id_a < id_b)."""
     from taco_toolbox_spark.streaming.validate_stream import (
+        drain,
         minhash_bucket_store,
-        run_stream_minhash_smoke,
+        stream_minhash_candidates,
     )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "documents", "docs_minhash",
         build=lambda d: d.select("doc_id", "text"),
     )
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     store = minhash_bucket_store(docs, hash_fn="md5")
-    out = run_stream_minhash_smoke(
-        spark, staged, store, query_name=f"q_sminhash_{tag}", hash_fn="md5"
+    out = drain(
+        spark,
+        staged,
+        lambda s: stream_minhash_candidates(s, store, hash_fn="md5"),
+        "append",
+        4,
     )
     return out.select("id_a", "id_b").distinct()
 
@@ -1940,10 +1955,11 @@ def q_stream_incr_dedup(spark, sf_dir):
     from taco_toolbox_spark.dedup.incremental import exact_keys
     from taco_toolbox_spark.sketches import bloom_pack_words, bloom_positions
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_incremental_smoke,
+        drain,
+        stream_incremental_exact,
     )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "documents", "docs_incr",
         build=lambda d: d.select("doc_id", "text").filter(
             F.col("doc_id") % 3 == 0
@@ -1955,10 +1971,15 @@ def q_stream_incr_dedup(spark, sf_dir):
     words = bloom_pack_words(
         bloom_positions(ex_keys, ["_k"], 4096, 4, hash_fn="md5"), 4096
     )
-    out = run_stream_incremental_smoke(
-        spark, staged, ex_keys, query_name=f"q_sincr_{tag}",
-        max_files_per_trigger=4, portable_key=True,
-        bloom_words=words, bloom_num_hashes=4, bloom_hash_fn="md5",
+    out = drain(
+        spark,
+        staged,
+        lambda s: stream_incremental_exact(
+            s, ex_keys, portable_key=True, bloom_words=words,
+            bloom_num_hashes=4, bloom_hash_fn="md5",
+        ),
+        "append",
+        4,
     )
     return out.select(F.col("id").alias("doc_id"), "verdict")
 
@@ -2326,17 +2347,19 @@ def q_stream_digest(spark, sf_dir):
     The ingest-certification contract held to the same
     rows+schema+hash gate as every batch query."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_digest_smoke,
+        drain,
+        stream_content_digest,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "documents", "docs_digest")
-    return run_stream_digest_smoke(
+    staged = _stage_stream(spark, sf_dir, "documents", "docs_digest")
+    return drain(
         spark,
         staged,
-        ["doc_id", "text", "lang", "source"],
-        ["source"],
-        query_name=f"q_sdigest_{tag}",
-        hash_fn="md5",
+        lambda s: stream_content_digest(
+            s, ["doc_id", "text", "lang", "source"], ["source"], hash_fn="md5"
+        ),
+        "complete",
+        4,
     )
 
 
@@ -2351,18 +2374,20 @@ def q_stream_digest_windowed(spark, sf_dir):
     (string/int) renderings, and float-to-string formats are the one
     place engines legitimately disagree."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_digest_smoke,
+        drain,
+        stream_content_digest,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events_digest")
-    return run_stream_digest_smoke(
+    staged = _stage_stream(spark, sf_dir, "events", "events_digest")
+    return drain(
         spark,
         staged,
-        ["event_id", "user_id", "props"],
-        ["event_type"],
-        query_name=f"q_swdigest_{tag}",
-        hash_fn="md5",
-        window="1 day",
+        lambda s: stream_content_digest(
+            s, ["event_id", "user_id", "props"], ["event_type"],
+            hash_fn="md5", window="1 day",
+        ),
+        "complete",
+        4,
     )
 
 
@@ -2742,21 +2767,21 @@ def q_stream_burst(spark, sf_dir):
     searchsorted calls, RANGE-frame same-second-peer semantics). The
     oracle is the batch RANGE window in SQL — identical rows."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_rate_smoke,
+        drain,
+        stream_rate_violations,
     )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "events", "events_burst",
         build=lambda df: df.repartition(8, "user_id"),
     )
-    return run_stream_rate_smoke(
+    return drain(
         spark,
         staged,
-        "user_id",
-        "ts",
-        query_name=f"q_sburst_{tag}",
-        seconds=86400,
-        max_events=8,
+        lambda s: stream_rate_violations(
+            s, "user_id", "ts", seconds=86400, max_events=8
+        ),
+        "update",
     ).select(F.col("user_id").cast("long").alias("user_id"), "ts", "n_trailing")
 
 
@@ -2771,21 +2796,21 @@ def q_stream_runs(spark, sf_dir):
     pandas sort/shift/cumulative-max per micro-batch). The oracle is the
     batch gaps-and-islands identity in SQL — identical rows."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_runs_smoke,
+        drain,
+        stream_run_violations,
     )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "events", "events_runs",
         build=lambda df: df.repartition(8, "user_id"),
     )
-    return run_stream_runs_smoke(
+    return drain(
         spark,
         staged,
-        "user_id",
-        ["ts", "event_id"],
-        "event_type",
-        query_name=f"q_sruns_{tag}",
-        max_run=2,
+        lambda s: stream_run_violations(
+            s, "user_id", ["ts", "event_id"], "event_type", max_run=2
+        ),
+        "update",
     ).select(
         F.col("user_id").cast("long").alias("user_id"),
         "ts",
@@ -2809,22 +2834,22 @@ def q_stream_pingpong(spark, sf_dir):
     micro-batch). The oracle is the batch island identity in SQL —
     identical rows."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_periodic_smoke,
+        drain,
+        stream_periodic_violations,
     )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "events", "events_pingpong",
         build=lambda df: df.repartition(8, "user_id"),
     )
-    return run_stream_periodic_smoke(
+    return drain(
         spark,
         staged,
-        "user_id",
-        ["ts", "event_id"],
-        "event_type",
-        query_name=f"q_spingpong_{tag}",
-        period=2,
-        max_reps=2,
+        lambda s: stream_periodic_violations(
+            s, "user_id", ["ts", "event_id"], "event_type",
+            period=2, max_reps=2,
+        ),
+        "update",
     ).select(
         F.col("user_id").cast("long").alias("user_id"),
         "ts",
@@ -2847,19 +2872,20 @@ def q_stream_cat_drift(spark, sf_dir):
     (streaming/validate_stream.py:stream_categorical_tv)."""
     from taco_toolbox_spark.checks.drift import categorical_counts
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cat_drift_smoke,
+        drain,
+        stream_categorical_tv,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events_catdrift")
+    staged = _stage_stream(spark, sf_dir, "events", "events_catdrift")
     base = categorical_counts(spark.read.parquet(staged), "event_type")
-    return run_stream_cat_drift_smoke(
+    return drain(
         spark,
         staged,
-        "event_type",
-        base,
-        query_name=f"q_scatdrift_{tag}",
-        window="1 day",
-        watermark="2 days",
+        lambda s: stream_categorical_tv(
+            s, "event_type", base, window="1 day", watermark="2 days"
+        ),
+        "complete",
+        4,
     ).select("window_start", "n_win", "tv_num", "tv")
 
 
@@ -2876,23 +2902,23 @@ def q_stream_cond_drift(spark, sf_dir):
     (streaming/validate_stream.py:stream_conditional_tv)."""
     from taco_toolbox_spark.checks.drift import conditional_counts
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cond_drift_smoke,
+        drain,
+        stream_conditional_tv,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events_conddrift")
+    staged = _stage_stream(spark, sf_dir, "events", "events_conddrift")
     bucket = "CAST(LEAST(CAST(FLOOR(value / 100) AS INT), 4) AS STRING)"
     base = conditional_counts(
         spark.read.parquet(staged), "event_type", bucket
     )
-    return run_stream_cond_drift_smoke(
+    return drain(
         spark,
         staged,
-        "event_type",
-        bucket,
-        base,
-        query_name=f"q_sconddrift_{tag}",
-        window="1 day",
-        watermark="2 days",
+        lambda s: stream_conditional_tv(
+            s, "event_type", bucket, base, window="1 day", watermark="2 days"
+        ),
+        "complete",
+        4,
     ).select("window_start", "cond", "n_win", "n_base", "tv_num", "tv")
 
 
@@ -2909,21 +2935,21 @@ def q_stream_corr_drift(spark, sf_dir):
     batch<->stream matrix for the numeric-RELATIONSHIP drift member
     (streaming/validate_stream.py:stream_correlation_drift)."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_corr_drift_smoke,
+        drain,
+        stream_correlation_drift,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events_corrdrift")
+    staged = _stage_stream(spark, sf_dir, "events", "events_corrdrift")
     x = "CAST(FLOOR(CAST(CAST(ts AS TIMESTAMP) AS DOUBLE)) AS BIGINT) % 86400"
     y = "CAST(ROUND(value * 1000) AS BIGINT)"
-    return run_stream_corr_drift_smoke(
+    return drain(
         spark,
         staged,
-        x,
-        y,
-        0.0,
-        query_name=f"q_scorrdrift_{tag}",
-        window="1 day",
-        watermark="2 days",
+        lambda s: stream_correlation_drift(
+            s, x, y, 0.0, window="1 day", watermark="2 days"
+        ),
+        "complete",
+        4,
     ).select("window_start", "n", "corr", "corr_base", "delta")
 
 
@@ -2940,8 +2966,12 @@ def q_stream_emb_drift(spark, sf_dir):
     Completes the batch<->stream matrix for the embedding drift member
     (streaming/validate_stream.py:stream_embedding_drift)."""
     from taco_toolbox_spark.checks.drift import embedding_centroid_sums
+    from taco_toolbox_spark.streaming.validate_stream import (
+        drain,
+        stream_embedding_drift,
+    )
 
-    staged, tag = _stage_stream(
+    staged = _stage_stream(
         spark, sf_dir, "embeddings", "embeddings_embdrift"
     )
     ts_expr = (
@@ -2956,31 +2986,16 @@ def q_stream_emb_drift(spark, sf_dir):
         .agg(F.sum("s").alias("g"))
         .collect()
     }
-    stream = (
-        spark.readStream.schema(spark.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(staged)
-        .withColumn("ts", F.expr(ts_expr))
-    )
-    from taco_toolbox_spark.streaming.validate_stream import (
-        stream_embedding_drift,
-    )
-
-    out = stream_embedding_drift(
-        stream, "embedding", base, window="1 day", watermark="2 days"
-    )
-    qname = f"q_sembdrift_{tag}"
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(qname)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {qname}").select(
+    return drain(
+        spark,
+        staged,
+        lambda s: stream_embedding_drift(
+            s.withColumn("ts", F.expr(ts_expr)), "embedding", base,
+            window="1 day", watermark="2 days",
+        ),
+        "complete",
+        4,
+    ).select(
         "window_start", "n_vecs", "cosine", "drift"
     )
 
@@ -3002,18 +3017,23 @@ def q_stream_health(spark, sf_dir):
     needs the full key set as state (the stream offers the HLL
     approximation, excluded from the value oracle by construction)."""
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_health_smoke,
+        drain,
+        stream_health,
+        stream_health_baseline,
     )
 
-    staged, tag = _stage_stream(spark, sf_dir, "events", "events")
-    return run_stream_health_smoke(
+    staged = _stage_stream(spark, sf_dir, "events", "events")
+    valid = "CASE WHEN event_type <> 'purchase' THEN 1 END"
+    baseline = stream_health_baseline(spark.read.parquet(staged), valid)
+    return drain(
         spark,
         staged,
-        query_name=f"q_shealth_{tag}",
-        valid_expr="CASE WHEN event_type <> 'purchase' THEN 1 END",
-        tol=0.02,
-        window="1 day",
-        watermark="2 days",
+        lambda s: stream_health(
+            s, window="1 day", watermark="2 days", valid_expr=valid,
+            tol=0.02, **baseline,
+        ),
+        "complete",
+        4,
     ).select(
         "window_start",
         "n",

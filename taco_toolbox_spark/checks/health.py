@@ -246,68 +246,6 @@ def cardinality_anomaly(
     return band.select(*cols)
 
 
-def _health_violation_rows(
-    flagged: DataFrame, check_id: str, detail: Column
-) -> DataFrame:
-    """Partition-grain violation rows in the engine schema (conv_id and
-    turn_idx NULL — the whole partition is the offender, same contract as
-    the drift family)."""
-    return flagged.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        detail.cast("string").alias("detail"),
-    )
-
-
-def volume_anomaly_violations(
-    band: DataFrame, check_id: str, k: float
-) -> DataFrame:
-    """Violation rows from a :func:`volume_anomaly` frame."""
-    return _health_violation_rows(
-        band.filter(F.col("is_anomaly")),
-        check_id,
-        F.format_string(
-            f"partition_rows=%s outside median±{k}·MAD (med=%s mad=%s)",
-            F.col("n").cast("string"),
-            F.col("med").cast("string"),
-            F.col("mad").cast("string"),
-        ),
-    )
-
-
-def completeness_drift_violations(
-    frame: DataFrame, check_id: str, tol: float
-) -> DataFrame:
-    """Violation rows from a :func:`completeness_drift` frame."""
-    return _health_violation_rows(
-        frame.filter(F.col("is_drift")),
-        check_id,
-        F.format_string(
-            f"null_frac=%s vs baseline=%s (|delta| > {tol})",
-            F.round("null_frac", 6).cast("string"),
-            F.round("base_frac", 6).cast("string"),
-        ),
-    )
-
-
-def cardinality_anomaly_violations(
-    band: DataFrame, check_id: str, k: float
-) -> DataFrame:
-    """Violation rows from a :func:`cardinality_anomaly` frame."""
-    return _health_violation_rows(
-        band.filter(F.col("is_anomaly")),
-        check_id,
-        F.format_string(
-            f"n_distinct=%s outside median±{k}·MAD (med=%s mad=%s)",
-            F.col("n_distinct").cast("string"),
-            F.col("med").cast("string"),
-            F.col("mad").cast("string"),
-        ),
-    )
-
-
 def band_from_history(
     history: DataFrame, metric_col: str, k: float
 ) -> DataFrame:

@@ -499,8 +499,3 @@ def consolidate(
         tagged.append(d.withColumn("source_file", F.lit(name)))
     return align_union(tagged)
 
-
-def read_with_provenance(spark, path: str) -> DataFrame:
-    """S7: scan with per-row source-file provenance."""
-    df = spark.read.parquet(path)
-    return df.withColumn("source_file", F.input_file_name())

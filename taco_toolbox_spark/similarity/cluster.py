@@ -36,24 +36,6 @@ from pyspark.sql import functions as F
 CENTROID_SCALE = 1_000_000_000.0
 
 
-def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
-    """Sequential float64 fold of the squared euclidean distance between a
-    vector column and one literal centroid (deterministic order)."""
-    # single array literal (one py4j call) instead of dim individual
-    # F.lit calls wrapped in F.array — identical values/type, ~8x cheaper
-    # plan construction (the fit builds this expression every round)
-    c = F.lit([float(x) for x in centroid])
-    return F.aggregate(
-        F.zip_with(
-            vec_col,
-            c,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def kmeans_assign(
     df: DataFrame,
     centroids: list[list[float]],

@@ -4,12 +4,19 @@ The reference is batch-only (SURVEY.md §1.3) — streaming is the Spark-first
 extension surface: the SAME declarative RowChecks compile onto a stream
 (stateless projection), with watermarked windowed verdict counts. Ordering
 checks (monotone ts) need per-conversation state → applyInPandasWithState
-(stateful path, validate_ordering_stream).
+(stateful path, transcript_violations_stateful).
+
+Every operator here is a builder ``stream_df -> DataFrame``. ``drain`` is
+the one bounded driver: it runs any builder over a parquet directory into
+a memory sink and returns the rows (tests, oracles). Production runs use
+their own sinks and checkpoints (``run_durable_battery``,
+``jobs/stream_validate.py``).
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+import uuid
+from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -17,32 +24,54 @@ from pyspark.sql import functions as F
 from ..checks.base import RowCheck
 
 
-def _smoke_state_parallelism(fn):
-    """Decorator for the bounded smoke drivers: run the streaming query
-    with STATE partitions sized to the session's default parallelism
-    instead of the session's batch-join shuffle sizing, restoring the
-    conf afterwards. Stateful operators create (and commit files for)
-    one state store per shuffle partition per micro-batch; a bounded
-    smoke run over one staged directory pays that per-partition overhead
-    without any data to spread (measured 3.2s -> 1.4s per smoke at
-    local[32] with the bench's 4x-cores batch sizing). The target scales
-    with the cluster (defaultParallelism), not a constant; values are
+def drain(
+    spark,
+    parquet_dir: str,
+    build: Callable[[DataFrame], DataFrame],
+    mode: str,
+    max_files_per_trigger: int = 8,
+) -> DataFrame:
+    """Stream a bounded parquet dir through ``build`` and return what it
+    emitted: ``build(stream)`` is written in output ``mode`` to a memory
+    sink, every available file is drained in ``maxFilesPerTrigger``
+    micro-batches (``processAllAvailable``), and the sink's rows come back
+    as ``SELECT *``. Emission can depend on the batch split (append-mode
+    per-batch emitters), so callers pin ``max_files_per_trigger``.
+
+    For the run, STATE partitions are sized to the cluster's default
+    parallelism instead of the session's batch-join shuffle sizing, and
+    the conf is restored afterwards. Stateful operators create (and commit
+    files for) one state store per shuffle partition per micro-batch; a
+    bounded run over one staged directory pays that per-partition
+    overhead without any data to spread (measured 3.2s -> 1.4s per run at
+    local[32] with the bench's 4x-cores batch sizing). Values are
     partition-count-independent, so results are unchanged. Production
     streams with large key spaces should size shuffle partitions to
-    steady-state key cardinality instead of using this wrapper."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark, *args, **kwargs):
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    steady-state key cardinality instead."""
+    name = f"drain_{uuid.uuid4().hex}"
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        stream = (
+            spark.readStream.schema(spark.read.parquet(parquet_dir).schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(parquet_dir)
+        )
+        q = (
+            build(stream)
+            .writeStream.outputMode(mode)
+            .format("memory")
+            .queryName(name)
+            .start()
+        )
         try:
-            return fn(spark, *args, **kwargs)
+            q.processAllAvailable()
         finally:
-            spark.conf.set(key, old)
-
-    return wrapper
+            q.stop()
+    finally:
+        spark.conf.set(key, old)
+    return spark.sql(f"SELECT * FROM {name}")
 
 
 def stream_violations(
@@ -499,49 +528,6 @@ def stateful_windowed_verdicts(
     )
 
 
-def ordering_violations_stateful(
-    stream_df: DataFrame,
-    group_col: str = "conv_id",
-    order_col: str = "turn_idx",
-    ts_col: str = "ts",
-    check_id: str = "ts_monotone",
-) -> DataFrame:
-    """Monotone-ts-only stateful stream (kept as the minimal example; the
-    full battery is transcript_violations_stateful)."""
-    return transcript_violations_stateful(
-        stream_df,
-        group_col,
-        order_col,
-        ts_col,
-        check_ids=("ts_monotone",),
-    ).drop("passed", "n_seen")
-
-
-@_smoke_state_parallelism
-def run_ordering_smoke(
-    spark, parquet_dir: str, query_name: str = "stream_ordering"
-):
-    """Drive the stateful ordering check over a bounded parquet dir."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(parquet_dir)
-    )
-    out = ordering_violations_stateful(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_text_equality(
     stream_df: DataFrame,
     reference: DataFrame,
@@ -652,75 +638,6 @@ def run_durable_battery(
         .start()
     )
     q.awaitTermination()
-
-
-@_smoke_state_parallelism
-def run_battery_smoke(
-    spark,
-    parquet_dir: str,
-    query_name: str = "stream_battery",
-    max_files_per_trigger: int = 8,
-    role_col: str | None = None,
-    max_gap_s: float | None = None,
-    **kwargs,
-):
-    """Drive the full stateful battery (monotone/uniqueness/contiguity,
-    plus role grammar / gap bound when requested; extra kwargs — e.g. a
-    mined ``allowed_pairs``/``first_values`` grammar — pass through) over
-    a bounded parquet dir with the memory sink."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = transcript_violations_stateful(
-        stream, role_col=role_col, max_gap_s=max_gap_s, **kwargs
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-@_smoke_state_parallelism
-def run_memory_smoke(
-    spark,
-    parquet_dir: str,
-    checks: list[RowCheck],
-    query_name: str = "stream_verdicts",
-):
-    """Drive a bounded parquet directory through the streaming pipeline with
-    the memory sink (synchronous processAllAvailable) — the batch-equivalent
-    smoke path from the PySpark streaming guide."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(parquet_dir)
-    )
-    v = stream_violations(stream, checks)
-    out = windowed_verdicts(v)
-    # complete mode: append would hold back unfinalized windows on bounded
-    # input (the watermark only advances with new data)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_dedup(
@@ -874,41 +791,6 @@ def fd_violations_stateful(
     )
 
 
-@_smoke_state_parallelism
-def run_stream_fd_smoke(
-    spark,
-    parquet_dir: str,
-    determinant: list[str],
-    dependent: list[str],
-    query_name: str = "stream_fd",
-    skip_null_determinant: bool = False,
-    max_files_per_trigger: int = 8,
-):
-    """Drive fd_violations_stateful over a bounded parquet dir with the
-    memory sink (update mode — each violating determinant emits once)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = fd_violations_stateful(
-        stream, determinant, dependent,
-        skip_null_determinant=skip_null_determinant,
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def _event_time(stream_df: DataFrame, ts_col: str) -> DataFrame:
     """Watermarks demand TIMESTAMP, but parquet sources yield
     TIMESTAMP_NTZ — re-interpret in the session timezone (UTC here,
@@ -918,37 +800,6 @@ def _event_time(stream_df: DataFrame, ts_col: str) -> DataFrame:
             ts_col, F.col(ts_col).cast("timestamp")
         )
     return stream_df
-
-
-@_smoke_state_parallelism
-def run_stream_dedup_smoke(
-    spark,
-    parquet_dir: str,
-    query_name: str = "stream_dedup",
-    watermark: str = "1 hour",
-    max_files_per_trigger: int = 8,
-):
-    """Drive stream_dedup over a bounded parquet dir with the memory
-    sink (append mode — dropDuplicatesWithinWatermark emits each survivor
-    exactly once)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_dedup(stream, watermark=watermark)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_sessionize(
@@ -982,39 +833,6 @@ def stream_sessionize(
             "n_events",
         )
     )
-
-
-@_smoke_state_parallelism
-def run_stream_sessionize_smoke(
-    spark,
-    parquet_dir: str,
-    key_cols: tuple[str, ...] = ("user_id",),
-    ts_col: str = "ts",
-    gap: str = "1800 seconds",
-    query_name: str = "stream_sessions",
-    max_files_per_trigger: int = 8,
-):
-    """Drive stream_sessionize over a bounded parquet dir with the memory
-    sink in complete mode (bounded input never advances the watermark past
-    the final sessions, so append mode would withhold them)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_sessionize(stream, key_cols, ts_col, gap)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def minhash_bucket_store(
@@ -1173,70 +991,6 @@ def stream_cms_counters(
     )
 
 
-@_smoke_state_parallelism
-def run_stream_cms_smoke(
-    spark,
-    parquet_dir: str,
-    key_cols: list[str],
-    query_name: str = "stream_cms",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the unwindowed running sketch over a bounded parquet dir in
-    complete mode (the counters frame is ≤ depth·width rows, so complete
-    re-emission is cheap at any stream length)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_cms_counters(stream, key_cols, **kwargs)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-@_smoke_state_parallelism
-def run_stream_minhash_smoke(
-    spark,
-    parquet_dir: str,
-    store: DataFrame,
-    query_name: str = "stream_minhash",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive stream_minhash_candidates over a bounded parquet dir with
-    the memory sink (append mode — each micro-batch's collisions emit
-    once; cross-batch pair dedup is the consumer's, see operator doc)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_minhash_candidates(stream, store, **kwargs)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_content_digest(
     stream_df: DataFrame,
     content_cols: list[str],
@@ -1287,39 +1041,6 @@ def stream_content_digest(
             "sum_d",
         )
     )
-
-
-@_smoke_state_parallelism
-def run_stream_digest_smoke(
-    spark,
-    parquet_dir: str,
-    content_cols: list[str],
-    group_cols: list[str] | None = None,
-    query_name: str = "stream_digest",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the running digest over a bounded parquet dir in complete
-    mode (the digest frame is group-cardinality-sized, so complete
-    re-emission is cheap at any stream length)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_content_digest(stream, content_cols, group_cols, **kwargs)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_incremental_exact(
@@ -1385,38 +1106,6 @@ def stream_incremental_exact(
     )
 
 
-@_smoke_state_parallelism
-def run_stream_incremental_smoke(
-    spark,
-    parquet_dir: str,
-    existing_keys: DataFrame,
-    query_name: str = "stream_incr",
-    max_files_per_trigger: int = 8,
-    **kwargs,
-):
-    """Drive stream_incremental_exact over a bounded parquet dir with the
-    memory sink (append mode — the operator is stateless, every row emits
-    exactly once with its verdict)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_incremental_exact(stream, existing_keys, **kwargs)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_transition_pairs(
     stream_df: DataFrame,
     seq_col: str = "conv_id",
@@ -1452,7 +1141,7 @@ def stream_transition_pairs(
     - Cross-batch transitions are exact when each sequence's rows arrive
       in order across micro-batches (the transcript-ingestion contract,
       same as ts_monotone above) — guaranteed unconditionally when each
-      sequence is confined to one source file, the smoke's staging. A
+      sequence is confined to one source file, the oracle's staging. A
       late-arriving lower turn emits a pair against the newest state, not
       its in-order neighbor.
 
@@ -1547,45 +1236,6 @@ def stream_transition_pairs(
         outputMode=output_mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-@_smoke_state_parallelism
-def run_stream_transition_smoke(
-    spark,
-    parquet_dir: str,
-    seq_col: str = "conv_id",
-    order_col: str | Sequence[str] = "turn_idx",
-    state_col: str = "role",
-    query_name: str = "stream_transitions",
-    max_files_per_trigger: int = 8,
-    **kwargs,
-):
-    """Drive stream_transition_pairs over a bounded parquet dir with the
-    memory sink (update mode). Stage the dir with each sequence confined
-    to ONE file (e.g. ``df.repartition(n, seq_col).write``) and the
-    emitted pair multiset is exactly the batch builder's, regardless of
-    file arrival order — each sequence then lives inside a single
-    micro-batch's vectorized sort."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_transition_pairs(
-        stream, seq_col, order_col, state_col, **kwargs
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_categorical_tv(
@@ -1692,41 +1342,6 @@ def stream_categorical_tv(
             (F.col("tv") <= F.lit(float(threshold))).alias("passed"),
         )
     return out
-
-
-@_smoke_state_parallelism
-def run_stream_cat_drift_smoke(
-    spark,
-    parquet_dir: str,
-    cat_col: str,
-    baseline_counts: dict[str, int],
-    query_name: str = "stream_cat_drift",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the streaming categorical TV over a bounded parquet dir in
-    complete mode (the drift frame is one row per open window — tiny — so
-    complete re-emission is cheap and every window is visible without
-    waiting for watermark closure; production unbounded runs use append
-    mode and let eviction finalize windows)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_categorical_tv(stream, cat_col, baseline_counts, **kwargs)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_conditional_tv(
@@ -1858,41 +1473,6 @@ def stream_conditional_tv(
             ).alias("passed"),
         )
     return out
-
-
-@_smoke_state_parallelism
-def run_stream_cond_drift_smoke(
-    spark,
-    parquet_dir: str,
-    cond_expr: str,
-    cat_expr: str,
-    baseline_counts: dict,
-    query_name: str = "stream_cond_drift",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the streaming conditional TV over a bounded parquet dir in
-    complete mode (one row per open (window, cond) — tiny)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_conditional_tv(
-        stream, cond_expr, cat_expr, baseline_counts, **kwargs
-    )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_correlation_drift(
@@ -2098,73 +1678,6 @@ def stream_embedding_drift(
     return out
 
 
-@_smoke_state_parallelism
-def run_stream_embedding_drift_smoke(
-    spark,
-    parquet_dir: str,
-    vec_col: str,
-    baseline_sums: dict[int, int],
-    query_name: str = "stream_embedding_drift",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the streaming embedding drift over a bounded parquet dir in
-    complete mode (one row per open window — tiny)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_embedding_drift(stream, vec_col, baseline_sums, **kwargs)
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-@_smoke_state_parallelism
-def run_stream_corr_drift_smoke(
-    spark,
-    parquet_dir: str,
-    x_expr: str,
-    y_expr: str,
-    baseline_corr: float,
-    query_name: str = "stream_corr_drift",
-    max_files_per_trigger: int = 4,
-    **kwargs,
-):
-    """Drive the streaming correlation drift over a bounded parquet dir
-    in complete mode (one row per open window — tiny)."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_correlation_drift(
-        stream, x_expr, y_expr, baseline_corr, **kwargs
-    )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_health(
     stream_df: DataFrame,
     ts_col: str = "ts",
@@ -2286,63 +1799,28 @@ def stream_health(
     return out
 
 
-@_smoke_state_parallelism
-def run_stream_health_smoke(
-    spark,
-    parquet_dir: str,
-    query_name: str = "stream_health",
-    max_files_per_trigger: int = 4,
-    part_fmt: str = "yyyy-MM-dd",
-    valid_expr: str | None = None,
-    tol: float = 0.05,
-    **kwargs,
-):
-    """Drive the streaming health check over a bounded parquet dir in
-    complete mode (one row per open window — tiny). Self-contained the
-    way a real deployment is: the band and baseline are computed by the
-    BATCH operators on the static read of the same dir (the
-    batch-computes / stream-consumes contract), then passed as
-    literals."""
+def stream_health_baseline(
+    static: DataFrame, valid_expr: str | None = None
+) -> dict:
+    """The batch half of the batch-computes / stream-consumes contract of
+    :func:`stream_health`: the BATCH ``volume_anomaly`` med/MAD band and
+    (when ``valid_expr`` is set) the ``completeness_drift`` corpus
+    fraction over ``static`` partitioned by day of ``ts`` (the default
+    1-day window), returned as ``stream_health`` keyword literals
+    (``volume_band``, ``baseline_frac``)."""
     from ..checks.health import completeness_drift, volume_anomaly
 
-    static = spark.read.parquet(parquet_dir)
-    ts_col = kwargs.get("ts_col", "ts")
-    part = F.date_format(ts_col, part_fmt)
-    band_row = (
-        volume_anomaly(static, part).select("med", "mad").limit(1).first()
-    )
+    part = F.date_format("ts", "yyyy-MM-dd")
+    band = volume_anomaly(static, part).select("med", "mad").limit(1).first()
     base_frac = None
     if valid_expr is not None:
         base_frac = (
-            completeness_drift(static, part, F.expr(valid_expr), tol)
+            completeness_drift(static, part, F.expr(valid_expr), 0.0)
             .select("base_frac")
             .limit(1)
             .first()["base_frac"]
         )
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    out = stream_health(
-        stream,
-        volume_band=(band_row["med"], band_row["mad"]),
-        valid_expr=valid_expr,
-        baseline_frac=base_frac,
-        tol=tol,
-        **kwargs,
-    )
-    q = (
-        out.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
+    return {"volume_band": (band["med"], band["mad"]), "baseline_frac": base_frac}
 
 
 def stream_rate_violations(
@@ -2458,42 +1936,6 @@ def stream_rate_violations(
     )
 
 
-@_smoke_state_parallelism
-def run_stream_rate_smoke(
-    spark,
-    parquet_dir: str,
-    key_col: str,
-    ts_col: str = "ts",
-    query_name: str = "stream_rate",
-    max_files_per_trigger: int = 8,
-    **kwargs,
-):
-    """Drive stream_rate_violations over a bounded parquet dir (update
-    mode, memory sink). Stage with each key confined to ONE file
-    (``df.repartition(n, key_col).write``) and the violation set is
-    exactly the batch burst_violations set regardless of file arrival
-    order."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    mode = kwargs.setdefault("output_mode", "update")
-    out = stream_rate_violations(stream, key_col, ts_col, **kwargs)
-    q = (
-        out.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
 def stream_run_violations(
     stream_df: DataFrame,
     key_col: str = "conv_id",
@@ -2529,7 +1971,7 @@ def stream_run_violations(
     Boundary semantics vs batch, stated honestly: positions are exact
     when each key's rows arrive in ``order_cols`` order across
     micro-batches — guaranteed unconditionally when each key is
-    confined to one source file (the smoke's staging). A late row
+    confined to one source file (the oracle's staging). A late row
     restarts or extends the CURRENT run as if appended; the batch path
     would have spliced it into order. ``state_ttl_ms`` evicts idle keys
     (open key vocabularies); an evicted key restarts its run count.
@@ -2744,82 +2186,6 @@ def stream_periodic_violations(
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-@_smoke_state_parallelism
-def run_stream_periodic_smoke(
-    spark,
-    parquet_dir: str,
-    key_col: str,
-    order_cols: Sequence[str],
-    value_col: str,
-    query_name: str = "stream_periodic",
-    max_files_per_trigger: int = 8,
-    **kwargs,
-):
-    """Drive stream_periodic_violations over a bounded parquet dir
-    (update mode, memory sink). Stage with each key confined to ONE file
-    (``df.repartition(n, key_col).write``) and the violation set is
-    exactly the batch engine-pass set regardless of file arrival
-    order."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    mode = kwargs.setdefault("output_mode", "update")
-    out = stream_periodic_violations(
-        stream, key_col, order_cols, value_col, **kwargs
-    )
-    q = (
-        out.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
-
-
-@_smoke_state_parallelism
-def run_stream_runs_smoke(
-    spark,
-    parquet_dir: str,
-    key_col: str,
-    order_cols: Sequence[str],
-    value_col: str,
-    query_name: str = "stream_runs",
-    max_files_per_trigger: int = 8,
-    **kwargs,
-):
-    """Drive stream_run_violations over a bounded parquet dir (update
-    mode, memory sink). Stage with each key confined to ONE file
-    (``df.repartition(n, key_col).write``) and the violation set is
-    exactly the batch stuck_runs set regardless of file arrival
-    order."""
-    static = spark.read.parquet(parquet_dir)
-    stream = (
-        spark.readStream.schema(static.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(parquet_dir)
-    )
-    mode = kwargs.setdefault("output_mode", "update")
-    out = stream_run_violations(stream, key_col, order_cols, value_col, **kwargs)
-    q = (
-        out.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_checks_from_suite(

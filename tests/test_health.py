@@ -620,7 +620,9 @@ def test_stream_health_batch_parity(spark, tmp_path):
     import datetime
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_health_smoke,
+        drain,
+        stream_health,
+        stream_health_baseline,
     )
 
     rows = []
@@ -639,13 +641,13 @@ def test_stream_health_batch_parity(spark, tmp_path):
     # several files -> several micro-batches under maxFilesPerTrigger=1
     df.repartition(4).write.parquet(src)
 
-    out = run_stream_health_smoke(
+    baseline = stream_health_baseline(spark.read.parquet(src), "tool")
+    out = drain(
         spark,
         src,
-        query_name="t_shealth",
-        valid_expr="tool",
-        tol=0.1,
-        max_files_per_trigger=1,
+        lambda s: stream_health(s, valid_expr="tool", tol=0.1, **baseline),
+        "complete",
+        1,
     )
     got = {
         r["window_start"].strftime("%Y-%m-%d"): r

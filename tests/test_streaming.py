@@ -5,7 +5,11 @@ import pyspark.sql.functions as F
 
 from taco_toolbox_spark.checks import transcript_checks
 from taco_toolbox_spark.checks.base import RowCheck
-from taco_toolbox_spark.streaming.validate_stream import run_memory_smoke
+from taco_toolbox_spark.streaming.validate_stream import (
+    drain,
+    stream_violations,
+    windowed_verdicts,
+)
 
 
 def test_stream_matches_batch(tmp_path, corpus, corrupted_pdf):
@@ -13,8 +17,11 @@ def test_stream_matches_batch(tmp_path, corpus, corrupted_pdf):
     corpus.corrupted.drop("part").write.mode("overwrite").parquet(path)
     checks = [c for c in transcript_checks() if isinstance(c, RowCheck)]
 
-    out = run_memory_smoke(
-        corpus.corrupted.sparkSession, path, checks, query_name="t_stream"
+    out = drain(
+        corpus.corrupted.sparkSession,
+        path,
+        lambda s: windowed_verdicts(stream_violations(s, checks)),
+        "complete",
     ).toPandas()
 
     # total violations per check must equal the batch row-pass counts
@@ -34,12 +41,21 @@ def test_stateful_ordering_matches_batch(tmp_path, corpus, corrupted_pdf):
     """The stateful stream check must find exactly the batch lag-window
     regressions (each conversation lives in one part file here, so
     micro-batch boundaries don't split conversations)."""
-    from taco_toolbox_spark.streaming.validate_stream import run_ordering_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     path = str(tmp_path / "ord_in")
     corpus.corrupted.write.mode("overwrite").parquet(path)
 
-    out = run_ordering_smoke(corpus.corrupted.sparkSession, path).toPandas()
+    out = drain(
+        corpus.corrupted.sparkSession,
+        path,
+        lambda s: transcript_violations_stateful(
+            s, check_ids=("ts_monotone",)
+        ).drop("passed", "n_seen"),
+        "update",
+    ).toPandas()
     got = set(zip(out.conv_id, out.turn_idx))
 
     s = corrupted_pdf.sort_values(["conv_id", "turn_idx"], kind="stable")
@@ -53,12 +69,17 @@ def test_stateful_battery_matches_batch(tmp_path, corpus, corrupted_pdf):
     """VERDICT r2 #9: the stateful stream must reproduce the batch
     engine's per-conversation battery — monotone ts, (conv, turn)
     uniqueness, turn contiguity — on the same bounded corpus."""
-    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     path = str(tmp_path / "battery_in")
     corpus.corrupted.write.mode("overwrite").parquet(path)
-    out = run_battery_smoke(
-        corpus.corrupted.sparkSession, path, query_name="t_battery"
+    out = drain(
+        corpus.corrupted.sparkSession,
+        path,
+        transcript_violations_stateful,
+        "update",
     ).toPandas()
 
     # no conversation overflowed the bounded state
@@ -194,7 +215,9 @@ def test_stateful_battery_null_and_negative_turn_idx(tmp_path, spark):
     against contiguity."""
     import datetime as dt
 
-    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     t0 = dt.datetime(2025, 1, 1)
     rows = [
@@ -210,7 +233,7 @@ def test_stateful_battery_null_and_negative_turn_idx(tmp_path, spark):
     path = str(tmp_path / "nullturn_in")
     df.repartition(1).write.mode("overwrite").parquet(path)
 
-    out = run_battery_smoke(spark, path, query_name="t_nullturn").toPandas()
+    out = drain(spark, path, transcript_violations_stateful, "update").toPandas()
 
     nonneg = out[out.check_id == "turn_idx_nonneg"]
     assert len(nonneg) == 2 and (nonneg.conv_id == "conv_a").all()
@@ -332,7 +355,9 @@ def test_stateful_contiguity_verdict_for_all_bad_keys(tmp_path, spark):
     would otherwise pass a conversation with zero valid turns."""
     import datetime as dt
 
-    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     t0 = dt.datetime(2025, 1, 1)
     df = spark.createDataFrame(
@@ -341,7 +366,7 @@ def test_stateful_contiguity_verdict_for_all_bad_keys(tmp_path, spark):
     )
     path = str(tmp_path / "allbad_in")
     df.repartition(1).write.mode("overwrite").parquet(path)
-    out = run_battery_smoke(spark, path, query_name="t_allbad").toPandas()
+    out = drain(spark, path, transcript_violations_stateful, "update").toPandas()
     assert len(out[out.check_id == "turn_idx_nonneg"]) == 2
     contig = out[out.check_id == "turn_contiguous"]
     assert list(contig.conv_id) == ["conv_x"] and not contig.passed.any()
@@ -356,7 +381,7 @@ def test_stream_battery_mined_grammar(tmp_path, spark):
     import datetime as dt
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_battery_smoke,
+        transcript_violations_stateful,
     )
 
     t0 = dt.datetime(2025, 1, 1)
@@ -375,13 +400,16 @@ def test_stream_battery_mined_grammar(tmp_path, spark):
     path = str(tmp_path / "grammar_in")
     df.repartition(1).write.mode("overwrite").parquet(path)
 
-    got = run_battery_smoke(
+    got = drain(
         spark,
         path,
-        query_name="t_mined_grammar",
-        role_col="role",
-        allowed_pairs={("a", "b"), ("b", "a")},
-        first_values={"a"},
+        lambda s: transcript_violations_stateful(
+            s,
+            role_col="role",
+            allowed_pairs={("a", "b"), ("b", "a")},
+            first_values={"a"},
+        ),
+        "update",
     ).toPandas()
     fired = got[(got.check_id == "role_transitions") & ~got.passed]
     assert set(fired.conv_id) == {"c2"}
@@ -390,8 +418,11 @@ def test_stream_battery_mined_grammar(tmp_path, spark):
 
     # without the override, the built-in transcript grammar knows
     # neither 'a' nor 'b': every conversation fires
-    builtin = run_battery_smoke(
-        spark, path, query_name="t_builtin_grammar", role_col="role"
+    builtin = drain(
+        spark,
+        path,
+        lambda s: transcript_violations_stateful(s, role_col="role"),
+        "update",
     ).toPandas()
     bad = builtin[(builtin.check_id == "role_transitions") & ~builtin.passed]
     assert set(bad.conv_id) == {"c1", "c2"}
@@ -406,7 +437,7 @@ def test_stream_dedup_drops_within_watermark_and_matches_batch(tmp_path, spark):
     from taco_toolbox_spark.dedup.exact import drop_exact_duplicates
     from taco_toolbox_spark.functions.text import fingerprint
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_dedup_smoke,
+        stream_dedup,
     )
     from pyspark.sql import functions as F
 
@@ -426,9 +457,8 @@ def test_stream_dedup_drops_within_watermark_and_matches_batch(tmp_path, spark):
     inp = str(tmp_path / "stream_in")
     # one file per row => micro-batches under maxFilesPerTrigger=1
     df.repartition(5, "doc_id").write.parquet(inp)
-    got = run_stream_dedup_smoke(
-        spark, inp, query_name="t_sdedup", watermark="1 hour",
-        max_files_per_trigger=1,
+    got = drain(
+        spark, inp, lambda s: stream_dedup(s, watermark="1 hour"), "append", 1
     ).toPandas()
     fps = (
         df.select("doc_id", fingerprint("text").alias("fp"))
@@ -452,7 +482,7 @@ def test_stream_sessionize_matches_batch_cumsum(tmp_path, spark):
     from pyspark.sql import functions as F
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_sessionize_smoke,
+        stream_sessionize,
     )
 
     t0 = dt.datetime(2025, 1, 1)
@@ -470,7 +500,12 @@ def test_stream_sessionize_matches_batch_cumsum(tmp_path, spark):
     inp = str(tmp_path / "sess_in")
     df.repartition(3).write.parquet(inp)
 
-    got = run_stream_sessionize_smoke(spark, inp).toPandas()
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_sessionize(s, ("user_id",), "ts", "1800 seconds"),
+        "complete",
+    ).toPandas()
     stream_set = {
         (r.user_id, r.session_start.to_pydatetime(), r.n_events)
         for r in got.itertuples()
@@ -509,7 +544,7 @@ def test_stream_minhash_candidates_match_batch(tmp_path, spark):
     )
     from taco_toolbox_spark.streaming.validate_stream import (
         minhash_bucket_store,
-        run_stream_minhash_smoke,
+        stream_minhash_candidates,
     )
 
     base = [
@@ -573,8 +608,12 @@ def test_stream_minhash_candidates_match_batch(tmp_path, spark):
         assert staged == want, fam
 
     store = minhash_bucket_store(df, max_bucket_size=None)
-    out = run_stream_minhash_smoke(
-        spark, inp, store, query_name="t_sminhash"
+    out = drain(
+        spark,
+        inp,
+        lambda s: stream_minhash_candidates(s, store),
+        "append",
+        4,
     )
     got_pairs = {(r.id_a, r.id_b) for r in out.collect()}
     want_pairs = {
@@ -596,14 +635,21 @@ def test_stateful_role_grammar_and_gap_match_batch(tmp_path, corpus):
     arrival contract, as for ts_monotone)."""
     from taco_toolbox_spark.checks import GapCheck, role_sequence_check
     from taco_toolbox_spark.engine import run_validation
-    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     spark = corpus.corrupted.sparkSession
     path = str(tmp_path / "grammar_in")
     corpus.corrupted.write.mode("overwrite").parquet(path)
 
-    out = run_battery_smoke(
-        spark, path, query_name="t_grammar", role_col="role", max_gap_s=120
+    out = drain(
+        spark,
+        path,
+        lambda s: transcript_violations_stateful(
+            s, role_col="role", max_gap_s=120
+        ),
+        "update",
     ).toPandas()
 
     batch = run_validation(
@@ -637,7 +683,7 @@ def test_stream_cms_counters_match_batch(tmp_path, corpus):
     vocabulary, with NO watermark)."""
     from taco_toolbox_spark.sketches import cms_counters, cms_lookup, cms_merge
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cms_smoke,
+        stream_cms_counters,
     )
 
     spark = corpus.clean.sparkSession
@@ -645,8 +691,12 @@ def test_stream_cms_counters_match_batch(tmp_path, corpus):
     corpus.clean.write.mode("overwrite").parquet(path)
     depth, width = 4, 64
 
-    streamed = run_stream_cms_smoke(
-        spark, path, ["role"], query_name="t_scms", depth=depth, width=width
+    streamed = drain(
+        spark,
+        path,
+        lambda s: stream_cms_counters(s, ["role"], depth=depth, width=width),
+        "complete",
+        4,
     )
     got = {(r._d, r._bucket): r._cnt for r in streamed.collect()}
     static = spark.read.parquet(path)
@@ -733,7 +783,7 @@ def test_stream_incremental_exact_matches_batch(tmp_path, spark):
     from taco_toolbox_spark.dedup.incremental import exact_keys
     from taco_toolbox_spark.sketches import bloom_pack_words, bloom_positions
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_incremental_smoke,
+        stream_incremental_exact,
     )
 
     existing = spark.createDataFrame(
@@ -759,9 +809,12 @@ def test_stream_incremental_exact_matches_batch(tmp_path, spark):
 
     got = {
         (r["id"], r["verdict"])
-        for r in run_stream_incremental_smoke(
-            spark, inp, ex_keys, query_name="t_incr_plain",
-            max_files_per_trigger=1,
+        for r in drain(
+            spark,
+            inp,
+            lambda s: stream_incremental_exact(s, ex_keys),
+            "append",
+            1,
         ).collect()
     }
     assert got == want
@@ -771,10 +824,14 @@ def test_stream_incremental_exact_matches_batch(tmp_path, spark):
     )
     got_bloom = {
         (r["id"], r["verdict"])
-        for r in run_stream_incremental_smoke(
-            spark, inp, ex_keys, query_name="t_incr_bloom",
-            max_files_per_trigger=1,
-            bloom_words=words, bloom_num_hashes=4,
+        for r in drain(
+            spark,
+            inp,
+            lambda s: stream_incremental_exact(
+                s, ex_keys, bloom_words=words, bloom_num_hashes=4
+            ),
+            "append",
+            1,
         ).collect()
     }
     assert got_bloom == want
@@ -801,7 +858,7 @@ def test_stream_fd_matches_batch_violation_set(tmp_path, spark):
     violating determinant emits ONE row (the reported latch)."""
     from taco_toolbox_spark.checks.fd import fd_violations
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_fd_smoke,
+        fd_violations_stateful,
     )
 
     rows = [
@@ -815,9 +872,14 @@ def test_stream_fd_matches_batch_violation_set(tmp_path, spark):
     # one file per row -> many micro-batches at maxFilesPerTrigger=2
     df.repartition(len(rows)).write.parquet(inp)
 
-    got = run_stream_fd_smoke(
-        spark, inp, ["tool"], ["role"],
-        skip_null_determinant=True, max_files_per_trigger=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: fd_violations_stateful(
+            s, ["tool"], ["role"], skip_null_determinant=True
+        ),
+        "update",
+        2,
     )
     flagged = {r["tool"] for r in got.collect()}
     want = {
@@ -835,16 +897,19 @@ def test_stream_fd_matches_batch_violation_set(tmp_path, spark):
 
 def test_stream_fd_strict_null_determinant(tmp_path, spark):
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_fd_smoke,
+        fd_violations_stateful,
     )
 
     rows = [(None, "user"), (None, "assistant"), ("x", "tool")]
     df = spark.createDataFrame(rows, "tool string, role string")
     inp = str(tmp_path / "fd_strict_in")
     df.repartition(3).write.parquet(inp)
-    got = run_stream_fd_smoke(
-        spark, inp, ["tool"], ["role"], query_name="stream_fd_strict",
-        max_files_per_trigger=1,
+    got = drain(
+        spark,
+        inp,
+        lambda s: fd_violations_stateful(s, ["tool"], ["role"]),
+        "update",
+        1,
     )
     # strict mode: the NULL-determinant group (cast to string -> grouped
     # together) is flagged for spanning {user, assistant}
@@ -906,7 +971,7 @@ def test_stream_content_digest_matches_batch(tmp_path, corpus):
         digest_mismatches,
     )
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_digest_smoke,
+        stream_content_digest,
     )
 
     spark = corpus.clean.sparkSession
@@ -914,9 +979,12 @@ def test_stream_content_digest_matches_batch(tmp_path, corpus):
     corpus.clean.write.mode("overwrite").parquet(path)
     cols = ["conv_id", "turn_idx", "role", "text"]
 
-    streamed = run_stream_digest_smoke(
-        spark, path, cols, ["part"], query_name="t_sdigest",
-        max_files_per_trigger=1,
+    streamed = drain(
+        spark,
+        path,
+        lambda s: stream_content_digest(s, cols, ["part"]),
+        "complete",
+        1,
     )
     batch = content_digest(spark.read.parquet(path), cols, ["part"])
     assert digest_mismatches(batch, streamed, ["part"]).count() == 0
@@ -937,7 +1005,7 @@ def test_stream_content_digest_windowed(tmp_path, corpus):
     equals the batch digest of that window's slice."""
     from taco_toolbox_spark.operators.digest import content_digest
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_digest_smoke,
+        stream_content_digest,
     )
     import pyspark.sql.functions as F
 
@@ -946,8 +1014,12 @@ def test_stream_content_digest_windowed(tmp_path, corpus):
     corpus.clean.write.mode("overwrite").parquet(path)
     cols = ["conv_id", "turn_idx", "role", "text"]
 
-    streamed = run_stream_digest_smoke(
-        spark, path, cols, None, query_name="t_sdigest_w", window="1 day",
+    streamed = drain(
+        spark,
+        path,
+        lambda s: stream_content_digest(s, cols, None, window="1 day"),
+        "complete",
+        4,
     )
     static = spark.read.parquet(path)
     want = {
@@ -975,7 +1047,7 @@ def test_stream_transitions_match_batch_pairs(tmp_path, spark):
     unbounded stream never proves a conversation over)."""
     from taco_toolbox_spark.checks.drift import END_TOKEN, transition_pairs
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_transition_smoke,
+        stream_transition_pairs,
     )
 
     rows = []
@@ -989,9 +1061,7 @@ def test_stream_transitions_match_batch_pairs(tmp_path, spark):
     # each conversation confined to one file => exact under any file order
     df.repartition(5, "conv_id").write.parquet(inp)
 
-    got = run_stream_transition_smoke(
-        spark, inp, query_name="t_strans", max_files_per_trigger=2
-    ).toPandas()
+    got = drain(spark, inp, stream_transition_pairs, "update", 2).toPandas()
     want = (
         transition_pairs(df, "conv_id", ("turn_idx",), "role")
         .filter(F.col("to_state") != END_TOKEN)
@@ -1012,7 +1082,7 @@ def test_stream_transitions_carry_state_across_batches(tmp_path, spark):
 
     from taco_toolbox_spark.checks.drift import START_TOKEN
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_transition_smoke,
+        stream_transition_pairs,
     )
 
     inp = str(tmp_path / "carry_in")
@@ -1035,9 +1105,7 @@ def test_stream_transitions_carry_state_across_batches(tmp_path, spark):
     os.utime(os.path.join(inp, first[0]), (now - 100, now - 100))
     os.utime(os.path.join(inp, second[0]), (now, now))
 
-    got = run_stream_transition_smoke(
-        spark, inp, query_name="t_scarry", max_files_per_trigger=1
-    ).toPandas()
+    got = drain(spark, inp, stream_transition_pairs, "update", 1).toPandas()
     pairs = sorted(zip(got.from_state, got.to_state))
     assert pairs == [
         (START_TOKEN, "user"),
@@ -1056,7 +1124,7 @@ def test_stream_categorical_tv_matches_batch(tmp_path, corpus):
         categorical_tv,
     )
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cat_drift_smoke,
+        stream_categorical_tv,
     )
 
     spark = corpus.clean.sparkSession
@@ -1064,14 +1132,14 @@ def test_stream_categorical_tv_matches_batch(tmp_path, corpus):
     corpus.clean.write.mode("overwrite").parquet(path)
     base = categorical_counts(corpus.clean, "role")
 
-    got = run_stream_cat_drift_smoke(
+    got = drain(
         spark,
         path,
-        "role",
-        base,
-        query_name="t_cat_drift_stream",
-        window="1 day",
-        watermark="1 day",
+        lambda s: stream_categorical_tv(
+            s, "role", base, window="1 day", watermark="1 day"
+        ),
+        "complete",
+        4,
     ).toPandas()
 
     static = spark.read.parquet(path)
@@ -1099,7 +1167,7 @@ def test_stream_categorical_tv_unknown_category_mass(tmp_path, spark):
     import pandas as pd
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cat_drift_smoke,
+        stream_categorical_tv,
     )
 
     t0 = dt.datetime(2025, 1, 1, 12, 0, 0)
@@ -1113,8 +1181,12 @@ def test_stream_categorical_tv_unknown_category_mass(tmp_path, spark):
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(path)
     base = {"a": 2, "b": 1, "c": 1}  # N_base=4; c never streams
 
-    got = run_stream_cat_drift_smoke(
-        spark, path, "cat", base, query_name="t_cat_unk", window="1 day"
+    got = drain(
+        spark,
+        path,
+        lambda s: stream_categorical_tv(s, "cat", base, window="1 day"),
+        "complete",
+        4,
     ).toPandas()
     assert len(got) == 1
     # n_win=4: terms a:|2*4-2*4|=0, b:|1*4-1*4|=0, c:|0*4-1*4|=4, zz:1*4=4
@@ -1132,7 +1204,7 @@ def test_stream_conditional_tv_matches_batch(tmp_path, corpus):
         conditional_tv,
     )
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cond_drift_smoke,
+        stream_conditional_tv,
     )
 
     spark = corpus.clean.sparkSession
@@ -1140,15 +1212,14 @@ def test_stream_conditional_tv_matches_batch(tmp_path, corpus):
     corpus.clean.write.mode("overwrite").parquet(path)
     base = conditional_counts(corpus.clean, "role", "tool")
 
-    got = run_stream_cond_drift_smoke(
+    got = drain(
         spark,
         path,
-        "role",
-        "tool",
-        base,
-        query_name="t_cond_drift_stream",
-        window="1 day",
-        watermark="1 day",
+        lambda s: stream_conditional_tv(
+            s, "role", "tool", base, window="1 day", watermark="1 day"
+        ),
+        "complete",
+        4,
     ).toPandas()
 
     static = spark.read.parquet(path)
@@ -1180,7 +1251,7 @@ def test_stream_conditional_tv_novel_cond_and_nested_baseline(
     import pandas as pd
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cond_drift_smoke,
+        stream_conditional_tv,
     )
 
     t0 = dt.datetime(2025, 2, 1, 9, 0, 0)
@@ -1196,9 +1267,14 @@ def test_stream_conditional_tv_novel_cond_and_nested_baseline(
     nested = {"u": {"s": 2}, "a": {"q": 1, "s": 1}}
 
     got = (
-        run_stream_cond_drift_smoke(
-            spark, path, "k", "c", nested, query_name="t_cond_novel",
-            window="1 day", threshold=0.05,
+        drain(
+            spark,
+            path,
+            lambda s: stream_conditional_tv(
+                s, "k", "c", nested, window="1 day", threshold=0.05
+            ),
+            "complete",
+            4,
         )
         .toPandas()
         .set_index("cond")
@@ -1223,7 +1299,7 @@ def test_stream_correlation_drift_matches_batch(tmp_path, spark):
 
     from taco_toolbox_spark.checks.drift import correlation_drift
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_corr_drift_smoke,
+        stream_correlation_drift,
     )
 
     t0 = dt.datetime(2025, 4, 1)
@@ -1241,9 +1317,14 @@ def test_stream_correlation_drift_matches_batch(tmp_path, spark):
     df.write.mode("overwrite").parquet(path)
 
     got = (
-        run_stream_corr_drift_smoke(
-            spark, path, "x", "y", 0.9, query_name="t_corr_stream",
-            window="1 day", threshold=0.3,
+        drain(
+            spark,
+            path,
+            lambda s: stream_correlation_drift(
+                s, "x", "y", 0.9, window="1 day", threshold=0.3
+            ),
+            "complete",
+            4,
         )
         .toPandas()
         .sort_values("window_start")
@@ -1284,7 +1365,7 @@ def test_stream_embedding_drift_matches_batch(tmp_path, spark):
         embedding_centroid_sums,
     )
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_embedding_drift_smoke,
+        stream_embedding_drift,
     )
 
     t0 = dt.datetime(2025, 5, 1)
@@ -1317,9 +1398,14 @@ def test_stream_embedding_drift_matches_batch(tmp_path, spark):
     }
 
     got = (
-        run_stream_embedding_drift_smoke(
-            spark, path, "vec", base, query_name="t_emb_stream",
-            window="1 day", watermark="1 day",
+        drain(
+            spark,
+            path,
+            lambda s: stream_embedding_drift(
+                s, "vec", base, window="1 day", watermark="1 day"
+            ),
+            "complete",
+            4,
         )
         .toPandas()
         .sort_values("window_start")
@@ -1343,10 +1429,15 @@ def test_stream_embedding_drift_matches_batch(tmp_path, spark):
 
     # verdict split: the most-shifted day fails under a tight threshold
     judged = (
-        run_stream_embedding_drift_smoke(
-            spark, path, "vec", base, query_name="t_emb_judged",
-            window="1 day", watermark="1 day",
-            threshold=float(want.drift.iloc[1]),
+        drain(
+            spark,
+            path,
+            lambda s: stream_embedding_drift(
+                s, "vec", base, window="1 day", watermark="1 day",
+                threshold=float(want.drift.iloc[1]),
+            ),
+            "complete",
+            4,
         )
         .toPandas()
         .sort_values("window_start")
@@ -1651,7 +1742,6 @@ def test_stream_categorical_tv_nonstring_keys_and_wide_vocab(tmp_path, spark):
     import pytest as _pytest
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_cat_drift_smoke,
         stream_categorical_tv,
     )
 
@@ -1660,9 +1750,12 @@ def test_stream_categorical_tv_nonstring_keys_and_wide_vocab(tmp_path, spark):
     path = str(tmp_path / "nsk_in")
     spark.createDataFrame(pdf).write.mode("overwrite").parquet(path)
 
-    got = run_stream_cat_drift_smoke(
-        spark, path, "cat", {1: 2, 2: 1}, query_name="t_cat_nsk",
-        window="1 day",
+    got = drain(
+        spark,
+        path,
+        lambda s: stream_categorical_tv(s, "cat", {1: 2, 2: 1}, window="1 day"),
+        "complete",
+        4,
     ).toPandas()
     # '1.0' must NOT count as category '1': present mass = {'1':1, '2':1},
     # unknown mass = 1. n_win=3, N_base=3:
@@ -1711,7 +1804,7 @@ def test_stream_rate_matches_batch(tmp_path, spark):
 
     from taco_toolbox_spark.operators.rolling import burst_violations
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_rate_smoke,
+        stream_rate_violations,
     )
 
     t0 = dt.datetime(2025, 2, 1, 0, 0, 0)
@@ -1733,9 +1826,13 @@ def test_stream_rate_matches_batch(tmp_path, spark):
     inp = str(tmp_path / "rate_in")
     df.repartition(4, "k").write.mode("overwrite").parquet(inp)
 
-    got = run_stream_rate_smoke(
-        spark, inp, "k", "ts", query_name="t_stream_rate",
-        seconds=10, max_events=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_rate_violations(
+            s, "k", "ts", seconds=10, max_events=2
+        ),
+        "update",
     ).toPandas()
     want = (
         burst_violations(
@@ -1761,7 +1858,7 @@ def test_stream_rate_state_carries_across_batches(tmp_path, spark):
     import shutil
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_rate_smoke,
+        stream_rate_violations,
     )
 
     t0 = dt.datetime(2025, 2, 2, 0, 0, 0)
@@ -1794,9 +1891,14 @@ def test_stream_rate_state_carries_across_batches(tmp_path, spark):
         shutil.copy(src, dst)
         os.utime(dst, (now - 100 + 10 * j, now - 100 + 10 * j))
 
-    got = run_stream_rate_smoke(
-        spark, inp, "k", "ts", query_name="t_stream_rate_carry",
-        max_files_per_trigger=1, seconds=10, max_events=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_rate_violations(
+            s, "k", "ts", seconds=10, max_events=2
+        ),
+        "update",
+        1,
     ).toPandas()
     assert len(got) == 1
     assert int(got.n_trailing.iloc[0]) == 3
@@ -1856,7 +1958,7 @@ def test_stream_runs_matches_batch(tmp_path, spark):
     including NULL runs (stuck-null) and per-key isolation."""
     from taco_toolbox_spark.operators.runs import stuck_runs
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_runs_smoke,
+        stream_run_violations,
     )
 
     rows = [
@@ -1869,8 +1971,11 @@ def test_stream_runs_matches_batch(tmp_path, spark):
     inp = str(tmp_path / "runs_in")
     df.repartition(4, "k").write.mode("overwrite").parquet(inp)
 
-    got = run_stream_runs_smoke(
-        spark, inp, "k", ["i"], "v", query_name="t_stream_runs", max_run=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_run_violations(s, "k", ["i"], "v", max_run=2),
+        "update",
     ).toPandas()
     want = (
         stuck_runs(spark.read.parquet(inp), ["k"], ["i"], "v", 2)
@@ -1892,7 +1997,7 @@ def test_stream_runs_state_carries_across_batches(tmp_path, spark):
     import shutil
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_runs_smoke,
+        stream_run_violations,
     )
 
     inp = str(tmp_path / "runs_carry")
@@ -1916,9 +2021,12 @@ def test_stream_runs_state_carries_across_batches(tmp_path, spark):
         shutil.copy(glob.glob(f"{d}/part-*.parquet")[0], dst)
         os.utime(dst, (now - 100 + 10 * j, now - 100 + 10 * j))
 
-    got = run_stream_runs_smoke(
-        spark, inp, "k", ["i"], "v",
-        query_name="t_stream_runs_carry", max_files_per_trigger=1, max_run=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_run_violations(s, "k", ["i"], "v", max_run=2),
+        "update",
+        1,
     ).toPandas()
     gs = {(r.k, r.i, r.v, r.run_pos) for r in got.itertuples()}
     assert gs == {("A", 3, "a", 3), ("A", 4, "a", 4)}
@@ -1945,7 +2053,7 @@ def test_stream_periodic_matches_batch(tmp_path, spark):
     runs (periodic at any p), and per-key isolation."""
     from taco_toolbox_spark.operators.runs import periodic_overflow
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_periodic_smoke,
+        stream_periodic_violations,
     )
 
     rows = [
@@ -1966,9 +2074,13 @@ def test_stream_periodic_matches_batch(tmp_path, spark):
     inp = str(tmp_path / "periodic_in")
     df.repartition(4, "k").write.mode("overwrite").parquet(inp)
 
-    got = run_stream_periodic_smoke(
-        spark, inp, "k", ["i"], "v",
-        query_name="t_stream_periodic", period=2, max_reps=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_periodic_violations(
+            s, "k", ["i"], "v", period=2, max_reps=2
+        ),
+        "update",
     ).toPandas()
     want = (
         periodic_overflow(spark.read.parquet(inp), ["k"], ["i"], "v", 2, 2)
@@ -1992,7 +2104,7 @@ def test_stream_periodic_state_carries_across_batches(tmp_path, spark):
     import time as _t
 
     from taco_toolbox_spark.streaming.validate_stream import (
-        run_stream_periodic_smoke,
+        stream_periodic_violations,
     )
 
     inp = str(tmp_path / "periodic_carry")
@@ -2013,10 +2125,14 @@ def test_stream_periodic_state_carries_across_batches(tmp_path, spark):
         shutil.copy(glob.glob(f"{d}/part-*.parquet")[0], dst)
         os.utime(dst, (now - 100 + 10 * j, now - 100 + 10 * j))
 
-    got = run_stream_periodic_smoke(
-        spark, inp, "k", ["i"], "v",
-        query_name="t_stream_periodic_carry",
-        max_files_per_trigger=1, period=2, max_reps=2,
+    got = drain(
+        spark,
+        inp,
+        lambda s: stream_periodic_violations(
+            s, "k", ["i"], "v", period=2, max_reps=2
+        ),
+        "update",
+        1,
     ).toPandas()
     gs = {(r.k, r.i, r.v, r.stretch_pos) for r in got.itertuples()}
     assert gs == {("A", 5, "a", 5)}
@@ -2151,7 +2267,9 @@ def test_stateful_gap_boundary_is_exclusive(tmp_path, spark):
     max_gap_s passes, one microsecond more fails."""
     import datetime as dt
 
-    from taco_toolbox_spark.streaming.validate_stream import run_battery_smoke
+    from taco_toolbox_spark.streaming.validate_stream import (
+        transcript_violations_stateful,
+    )
 
     t0 = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
     gap = dt.timedelta(seconds=120)
@@ -2165,8 +2283,129 @@ def test_stateful_gap_boundary_is_exclusive(tmp_path, spark):
             ("c", 2, t0 + 2 * gap + dt.timedelta(microseconds=1)),
         ],
     )
-    out = run_battery_smoke(
-        spark, path, query_name="t_gap_edge", max_gap_s=120
+    out = drain(
+        spark,
+        path,
+        lambda s: transcript_violations_stateful(s, max_gap_s=120),
+        "update",
     ).toPandas()
     flagged = out[out.check_id == "ts_gap"]
     assert list(zip(flagged.conv_id, flagged.turn_idx)) == [("c", 2)]
+
+
+def test_drain_restores_conf_and_stops_query(tmp_path, spark):
+    """drain() restores spark.sql.shuffle.partitions and leaves no active
+    query after a normal run, after ``build`` raises, and after the query
+    fails at run time; back-to-back drains return their own rows."""
+    from pyspark.errors import StreamingQueryException
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    spark.range(3).write.parquet(a)
+    spark.range(10, 15).write.parquet(b)
+
+    def bad_build(s):
+        raise ValueError("bad builder")
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    # a value drain's defaultParallelism override cannot coincide with
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism + 3))
+    before = spark.conf.get(key)
+    try:
+        got_a = drain(spark, a, lambda s: s, "append")
+        got_b = drain(spark, b, lambda s: s, "append")
+        assert sorted(r.id for r in got_a.collect()) == [0, 1, 2]
+        assert sorted(r.id for r in got_b.collect()) == [10, 11, 12, 13, 14]
+        assert spark.conf.get(key) == before
+        assert not spark.streams.active
+
+        with pytest.raises(ValueError, match="bad builder"):
+            drain(spark, a, bad_build, "append")
+        assert spark.conf.get(key) == before
+        assert not spark.streams.active
+
+        with pytest.raises(StreamingQueryException, match="boom"):
+            drain(
+                spark,
+                a,
+                lambda s: s.select(F.raise_error(F.lit("boom")).alias("e")),
+                "append",
+            )
+        assert spark.conf.get(key) == before
+        assert not spark.streams.active
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.fixture(scope="module")
+def split_dir(corpus, tmp_path_factory):
+    """The clean corpus as a multi-file parquet dir with a derived
+    embedding column, and its file count."""
+    import os
+
+    d = str(tmp_path_factory.mktemp("split") / "in")
+    corpus.clean.withColumn(
+        "vec",
+        F.array(F.col("turn_idx").cast("double"), F.length("text").cast("double")),
+    ).repartition(4).write.parquet(d)
+    return d, len([f for f in os.listdir(d) if f.endswith(".parquet")])
+
+
+def _split_builder(name, static):
+    from taco_toolbox_spark.checks.drift import (
+        categorical_counts,
+        conditional_counts,
+        embedding_centroid_sums,
+    )
+    from taco_toolbox_spark.streaming import validate_stream as vs
+
+    if name == "cat_tv":
+        base = categorical_counts(static, "role")
+        return lambda s: vs.stream_categorical_tv(s, "role", base)
+    if name == "cond_tv":
+        base = conditional_counts(static, "role", "tool")
+        return lambda s: vs.stream_conditional_tv(s, "role", "tool", base)
+    if name == "corr":
+        return lambda s: vs.stream_correlation_drift(
+            s, "turn_idx", "length(text)", 0.0
+        )
+    if name == "embedding":
+        base = {
+            int(r["dim"]): int(r["g"])
+            for r in embedding_centroid_sums(static, "vec", "ts")
+            .groupBy("dim")
+            .agg(F.sum("s").alias("g"))
+            .collect()
+        }
+        return lambda s: vs.stream_embedding_drift(s, "vec", base)
+    if name == "digest":
+        return lambda s: vs.stream_content_digest(
+            s, ["conv_id", "turn_idx", "role", "text"], ["role"]
+        )
+    if name == "health":
+        baseline = vs.stream_health_baseline(static, "tool")
+        return lambda s: vs.stream_health(
+            s, valid_expr="tool", distinct_col="conv_id",
+            distinct_band=(10.0, 1.0), **baseline,
+        )
+    return lambda s: vs.stream_cms_counters(s, ["role", "tool"])
+
+
+@pytest.mark.parametrize(
+    "name", ["cat_tv", "cond_tv", "corr", "embedding", "digest", "health", "cms"]
+)
+def test_stream_twins_split_invariant(spark, split_dir, name):
+    """Twins whose results promise independence from arrival order emit
+    identical rows whether the input arrives one file per micro-batch or
+    all in one batch (complete mode)."""
+    path, n_files = split_dir
+    assert n_files > 1
+    build = _split_builder(name, spark.read.parquet(path))
+
+    def rows(mft):
+        return sorted(
+            repr(tuple(r)) for r in drain(spark, path, build, "complete", mft).collect()
+        )
+
+    one = rows(1)
+    assert one and one == rows(n_files)
