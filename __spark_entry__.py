@@ -1430,8 +1430,8 @@ def q_w5_token_truncate(spark, sf_dir):
 
 def q_d4_ks_drift(spark, sf_dir):
     """Per-day two-sample Kolmogorov–Smirnov drift of event value vs the
-    corpus-wide baseline — the ECDF member of the drift family (quantile
-    t-digest, categorical TV, embedding centroid, +KS): the supremum over
+    corpus-wide baseline — the ECDF member of the drift family (quantile,
+    categorical TV, embedding centroid, +KS): the supremum over
     the WHOLE distribution catches a shape change between percentiles
     that leaves p25/p50/p75 untouched. Exact in the family's discipline:
     the sup is evaluated on the union of both samples' jump points, each
@@ -1441,7 +1441,7 @@ def q_d4_ks_drift(spark, sf_dir):
     (checks/drift.py:ks_statistic_by_partition). Plan: two grouped counts
     (map-side partial), a broadcast baseline grid, one per-day cumulative
     window — the exact drift mode's cost class; at 100 TB the baseline is
-    a bounded reference sample exactly like the t-digest baseline."""
+    a bounded reference sample exactly like the quantile drift baseline."""
     from taco_toolbox_spark.checks.drift import ks_statistic_by_partition
 
     ev = _t(spark, sf_dir, "events")
@@ -6082,7 +6082,7 @@ def oracle_sql() -> dict[str, str]:
         # rows that normalize to existing texts)
         "stream_dedup": """
             SELECT DISTINCT
-              lower(trim(regexp_replace(text, '\s+', ' ', 'g')))
+              lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))
                 AS norm_text
             FROM documents
         """,

@@ -587,12 +587,12 @@ class DriftCheck(Check):
     threshold: float = 0.25
     baseline_quantiles: Sequence[float] | None = None  # resolved by engine if None
     #: "approx" = JVM-side percentile_approx (Spark's own mergeable sketch,
-    #: no Python in the path — the default/fast path); "tdigest" = the
-    #: custom two-phase centroid sketch whose state is persistable into the
-    #: checkpoint manifest (checks/drift.py); "exact" = sort-based exact
-    #: percentiles (type-7 interpolation, identical to DuckDB quantile_cont)
-    #: so an independent engine can recompute the verdicts — for
-    #: verification corpora, not the 10^12-row path.
+    #: no Python in the path — the default/fast path); "tdigest" = an
+    #: alias of "approx", kept so older suites and callers still run;
+    #: "exact" = sort-based exact percentiles (type-7 interpolation,
+    #: identical to DuckDB quantile_cont) so an independent engine can
+    #: recompute the verdicts — for verification corpora, not the
+    #: 10^12-row path.
     method: str = "approx"
 
 

@@ -1,41 +1,30 @@
-"""Mergeable quantile sketch + distribution-drift check.
+"""Distribution-drift checks: quantile, categorical, KS, embedding,
+correlation, conditional and transition drift.
 
 The reference approximates percentiles with a 100-bucket histogram per band
 (/root/reference/tacotoolbox/sample/extensions/geotiff_stats.py:251-264) and
 merges per-partition summaries into global ones (min-of-mins / max-of-maxes,
-_tacollection.py:343-466). At 10^12 rows we need a *mergeable, bounded-size*
-sketch, so drift vs a stored baseline can be computed with a two-phase
-(treeAggregate-style) merge. (The checkpoint manifest stores Spark's native
-KLL sketches instead: checkpoint.record_sketch_state.)
+_tacollection.py:343-466). At 10^12 rows the quantile drift check needs a
+*mergeable, bounded-size* sketch, and Spark ships one: ``DriftCheck`` has
+two paths, both plain JVM aggregations with no Python workers.
 
-Implementation of the ``tdigest`` drift method: a simplified t-digest —
-equal-weight centroid compression.
-  phase 1: salted partial sketches  groupBy(part, salt).applyInPandas(compress)
-  phase 2: final merge              groupBy(part).applyInPandas(merge)
-The salt bounds the rows any single task must hold; centroids are ≤
-``n_centroids`` per sketch regardless of input size. All numpy-vectorized
-(no per-row Python, per BASELINE input_hint).
+  approx  ``percentile_approx`` (Greenwald-Khanna) per partition — a
+          partial/final ObjectHashAggregate, combined map-side. The
+          default; ``method="tdigest"`` is an alias of it.
+  exact   ``percentile`` (sort-based, type-7) per partition — the
+          DuckDB-replicable path for verification corpora.
+
+Both feed the same column-expression judge (:func:`drift_violations_approx`,
+deviation :func:`rel_dev`). The checkpoint manifest stores Spark's native
+KLL sketches (checkpoint.record_sketch_state).
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-SKETCH_SCHEMA = (
-    "part string, means array<double>, weights array<double>, "
-    "n long, vmin double, vmax double"
-)
-
-
-# ---------------------------------------------------------------------------
-# numpy core (unit-testable without Spark)
-# ---------------------------------------------------------------------------
-
 
 #: one floor for relative deviation everywhere (batch exact, batch approx,
 #: streaming) — a baseline quantile below 1 must not inflate the denominator.
@@ -44,147 +33,9 @@ REL_DEV_FLOOR = 1e-12
 
 def rel_dev(a, b):
     """|a - b| / max(|b|, floor): THE drift deviation definition, shared by
-    drift_violations_approx, the exact applyInPandas path (numpy mirror),
-    and streaming.stream_drift so the surfaces can't diverge."""
+    drift_violations_approx (approx and exact paths), streaming.stream_drift
+    and suite.suggest_suite so the surfaces can't diverge."""
     return F.abs(a - b) / F.greatest(F.abs(b), F.lit(REL_DEV_FLOOR))
-
-
-def compress_values(values: np.ndarray, n_centroids: int = 128):
-    """Compress raw values into ≤ n_centroids (mean, weight) pairs by
-    equal-weight bucketing of the sorted values."""
-    v = np.asarray(values, dtype=np.float64)
-    v = v[~np.isnan(v)]
-    n = v.size
-    if n == 0:
-        return np.array([]), np.array([]), 0, np.nan, np.nan
-    v.sort()
-    k = min(n_centroids, n)
-    edges = np.linspace(0, n, k + 1).astype(np.int64)
-    counts = np.diff(edges)
-    keep = counts > 0
-    sums = np.add.reduceat(v, edges[:-1][keep])
-    means = sums / counts[keep]
-    return means, counts[keep].astype(np.float64), int(n), float(v[0]), float(v[-1])
-
-
-def merge_centroids(
-    means_list, weights_list, n_centroids: int = 128
-):
-    """Merge several centroid sets into one of ≤ n_centroids by weighted
-    re-bucketing along the sorted means."""
-    means = np.concatenate([np.asarray(m, dtype=np.float64) for m in means_list])
-    weights = np.concatenate([np.asarray(w, dtype=np.float64) for w in weights_list])
-    if means.size == 0:
-        return np.array([]), np.array([])
-    order = np.argsort(means, kind="mergesort")
-    means, weights = means[order], weights[order]
-    total = weights.sum()
-    k = min(n_centroids, means.size)
-    cum = np.cumsum(weights)
-    # bucket boundary for each centroid: which output bin its cum-weight ends in
-    bins = np.minimum((cum - weights / 2) / total * k, k - 1e-9).astype(np.int64)
-    out_means = np.zeros(k)
-    out_weights = np.zeros(k)
-    np.add.at(out_weights, bins, weights)
-    np.add.at(out_means, bins, means * weights)
-    keep = out_weights > 0
-    return out_means[keep] / out_weights[keep], out_weights[keep]
-
-
-def quantiles_from_centroids(
-    means: np.ndarray, weights: np.ndarray, probes: Sequence[float]
-) -> np.ndarray:
-    """Estimate quantiles by linear interpolation over the centroid CDF."""
-    means = np.asarray(means, dtype=np.float64)
-    weights = np.asarray(weights, dtype=np.float64)
-    if means.size == 0:
-        return np.full(len(probes), np.nan)
-    order = np.argsort(means, kind="mergesort")
-    means, weights = means[order], weights[order]
-    cum = np.cumsum(weights) - weights / 2.0
-    cdf = cum / weights.sum()
-    return np.interp(np.asarray(probes, dtype=np.float64), cdf, means)
-
-
-# ---------------------------------------------------------------------------
-# Spark plumbing
-# ---------------------------------------------------------------------------
-
-
-def sketch_by_partition(
-    df: DataFrame,
-    value_expr: str,
-    partition_col: str = "part",
-    n_centroids: int = 128,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-phase per-partition sketch: salted partial compress → final merge.
-    Output: one row per partition with centroid arrays + n/min/max."""
-    vals = df.select(
-        # partition columns read back from partitioned storage may be
-        # date/int-typed — the sketch key is always a string
-        F.col(partition_col).cast("string").alias("part"),
-        F.expr(value_expr).cast("double").alias("v"),
-        F.pmod(F.xxhash64(F.expr(value_expr), F.monotonically_increasing_id()),
-               F.lit(salt_buckets)).alias("salt"),
-    )
-
-    def compress(pdf: pd.DataFrame) -> pd.DataFrame:
-        means, weights, n, vmin, vmax = compress_values(
-            pdf["v"].to_numpy(), n_centroids
-        )
-        return pd.DataFrame(
-            {
-                "part": [pdf["part"].iloc[0]],
-                "salt": [int(pdf["salt"].iloc[0])],
-                "means": [means.tolist()],
-                "weights": [weights.tolist()],
-                "n": [n],
-                "vmin": [vmin],
-                "vmax": [vmax],
-            }
-        )
-
-    partial = vals.groupBy("part", "salt").applyInPandas(
-        compress, "part string, salt long, means array<double>, "
-        "weights array<double>, n long, vmin double, vmax double",
-    ).drop("salt")
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        means, weights = merge_centroids(
-            list(pdf["means"]), list(pdf["weights"]), n_centroids
-        )
-        return pd.DataFrame(
-            {
-                "part": [pdf["part"].iloc[0]],
-                "means": [means.tolist()],
-                "weights": [weights.tolist()],
-                "n": [int(pdf["n"].sum())],
-                "vmin": [float(np.nanmin(pdf["vmin"])) if len(pdf) else np.nan],
-                "vmax": [float(np.nanmax(pdf["vmax"])) if len(pdf) else np.nan],
-            }
-        )
-
-    return partial.groupBy("part").applyInPandas(merge, SKETCH_SCHEMA)
-
-
-def global_quantiles(
-    df: DataFrame, value_expr: str, probes: Sequence[float], n_centroids: int = 128
-) -> list[float]:
-    """Whole-table baseline quantiles via the same sketch (single final
-    merge group; partials bound memory)."""
-    sk = sketch_by_partition(
-        df.withColumn("_gq_part", F.lit("_all")),
-        value_expr,
-        partition_col="_gq_part",
-        n_centroids=n_centroids,
-    ).collect()
-    if not sk:
-        return [float("nan")] * len(probes)
-    row = sk[0]
-    return quantiles_from_centroids(
-        np.array(row["means"]), np.array(row["weights"]), probes
-    ).tolist()
 
 
 def approx_quantiles_by_partition(
@@ -195,8 +46,8 @@ def approx_quantiles_by_partition(
     accuracy: int = 10000,
 ) -> DataFrame:
     """JVM-side per-partition quantiles via percentile_approx — Spark's own
-    mergeable sketch (Greenwald-Khanna), fully codegen'd partial/final
-    aggregation, no Python workers. The fast path for the drift check."""
+    mergeable sketch (Greenwald-Khanna), partial/final ObjectHashAggregate,
+    no Python workers. The fast path for the drift check."""
     return df.groupBy(F.col(partition_col).cast("string").alias("part")).agg(
         F.percentile_approx(
             F.expr(value_expr).cast("double"), list(probes), accuracy
@@ -225,8 +76,8 @@ def exact_quantiles_by_partition(
     type-7 linear interpolation — the same definition DuckDB's
     quantile_cont uses), so an independent engine can recompute the drift
     verdicts bit-for-bit. Costs a per-partition sort of the values: the
-    oracle-replicable path for verification corpora; the mergeable-sketch
-    paths above remain the 10^12-row default."""
+    oracle-replicable path for verification corpora; the mergeable
+    ``approx`` path above remains the 10^12-row default."""
     probes_sql = ", ".join(repr(float(p)) for p in probes)
     return df.groupBy(F.col(partition_col).cast("string").alias("part")).agg(
         F.expr(
@@ -277,49 +128,6 @@ def drift_violations_approx(
             F.round("dist", 4).cast("string"),
             F.col("q_r").cast("string"),
         ).alias("detail"),
-    )
-
-
-def drift_violations(
-    sketches: DataFrame,
-    baseline_quantiles: Sequence[float],
-    probes: Sequence[float],
-    threshold: float,
-    check_id: str,
-) -> DataFrame:
-    """Per-partition drift verdict rows: max relative quantile distance vs
-    the baseline; one violation row per drifted partition."""
-    base = np.asarray(baseline_quantiles, dtype=np.float64)
-    probes_t = tuple(probes)
-
-    def judge(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, r in pdf.iterrows():  # ≤ 1 row per partition: not a hot loop
-            q = quantiles_from_centroids(
-                np.array(r["means"]), np.array(r["weights"]), probes_t
-            )
-            denom = np.maximum(np.abs(base), REL_DEV_FLOOR)
-            dist = float(np.nanmax(np.abs(q - base) / denom)) if q.size else np.nan
-            if np.isnan(dist) or dist > threshold:
-                out.append(
-                    (
-                        r["part"],
-                        f"max_rel_quantile_dist={dist:.4f} > {threshold} "
-                        f"(quantiles={np.round(q, 2).tolist()} "
-                        f"baseline={np.round(base, 2).tolist()})",
-                    )
-                )
-        return pd.DataFrame(out, columns=["part", "detail"])
-
-    judged = sketches.groupBy("part").applyInPandas(
-        judge, "part string, detail string"
-    )
-    return judged.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        F.col("detail"),
     )
 
 
@@ -457,7 +265,7 @@ def ks_statistic_by_partition(
 ) -> DataFrame:
     """Per-partition two-sample Kolmogorov–Smirnov statistic against a
     baseline sample — the ECDF sibling of the quantile DriftCheck:
-    where t-digest quantile drift judges a handful of percentile points,
+    where quantile drift judges a handful of percentile points,
     KS is the supremum over the WHOLE distribution, so a shape change
     between percentiles (bimodality, a new spike) that leaves p25/p50/p75
     untouched still registers.
@@ -479,7 +287,7 @@ def ks_statistic_by_partition(
     the same proportion-not-mass argument as categorical_tv's pre-scale).
 
     ``baseline`` is a bounded REFERENCE SAMPLE (the same contract as the
-    DriftCheck's t-digest baseline): its distinct values are broadcast and
+    DriftCheck's baseline sample): its distinct values are broadcast and
     replicated once per partition, so the grid carries
     |parts| × |baseline distinct| rows. The per-partition cumulative
     window sorts |part distinct + baseline distinct| rows — the exact
@@ -642,6 +450,45 @@ def embedding_centroid_drift(
     )
 
 
+def _pearson_moments(
+    df: DataFrame, x_expr: str, y_expr: str, carry: Column, by: Column
+) -> tuple[DataFrame, Column]:
+    """The exact Pearson kernel shared by :func:`correlation_by_partition`
+    and its streaming twin, ``stream_correlation_drift``: project
+    ``carry`` plus the two expressions cast to BIGINT, drop rows where
+    either is NULL, group by ``by`` and sum the five DECIMAL moments. Returns the aggregated frame (``by``'s
+    columns, n, _sx, _sy, _sxx, _syy, _sxy) and the float64 ``corr``
+    expression over it — NULL for n < 2 or zero variance on either side."""
+    d = df.select(
+        carry,
+        F.expr(x_expr).cast("long").alias("_x"),
+        F.expr(y_expr).cast("long").alias("_y"),
+    ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
+    dec = "decimal(19,0)"
+    x, y = F.col("_x").cast(dec), F.col("_y").cast(dec)
+    m = d.groupBy(by).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(x).alias("_sx"),
+        F.sum(y).alias("_sy"),
+        F.sum(x * x).alias("_sxx"),
+        F.sum(y * y).alias("_syy"),
+        F.sum(x * y).alias("_sxy"),
+    )
+    nd = F.col("n").cast("double")
+    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
+    sxx = F.col("_sxx").cast("double")
+    syy = F.col("_syy").cast("double")
+    sxy = F.col("_sxy").cast("double")
+    num = nd * sxy - sx * sy
+    vx = nd * sxx - sx * sx
+    vy = nd * syy - sy * sy
+    corr = F.when(
+        (F.col("n") >= 2) & (vx > 0) & (vy > 0),
+        num / (F.sqrt(vx) * F.sqrt(vy)),
+    )
+    return m, corr
+
+
 def correlation_by_partition(
     df: DataFrame,
     x_expr: str,
@@ -686,33 +533,7 @@ def correlation_by_partition(
         if part_col is not None
         else F.lit("all").alias("part")
     )
-    d = df.select(
-        keys,
-        F.expr(x_expr).cast("long").alias("_x"),
-        F.expr(y_expr).cast("long").alias("_y"),
-    ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
-    dec = "decimal(19,0)"
-    x, y = F.col("_x").cast(dec), F.col("_y").cast(dec)
-    m = d.groupBy("part").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("_sx"),
-        F.sum(y).alias("_sy"),
-        F.sum(x * x).alias("_sxx"),
-        F.sum(y * y).alias("_syy"),
-        F.sum(x * y).alias("_sxy"),
-    )
-    nd = F.col("n").cast("double")
-    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    syy = F.col("_syy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    num = nd * sxy - sx * sy
-    vx = nd * sxx - sx * sx
-    vy = nd * syy - sy * sy
-    corr = F.when(
-        (F.col("n") >= 2) & (vx > 0) & (vy > 0),
-        num / (F.sqrt(vx) * F.sqrt(vy)),
-    )
+    m, corr = _pearson_moments(df, x_expr, y_expr, keys, F.col("part"))
     return m.select("part", "n", corr.alias("corr"))
 
 

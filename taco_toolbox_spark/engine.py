@@ -75,12 +75,9 @@ from .checks.drift import (
     conditional_tv,
     correlation_drift,
     correlation_drift_violations,
-    drift_violations,
     drift_violations_approx,
     exact_global_quantiles,
     exact_quantiles_by_partition,
-    global_quantiles,
-    sketch_by_partition,
     transition_counts,
     transition_drift,
     transition_drift_violations,
@@ -107,8 +104,6 @@ class EngineConfig:
     group_col: str = "conv_id"
     order_col: str = "turn_idx"
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
-    drift_salt_buckets: int = 16
-    drift_centroids: int = 128
     persist_violations: bool = False
     #: fold uniqueness of (group, order) into the window pass: a duplicate
     #: key shows up as order == lag(order), so only flagged rows are
@@ -1076,37 +1071,19 @@ def run_validation(
                     f"DriftCheck {c.check_id} has no baseline quantiles and no "
                     "baseline DataFrame was provided"
                 )
-            if c.method == "tdigest":
-                bq = global_quantiles(
-                    baseline, c.value_expr, c.probes, cfg.drift_centroids
-                )
-            elif c.method == "exact":
+            if c.method == "exact":
                 bq = exact_global_quantiles(baseline, c.value_expr, c.probes)
             else:
                 bq = approx_global_quantiles(baseline, c.value_expr, c.probes)
-        if c.method == "tdigest":
-            sk = sketch_by_partition(
-                df,
-                c.value_expr,
-                cfg.partition_col,
-                cfg.drift_centroids,
-                cfg.drift_salt_buckets,
-            )
-            pieces.append(
-                drift_violations(sk, bq, c.probes, c.threshold, c.check_id)
+        if c.method == "exact":
+            q = exact_quantiles_by_partition(
+                df, c.value_expr, c.probes, cfg.partition_col
             )
         else:
-            if c.method == "exact":
-                q = exact_quantiles_by_partition(
-                    df, c.value_expr, c.probes, cfg.partition_col
-                )
-            else:
-                q = approx_quantiles_by_partition(
-                    df, c.value_expr, c.probes, cfg.partition_col
-                )
-            pieces.append(
-                drift_violations_approx(q, bq, c.threshold, c.check_id)
+            q = approx_quantiles_by_partition(
+                df, c.value_expr, c.probes, cfg.partition_col
             )
+        pieces.append(drift_violations_approx(q, bq, c.threshold, c.check_id))
     for c in cat_drift_checks:
         bc = c.baseline_counts
         if bc is None:

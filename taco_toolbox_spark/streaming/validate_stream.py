@@ -1491,8 +1491,9 @@ def stream_correlation_drift(
     the streaming twin of ``checks.drift.correlation_drift``, completing
     the batch<->stream matrix for the numeric-RELATIONSHIP member.
 
-    Exactness discipline verbatim from the batch check
-    (``correlation_by_partition``): the five moment sums (Σx, Σy, Σx²,
+    The moments and the corr expression are the batch check's own
+    (``checks.drift._pearson_moments``, grouped here by the event-time
+    window instead of the partition): the five moment sums (Σx, Σy, Σx²,
     Σy², Σxy) accumulate as DECIMAL(38,0) from DECIMAL(19,0) per-row
     products — order-independent, overflow-free to 10^12 rows — then ONE
     float64 transition evaluates corr and delta = |corr − baseline|, so
@@ -1506,33 +1507,11 @@ def stream_correlation_drift(
     ``baseline_corr`` is a required literal (the stream cannot
     self-baseline — stream_health's contract).
     """
+    from ..checks.drift import _pearson_moments
+
     ev = _event_time(stream_df, ts_col).withWatermark(ts_col, watermark)
-    d = ev.select(
-        F.col(ts_col),
-        F.expr(x_expr).cast("long").alias("_x"),
-        F.expr(y_expr).cast("long").alias("_y"),
-    ).filter(F.col("_x").isNotNull() & F.col("_y").isNotNull())
-    dec = "decimal(19,0)"
-    x, y = F.col("_x").cast(dec), F.col("_y").cast(dec)
-    m = d.groupBy(F.window(F.col(ts_col), window)).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x).alias("_sx"),
-        F.sum(y).alias("_sy"),
-        F.sum(x * x).alias("_sxx"),
-        F.sum(y * y).alias("_syy"),
-        F.sum(x * y).alias("_sxy"),
-    )
-    nd = F.col("n").cast("double")
-    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    syy = F.col("_syy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    num = nd * sxy - sx * sy
-    vx = nd * sxx - sx * sx
-    vy = nd * syy - sy * sy
-    corr = F.when(
-        (F.col("n") >= 2) & (vx > 0) & (vy > 0),
-        num / (F.sqrt(vx) * F.sqrt(vy)),
+    m, corr = _pearson_moments(
+        ev, x_expr, y_expr, F.col(ts_col), F.window(F.col(ts_col), window)
     )
     out = m.select(
         F.col("window.start").alias("window_start"),

@@ -53,6 +53,7 @@ from __future__ import annotations
 
 import json
 import re
+import typing
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -130,8 +131,6 @@ _ENGINE_KEYS = {
     "group_col",
     "order_col",
     "key_cols",
-    "drift_salt_buckets",
-    "drift_centroids",
     "persist_violations",
     "uniqueness_via_window",
     "window_chunk_size",
@@ -393,8 +392,8 @@ def _build_check(entry: dict, where: str, reference: DataFrame | None, cfg):
         method = entry.get("method", "approx")
         if method not in ("approx", "tdigest", "exact"):
             raise SuiteError(
-                f"{where}: drift method must be approx|tdigest|exact, "
-                f"got {method!r}"
+                f"{where}: drift method must be approx|tdigest|exact "
+                f"(tdigest is an alias of approx), got {method!r}"
             )
         _sql_expr(entry["expr"], where, "expr")  # eager syntax gate only
         bq = (
@@ -683,27 +682,24 @@ def parse_suite(spec: dict, reference: DataFrame | None = None) -> Suite:
         ):
             raise SuiteError("engine: 'key_cols' must be a list of strings")
         kw["key_cols"] = tuple(kw["key_cols"])
-    # value-type gate against the dataclass defaults: a mistyped engine
-    # knob ({"drift_salt_buckets": "16"}) must fail at the suite file,
-    # not deep inside the battery at run time
-    from dataclasses import MISSING as _MISSING
-    from dataclasses import fields as _dc_fields
-
-    for f in _dc_fields(EngineConfig):
-        if f.name not in kw or f.default is _MISSING or f.default is None:
-            continue
-        want, got = type(f.default), kw[f.name]
-        if isinstance(f.default, bool):
-            ok = isinstance(got, bool)
-        elif isinstance(f.default, (int, float)):
-            ok = isinstance(got, (int, float)) and not isinstance(got, bool)
-        elif isinstance(f.default, str):
-            ok = isinstance(got, str)
-        else:
-            continue
+    # value-type gate against the dataclass annotations: a mistyped engine
+    # knob ({"window_chunk_size": "16"}) must fail at the suite file, not
+    # deep inside the battery at run time. An optional field (``int |
+    # None``) takes None or its non-None type.
+    hints = typing.get_type_hints(EngineConfig)
+    for name, got in kw.items():
+        want = hints[name]
+        args = typing.get_args(want)
+        if type(None) in args:
+            if got is None:
+                continue
+            (want,) = (a for a in args if a is not type(None))
+        if typing.get_origin(want) is not None:
+            continue  # key_cols: checked above
+        ok = isinstance(got, want) and (want is bool or not isinstance(got, bool))
         if not ok:
             raise SuiteError(
-                f"engine: {f.name!r} must be {want.__name__}, got {got!r}"
+                f"engine: {name!r} must be {want.__name__}, got {got!r}"
             )
     cfg = EngineConfig(**kw)
 
@@ -927,10 +923,10 @@ def suggest_suite(
     * ``drift`` (quantile) entries for every non-structural,
       non-constant numeric column: baseline = the corpus's own exact
       global quantiles (method "exact" — layout-independent sort-based
-      percentiles; a reviewer flips to "approx"/"tdigest" for the
-      10^12-row path), threshold calibrated the same way over the
-      observed per-partition max relative quantile deviation (the
-      enforcement pass's own ``rel_dev``). A column with a valueless
+      percentiles; a reviewer flips to "approx" for the 10^12-row
+      path), threshold calibrated the same way over the observed
+      per-partition max relative quantile deviation (the enforcement
+      pass's own ``rel_dev``). A column with a valueless
       partition is skipped: enforcement rightly fires on a NULL
       quantile vector, so no threshold can make its own source green.
     * ``cond_drift`` entries for every ordered pair of multi-category
@@ -1435,7 +1431,7 @@ def suggest_suite(
     # own EXACT global quantiles (method "exact": sort-based type-7
     # percentiles, layout-independent and DuckDB-replicable — the same
     # calibration-equals-enforcement discipline; a reviewer flips the
-    # method to "approx"/"tdigest" for the 10^12-row path after widening)
+    # method to "approx" for the 10^12-row path after widening)
     # and whose threshold is the smallest 3-decimal value (0.05 floor)
     # every observed partition's max relative quantile deviation passes,
     # computed with the enforcement pass's own rel_dev expression. A

@@ -1,59 +1,59 @@
-"""Sketch numerics (pure numpy) + Spark sketch plumbing."""
+"""Quantile drift paths (JVM percentile_approx) + KS drift."""
 
 import numpy as np
+import pandas as pd
 
 from taco_toolbox_spark.checks.drift import (
-    compress_values,
-    global_quantiles,
-    merge_centroids,
-    quantiles_from_centroids,
-    sketch_by_partition,
+    approx_global_quantiles,
+    approx_quantiles_by_partition,
 )
 
 PROBES = (0.1, 0.25, 0.5, 0.75, 0.9)
 
 
-def test_compress_quantiles_close_to_exact():
+def test_compress_quantiles_close_to_exact(spark):
     rng = np.random.default_rng(0)
     v = rng.lognormal(3, 1, 50_000)
-    means, weights, n, vmin, vmax = compress_values(v, 128)
-    assert n == v.size and vmin == v.min() and vmax == v.max()
-    q = quantiles_from_centroids(means, weights, PROBES)
+    df = spark.createDataFrame(pd.DataFrame({"v": v}))
+    q = approx_global_quantiles(df, "v", PROBES)
     exact = np.quantile(v, PROBES)
     assert np.allclose(q, exact, rtol=0.05)
 
 
-def test_merge_matches_whole():
+def test_merge_matches_whole(spark):
+    """Per-partition partial sketches merge into global quantiles close to
+    the quantiles of the concatenated values."""
     rng = np.random.default_rng(1)
     parts = [rng.normal(100, 15, 10_000) for _ in range(8)]
-    sketches = [compress_values(p, 128) for p in parts]
-    means, weights = merge_centroids(
-        [s[0] for s in sketches], [s[1] for s in sketches], 128
+    pdf = pd.DataFrame(
+        {"part": np.repeat(np.arange(8), 10_000), "v": np.concatenate(parts)}
     )
-    assert weights.sum() == sum(len(p) for p in parts)
-    q = quantiles_from_centroids(means, weights, PROBES)
+    df = spark.createDataFrame(pdf).repartitionByRange(8, "part")
+    assert df.rdd.getNumPartitions() == 8
+    assert df.count() == sum(len(p) for p in parts)
+    q = approx_global_quantiles(df, "v", PROBES)
     exact = np.quantile(np.concatenate(parts), PROBES)
     assert np.allclose(q, exact, rtol=0.03)
 
 
-def test_empty_and_single():
-    means, weights, n, vmin, vmax = compress_values(np.array([]), 16)
-    assert n == 0 and means.size == 0
-    means, weights, n, vmin, vmax = compress_values(np.array([5.0]), 16)
-    assert n == 1 and means[0] == 5.0 and weights[0] == 1
+def test_empty_and_single(spark):
+    empty = spark.createDataFrame([], "v double")
+    assert np.isnan(approx_global_quantiles(empty, "v", PROBES)).all()
+    single = spark.createDataFrame([(5.0,)], "v double")
+    assert approx_global_quantiles(single, "v", PROBES) == [5.0] * 5
 
 
 def test_spark_sketch_by_partition(corpus):
-    sk = sketch_by_partition(corpus.clean, "length(text)", "part").toPandas()
-    n_parts = corpus.clean.select("part").distinct().count()
-    assert len(sk) == n_parts
-    assert (sk["n"] > 0).all()
-    clean_n = corpus.clean.count()
-    assert sk["n"].sum() == clean_n
+    q = approx_quantiles_by_partition(
+        corpus.clean, "length(text)", PROBES, "part"
+    ).toPandas()
+    parts = {r["part"] for r in corpus.clean.select("part").distinct().collect()}
+    assert len(q) == len(parts) and set(q["part"]) == {str(p) for p in parts}
+    assert all(len(x) == len(PROBES) for x in q["q"])
 
 
 def test_global_quantiles_vs_exact(corpus, clean_pdf):
-    q = global_quantiles(corpus.clean, "length(text)", PROBES)
+    q = approx_global_quantiles(corpus.clean, "length(text)", PROBES)
     exact = np.quantile(clean_pdf["text"].str.len().to_numpy(), PROBES)
     assert np.allclose(q, exact, rtol=0.08, atol=1.5)
 

@@ -1,4 +1,4 @@
-"""GroupAggCheck + t-digest drift method through the engine."""
+"""GroupAggCheck + the "tdigest" (approx alias) drift method via the engine."""
 
 import pytest
 import pyspark.sql.functions as F

@@ -40,3 +40,33 @@ def test_engine_verdicts_matches_duckdb_oracle(spark, tmp_path):
         con.close()
     assert "text_equality" in set(spark_pdf["check_id"])
     assert compare("engine_verdicts", spark_pdf, oracle_pdf) == []
+
+
+SF0001 = "/root/testdata/sf0.001"
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(SF0001), reason="sf0.001 test tables not present"
+)
+@pytest.mark.parametrize("name", ["d5_corr_drift", "stream_corr_drift"])
+def test_corr_drift_matches_duckdb_oracle(spark, name):
+    """The batch and streaming Pearson drift queries share one moment
+    kernel (checks/drift.py:_pearson_moments); both must still reproduce
+    their DuckDB oracles bit-for-bit on the sf0.001 tables (TESTDATA.md)."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as entrymod
+
+    check_oracle = _check_oracle()
+    spark_pdf = entrymod.queries()[name](spark, SF0001).toPandas()
+    con = duckdb.connect()
+    try:
+        for t in check_oracle.TABLES:
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{SF0001}/{t}.parquet')"
+            )
+        oracle_pdf = con.execute(entrymod.oracle_sql()[name]).df()
+    finally:
+        con.close()
+    assert len(spark_pdf) > 0
+    assert check_oracle.compare(name, spark_pdf, oracle_pdf) == []

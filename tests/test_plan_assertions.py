@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from taco_toolbox_spark.checks import transcript_checks
+from taco_toolbox_spark.checks.base import DriftCheck
 from taco_toolbox_spark.checks.text_equality import text_equality_violations
 from taco_toolbox_spark.engine import EngineConfig, run_validation
 from taco_toolbox_spark.schema import literal_frame
@@ -155,6 +156,20 @@ def test_batch_battery_has_no_python_eval(te_inputs, corpus):
         plan = _plan(df)
         found = [n for n in PYTHON_EVAL_NODES if n in plan]
         assert not found, f"{name} plans {found}"
+
+
+@pytest.mark.parametrize("method", ["approx", "tdigest"])
+def test_drift_check_has_no_python_eval(corpus, method):
+    """Both quantile drift methods plan as JVM percentile_approx
+    aggregations: "tdigest" is an alias of "approx", not a pandas sketch."""
+    check = DriftCheck(
+        check_id="len_drift", value_expr="length(text)", method=method
+    )
+    res = run_validation(corpus.corrupted, [check], baseline=corpus.clean)
+    plan = _plan(res.violations)
+    found = [n for n in PYTHON_EVAL_NODES if n in plan]
+    assert not found, f"drift method {method!r} plans {found}"
+    assert "percentile_approx" in plan
 
 
 # ---------------------------------------------------------------------------

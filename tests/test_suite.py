@@ -4,6 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from taco_toolbox_spark.checks import transcript_checks
+from taco_toolbox_spark.checks.base import DriftCheck
 from taco_toolbox_spark.engine import run_validation
 from taco_toolbox_spark.suite import (
     Suite,
@@ -278,7 +279,7 @@ def test_suite_engine_config_applies(spark):
         ({"checks": [{"type": "cat_drift", "id": "x", "col": "c",
                       "baseline_counts": [1, 2]}]}, "object"),
         # mistyped engine knobs fail at the file, not inside the battery
-        ({"engine": {"drift_salt_buckets": "16"}, "checks": []},
+        ({"engine": {"window_chunk_size": "16"}, "checks": []},
          "must be int"),
         ({"engine": {"key_cols": "conv_id"}, "checks": []},
          "list of strings"),
@@ -287,11 +288,24 @@ def test_suite_engine_config_applies(spark):
                       "dependent": ["role"]}]}, "vacuous"),
         ({"checks": [{"type": "fd", "id": "x", "determinant": ["part"],
                       "dependent": ["role"]}]}, "partition column"),
+        # a key EngineConfig does not have is refused, not ignored
+        ({"engine": {"drift_salt_buckets": 16}, "checks": []},
+         "unknown keys"),
     ],
 )
 def test_suite_validation_gates(spark, spec, frag):
     with pytest.raises(SuiteError, match=frag):
         parse_suite(spec)
+
+
+def test_suite_tdigest_method_parses_as_drift_check(spark):
+    """``"method": "tdigest"`` is an alias of approx: it still parses to a
+    DriftCheck, and the dump keeps the string the suite declared."""
+    suite = parse_suite({"checks": [{"type": "drift", "id": "x",
+                                     "expr": "1", "method": "tdigest"}]})
+    [c] = suite.checks
+    assert isinstance(c, DriftCheck) and c.method == "tdigest"
+    assert suite.dump()["checks"][0]["method"] == "tdigest"
 
 
 def test_suggest_suite_draft_contract(spark, corpus):
