@@ -12,12 +12,14 @@ compiles the whole battery into a minimal number of Spark passes:
   * all RowChecks    -> ONE projection over the scan (no shuffle)
   * all MonotoneChecks -> ONE window pass (single shuffle on the group key)
   * Uniqueness/Contiguity/GroupAgg -> ONE aggregation pass (same key)
-  * DriftCheck       -> two-phase mergeable sketch (salted partial merge)
-  * TextEqualityCheck -> one join + vectorized pandas UDF
+  * DriftCheck       -> percentile_approx / percentile per partition
+  * TextEqualityCheck -> one key join + JVM null-safe <=> filter
 
 so adding a check never adds a scan. Violations are *rows*, not exceptions:
 (part, check_id, conv_id, turn_idx, detail) — the set-oriented equivalent
-of the reference's error reports.
+of the reference's error reports. Every pass builds them with the helpers
+at the end of this module (:func:`failed_check`,
+:func:`explode_failures`, :func:`violation_rows`).
 """
 
 from __future__ import annotations
@@ -599,8 +601,9 @@ class DriftCheck(Check):
 @dataclass
 class TextEqualityCheck(Check):
     """Per-turn text equality against a clean reference copy under stable
-    (conv_id, turn_idx) ordering (BASELINE input_hint), via a vectorized
-    pandas UDF. ``reference`` must contain the key columns + ``text_col``."""
+    (conv_id, turn_idx) ordering (BASELINE input_hint), judged by the JVM
+    null-safe ``<=>``. ``reference`` must contain the key columns +
+    ``text_col``."""
 
     reference: DataFrame | None = None
     text_col: str = "text"
@@ -748,36 +751,86 @@ def embedding_checks(
     return checks
 
 
-def apply_row_checks(
-    df: DataFrame, checks: Sequence[RowCheck], id_cols: Sequence[str]
+# ---------------------------------------------------------------------------
+# violation rows: every pass (batch engine, drift judges, streaming row
+# pass) builds its output through these helpers
+# ---------------------------------------------------------------------------
+
+#: column order of a violation row
+VIOLATION_COLS = ("part", "check_id", "conv_id", "turn_idx", "detail")
+
+
+def failed_check(
+    check_id: str, bad: Column, detail: Column, *extra: Column
+) -> Column:
+    """One rule's failed-check struct on one row: ``(check_id, detail,
+    *extra)`` where ``bad`` holds, NULL where it does not. ``extra`` are
+    aliased fields a pass knows only per rule (an endpoint rule's own
+    ``turn_idx``)."""
+    return F.when(
+        bad,
+        F.struct(
+            F.lit(check_id).alias("check_id"),
+            detail.cast("string").alias("detail"),
+            *extra,
+        ),
+    )
+
+
+def explode_failures(
+    frame: DataFrame, structs: Sequence[Column], *coords: Column | str
 ) -> DataFrame:
-    """Run a RowCheck battery on any frame WITHOUT the engine's partition
-    scaffolding — for tables that have no partition/conversation shape
-    (an embeddings table keyed by vec_id). Same compiled form as the
-    engine's row pass: a cheap codegen'd OR-chain prefilter narrows to the
-    violating sliver first (and is scan-pushdown-eligible), then one
-    shuffle-free projection builds the array_compact of failed-check
-    structs, exploded to ``(*id_cols, check_id, detail)``."""
+    """Project ``coords`` beside the array_compact of the failed-check
+    ``structs``, drop the rows where nothing failed, and explode one row
+    per failed check: ``(*coords, f)``, with the struct as ``f``."""
+    fails = frame.select(
+        *coords, F.array_compact(F.array(*structs)).alias("fails")
+    ).filter(F.size("fails") > 0)
+    return fails.select("*", F.explode("fails").alias("f")).drop("fails")
+
+
+def violation_rows(
+    frame: DataFrame,
+    check_id: str | Column,
+    detail: Column,
+    part: Column | str = "part",
+    conv: Column | None = None,
+    turn: Column | None = None,
+) -> DataFrame:
+    """One violation row per ``frame`` row, typed and ordered as
+    :data:`VIOLATION_COLS`; a coordinate the pass has none of
+    (partition-grain drift and health rows) is NULL."""
+    null = F.lit(None)
+    return frame.select(
+        (F.col(part) if isinstance(part, str) else part)
+        .cast("string")
+        .alias("part"),
+        (F.lit(check_id) if isinstance(check_id, str) else check_id).alias(
+            "check_id"
+        ),
+        (null if conv is None else conv).cast("string").alias("conv_id"),
+        (null if turn is None else turn).cast("int").alias("turn_idx"),
+        detail.cast("string").alias("detail"),
+    )
+
+
+def apply_row_checks(
+    df: DataFrame, checks: Sequence[RowCheck], id_cols: Sequence[Column | str]
+) -> DataFrame:
+    """THE row pass — the batch engine's, the stream's, and the one for
+    tables with no partition/conversation shape (an embeddings table keyed
+    by vec_id). A cheap codegen'd OR-chain prefilter narrows to the
+    violating sliver first (and is scan-pushdown-eligible), so struct
+    allocation and detail formatting never touch passing rows; then one
+    shuffle-free projection of failed-check structs, exploded to
+    ``(*id_cols, check_id, detail)``. ``id_cols`` are names or aliased
+    columns."""
     any_bad = F.lit(False)
     for c in checks:
         any_bad = any_bad | ~c.holds()
-    df = df.filter(any_bad)
-    structs = [
-        F.when(
-            ~c.holds(),
-            F.struct(
-                F.lit(c.check_id).alias("check_id"),
-                c.detail_col().cast("string").alias("detail"),
-            ),
-        )
-        for c in checks
-    ]
-    fails = df.select(
-        *id_cols, F.array_compact(F.array(*structs)).alias("fails")
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        *id_cols, F.explode("fails").alias("f")
-    ).select(*id_cols, "f.check_id", "f.detail")
+    structs = [failed_check(c.check_id, ~c.holds(), c.detail_col()) for c in checks]
+    rows = explode_failures(df.filter(any_bad), structs, *id_cols)
+    return rows.select(*rows.columns[:-1], "f.check_id", "f.detail")
 
 
 # ---------------------------------------------------------------------------

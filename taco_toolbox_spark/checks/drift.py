@@ -26,6 +26,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .base import violation_rows
+
 #: one floor for relative deviation everywhere (batch exact, batch approx,
 #: streaming) — a baseline quantile below 1 must not inflate the denominator.
 REL_DEV_FLOOR = 1e-12
@@ -118,16 +120,14 @@ def drift_violations_approx(
         F.transform(F.col("q"), lambda x: F.round(x, 2)).alias("q_r"),
     ).filter(F.col("dist").isNull() | F.isnan("dist") | (F.col("dist") > threshold))
     base_r = [round(float(b), 2) for b in baseline_quantiles]
-    return judged.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        judged,
+        check_id,
         F.format_string(
             f"max_rel_quantile_dist=%s > {threshold} (quantiles=%s baseline={base_r})",
             F.round("dist", 4).cast("string"),
             F.col("q_r").cast("string"),
-        ).alias("detail"),
+        ),
     )
 
 
@@ -244,15 +244,13 @@ def categorical_drift_violations(
     """Violation rows (engine schema) for partitions whose TV distance
     exceeds the threshold."""
     judged = tv.filter(F.col("tv") > threshold)
-    return judged.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        judged,
+        check_id,
         F.format_string(
             f"categorical_tv=%s > {threshold}",
             F.round("tv", 6).cast("string"),
-        ).alias("detail"),
+        ),
     )
 
 
@@ -355,15 +353,13 @@ def ks_drift_violations(
     """Violation rows (engine schema) for partitions whose KS statistic
     exceeds the threshold."""
     judged = ks.filter(F.col("ks") > threshold)
-    return judged.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        judged,
+        check_id,
         F.format_string(
             f"ks=%s > {threshold}",
             F.round("ks", 6).cast("string"),
-        ).alias("detail"),
+        ),
     )
 
 
@@ -590,11 +586,9 @@ def correlation_drift_violations(
         (F.col("delta") > threshold)
         | (F.col("corr").isNull() & F.col("corr_base").isNotNull())
     )
-    return fired.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        fired,
+        check_id,
         F.when(
             F.col("corr").isNull(),
             F.format_string(
@@ -610,8 +604,7 @@ def correlation_drift_violations(
                 F.round("corr", 6).cast("string"),
                 F.round("corr_base", 6).cast("string"),
             )
-        )
-        .alias("detail"),
+        ),
     )
 
 
@@ -757,11 +750,9 @@ def conditional_drift_violations(
     from the baseline — or whose conditioning value the baseline has never
     seen (tv NULL: no distribution to compare against)."""
     fired = ct.filter((F.col("tv") > threshold) | F.col("tv").isNull())
-    return fired.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        fired,
+        check_id,
         F.when(
             F.col("tv").isNull(),
             F.format_string(
@@ -776,8 +767,7 @@ def conditional_drift_violations(
                 F.round("tv", 6).cast("string"),
                 F.col("cond"),
             )
-        )
-        .alias("detail"),
+        ),
     )
 
 
@@ -951,11 +941,9 @@ def transition_drift_violations(
     TV from the baseline — or whose from-state the baseline has never seen
     (tv NULL: no transition row to compare against)."""
     fired = td.filter((F.col("tv") > threshold) | F.col("tv").isNull())
-    return fired.select(
-        F.col("part"),
-        F.lit(check_id).alias("check_id"),
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
+    return violation_rows(
+        fired,
+        check_id,
         F.when(
             F.col("tv").isNull(),
             F.format_string(
@@ -970,6 +958,5 @@ def transition_drift_violations(
                 F.round("tv", 6).cast("string"),
                 F.col("from_state"),
             )
-        )
-        .alias("detail"),
+        ),
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .base import violation_rows
+
 
 def text_equality_violations(
     df: DataFrame,
@@ -59,11 +61,9 @@ def text_equality_violations(
         bad = joined.filter(
             F.col("_ref_present").isNull() | ~c.eqNullSafe(F.col("_ref_text"))
         )
-        return bad.select(
-            F.col(partition_col).alias("part"),
-            F.lit(check_id).alias("check_id"),
-            F.col(keys[0]).cast("string").alias("conv_id"),
-            F.col(keys[1]).cast("int").alias("turn_idx"),
+        return violation_rows(
+            bad,
+            check_id,
             F.when(F.col("_ref_present").isNull(), F.lit("no reference row"))
             .otherwise(
                 F.format_string(
@@ -73,8 +73,10 @@ def text_equality_violations(
                         F.coalesce(F.col("_ref_text"), F.lit("<null>")), 1, 60
                     ),
                 )
-            )
-            .alias("detail"),
+            ),
+            part=partition_col,
+            conv=F.col(keys[0]),
+            turn=F.col(keys[1]),
         )
 
     if colocated:

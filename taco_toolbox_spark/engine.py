@@ -3,8 +3,10 @@ set of Spark passes and emits (verdict matrix, violation rows, stats).
 
 Pass plan (the scale story — adding checks never adds scans):
 
-  row pass      all RowChecks in ONE shuffle-free projection: per row an
-                array of failed-check structs, array_compact + explode.
+  row pass      all RowChecks in ONE shuffle-free projection
+                (checks/base.apply_row_checks, also the streaming row
+                pass): an OR-chain prefilter, then per row an array of
+                failed-check structs, array_compact + explode.
                 Filters/column pruning push to the parquet/Iceberg scan.
   window pass   all MonotoneChecks + GapChecks (bounded adjacent step) +
                 SequenceChecks (adjacent-pair grammar) over ONE window
@@ -16,12 +18,17 @@ Pass plan (the scale story — adding checks never adds scans):
                 value run bound) stack two Window selects (gaps-and-
                 islands) on that exchange with one sort; PeriodicLoopChecks
                 (period-p ping-pong bound) stack three the same way.
-  agg pass      Uniqueness on the full key (fine-grained → no hot key);
-                Contiguity + GroupAggChecks share ONE groupBy(group) agg
-                (Spark's partial aggregation = map-side combine).
-  drift pass    two-phase salted sketch merge (checks/drift.py);
-                categorical drift = one grouped count + broadcast grid
-                joins, TV distance exact in integer arithmetic.
+  agg pass      Uniqueness of the (group, order) key rides the shared
+                window sort (a duplicate is order == lag(order)) when
+                windows are not chunked; any other key, or chunked
+                windows, count on the full key (fine-grained → no hot
+                key). Contiguity + GroupAggChecks share ONE
+                groupBy(group) agg (Spark's partial aggregation =
+                map-side combine).
+  drift pass    percentile_approx (or percentile for method="exact") per
+                partition (checks/drift.py); categorical drift = one
+                grouped count + broadcast grid joins, TV distance exact
+                in integer arithmetic.
   text pass     key join + JVM null-safe <=> filter, no Python
                 (checks/text_equality.py).
 
@@ -37,10 +44,11 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .checks.base import (
+    VIOLATION_COLS,
     CardinalityAnomalyCheck,
     CategoricalDriftCheck,
     Check,
@@ -62,6 +70,10 @@ from .checks.base import (
     TransitionDriftCheck,
     UniquenessCheck,
     VolumeAnomalyCheck,
+    apply_row_checks,
+    explode_failures,
+    failed_check,
+    violation_rows,
 )
 from .checks.fd import fd_violations
 from .checks.drift import (
@@ -85,7 +97,16 @@ from .checks.drift import (
 from .checks.text_equality import text_equality_violations
 from .schema import literal_frame
 
-VIOLATION_COLS = ("part", "check_id", "conv_id", "turn_idx", "detail")
+
+#: every Check class some pass compiles; run_validation refuses any other
+_COMPILED = (
+    RowCheck, MonotoneCheck, GapCheck, SequenceCheck, RateCheck,
+    RunLengthCheck, PeriodicLoopCheck, UniquenessCheck,
+    FunctionalDependencyCheck, ContiguityCheck, GroupAggCheck, DriftCheck,
+    CategoricalDriftCheck, CorrelationDriftCheck, ConditionalDriftCheck,
+    TransitionDriftCheck, TextEqualityCheck, VolumeAnomalyCheck,
+    CompletenessDriftCheck, CardinalityAnomalyCheck,
+)
 
 
 @dataclass
@@ -105,10 +126,6 @@ class EngineConfig:
     order_col: str = "turn_idx"
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx")
     persist_violations: bool = False
-    #: fold uniqueness of (group, order) into the window pass: a duplicate
-    #: key shows up as order == lag(order), so only flagged rows are
-    #: aggregated — avoids shuffling every row by the full key.
-    uniqueness_via_window: bool = True
     #: when set, window passes partition by (group, floor(order/chunk)) so a
     #: pathologically hot conversation (10^7+ turns) never lands on one
     #: task; chunk-boundary rows are reconciled with a tiny join of
@@ -191,46 +208,39 @@ def assert_groups_nested(df: DataFrame, cfg: EngineConfig) -> None:
         )
 
 
-def _viol(cfg: EngineConfig, df: DataFrame, check_id, detail, conv=None, turn=None):
-    return df.select(
+def _row_coords(cfg: EngineConfig) -> tuple[Column, Column, Column]:
+    """A row-grain violation's coordinates, typed as VIOLATION_COLS."""
+    return (
         F.col(cfg.partition_col).cast("string").alias("part"),
-        (F.lit(check_id) if isinstance(check_id, str) else check_id).alias("check_id"),
-        (F.col(cfg.group_col) if conv is None else conv).cast("string").alias("conv_id"),
-        (F.col(cfg.order_col) if turn is None else turn).cast("int").alias("turn_idx"),
-        detail.cast("string").alias("detail"),
+        F.col(cfg.group_col).cast("string").alias("conv_id"),
+        F.col(cfg.order_col).cast("int").alias("turn_idx"),
+    )
+
+
+def _emit(
+    frame: DataFrame,
+    structs: list[Column],
+    part: Column,
+    conv: Column | None = None,
+    turn: Column | None = None,
+) -> DataFrame:
+    """Violation rows of one pass: the aliased coordinates are projected
+    beside the failed-check structs, one row per failed check; a
+    coordinate the pass has none of is NULL."""
+    rows = explode_failures(
+        frame, structs, *[c for c in (part, conv, turn) if c is not None]
+    )
+    return violation_rows(
+        rows,
+        F.col("f.check_id"),
+        F.col("f.detail"),
+        conv=None if conv is None else F.col("conv_id"),
+        turn=None if turn is None else F.col("turn_idx"),
     )
 
 
 def _row_pass(df: DataFrame, checks: list[RowCheck], cfg: EngineConfig) -> DataFrame:
-    # two-step: a cheap codegen'd boolean OR-chain filters down to the
-    # violating sliver (~0.1% of rows) BEFORE any struct/array allocation or
-    # detail formatting — the allocation-heavy projection never touches
-    # passing rows. The boolean filter also pushes partially into the scan.
-    any_fail = F.lit(False)
-    for c in checks:
-        any_fail = any_fail | ~c.holds()
-    sliver = df.filter(any_fail)
-    structs = [
-        F.when(
-            ~c.holds(),
-            F.struct(
-                F.lit(c.check_id).alias("check_id"), c.detail_col().alias("detail")
-            ),
-        )
-        for c in checks
-    ]
-    fails = sliver.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.col(cfg.order_col).cast("int").alias("turn_idx"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part",
-        F.explode("fails").alias("f"),
-        "conv_id",
-        "turn_idx",
-    ).select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+    return apply_row_checks(df, checks, _row_coords(cfg)).select(*VIOLATION_COLS)
 
 
 def _adjacent_fail(c, prev, cur) -> F.Column:
@@ -269,31 +279,26 @@ def _adjacent_fail(c, prev, cur) -> F.Column:
             prev.cast("string"),
             cur.cast("string"),
         )
-    return F.when(
-        bad,
-        F.struct(F.lit(c.check_id).alias("check_id"), detail.alias("detail")),
-    )
+    return failed_check(c.check_id, bad, detail)
 
 
 def _window_pass(
-    df: DataFrame, checks: list[MonotoneCheck | GapCheck | SequenceCheck], cfg: EngineConfig
+    df: DataFrame,
+    checks: list[MonotoneCheck | GapCheck | SequenceCheck],
+    cfg: EngineConfig,
+    *chunk_key: str,
 ) -> DataFrame:
     # keyed (partition, group) like every other pass: one shared exchange,
-    # and attribution stays correct even if a group spans partitions
-    w = Window.partitionBy(cfg.partition_col, cfg.group_col).orderBy(cfg.order_col)
-    structs = []
-    for c in checks:
-        prev = F.lag(F.col(c.value_col)).over(w)
-        structs.append(_adjacent_fail(c, prev, c.value_col))
-    fails = df.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.col(cfg.order_col).cast("int").alias("turn_idx"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part", F.explode("fails").alias("f"), "conv_id", "turn_idx"
-    ).select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+    # and attribution stays correct even if a group spans partitions; the
+    # chunked pass adds its order-chunk key
+    w = Window.partitionBy(cfg.partition_col, cfg.group_col, *chunk_key).orderBy(
+        cfg.order_col
+    )
+    structs = [
+        _adjacent_fail(c, F.lag(F.col(c.value_col)).over(w), c.value_col)
+        for c in checks
+    ]
+    return _emit(df, structs, *_row_coords(cfg))
 
 
 def _rate_pass(
@@ -321,24 +326,8 @@ def _rate_pass(
             f"%s rows in trailing {c.seconds}s > {c.max_events}",
             n.cast("string"),
         )
-        structs.append(
-            F.when(
-                bad,
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    detail.alias("detail"),
-                ),
-            )
-        )
-    fails = df.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.col(cfg.order_col).cast("int").alias("turn_idx"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part", F.explode("fails").alias("f"), "conv_id", "turn_idx"
-    ).select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+        structs.append(failed_check(c.check_id, bad, detail))
+    return _emit(df, structs, *_row_coords(cfg))
 
 
 def _runlength_pass(
@@ -387,24 +376,8 @@ def _runlength_pass(
             f"{c.value_col} run position %s > {c.max_run}",
             pos.cast("string"),
         )
-        structs.append(
-            F.when(
-                pos > F.lit(int(c.max_run)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    detail.alias("detail"),
-                ),
-            )
-        )
-    fails = marked.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.col(cfg.order_col).cast("int").alias("turn_idx"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part", F.explode("fails").alias("f"), "conv_id", "turn_idx"
-    ).select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+        structs.append(failed_check(c.check_id, pos > F.lit(int(c.max_run)), detail))
+    return _emit(marked, structs, *_row_coords(cfg))
 
 
 def _periodic_pass(
@@ -465,24 +438,8 @@ def _periodic_pass(
             f"{c.max_reps} reps",
             stretch.cast("string"),
         )
-        structs.append(
-            F.when(
-                bad,
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    detail.alias("detail"),
-                ),
-            )
-        )
-    fails = marked.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.col(cfg.order_col).cast("int").alias("turn_idx"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part", F.explode("fails").alias("f"), "conv_id", "turn_idx"
-    ).select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+        structs.append(failed_check(c.check_id, bad, detail))
+    return _emit(marked, structs, *_row_coords(cfg))
 
 
 def _window_pass_chunked(
@@ -495,25 +452,7 @@ def _window_pass_chunked(
     first value (a join over n_chunks rows — negligible)."""
     chunk = cfg.window_chunk_size
     dfc = df.withColumn("_chunk", F.floor(F.col(cfg.order_col) / chunk))
-    w = Window.partitionBy(cfg.partition_col, cfg.group_col, "_chunk").orderBy(
-        cfg.order_col
-    )
-
-    structs = []
-    for c in checks:
-        prev = F.lag(F.col(c.value_col)).over(w)
-        structs.append(_adjacent_fail(c, prev, c.value_col))
-    in_chunk = (
-        dfc.select(
-            F.col(cfg.partition_col).cast("string").alias("part"),
-            F.col(cfg.group_col).cast("string").alias("conv_id"),
-            F.col(cfg.order_col).cast("int").alias("turn_idx"),
-            F.array_compact(F.array(*structs)).alias("fails"),
-        )
-        .filter(F.size("fails") > 0)
-        .select("part", F.explode("fails").alias("f"), "conv_id", "turn_idx")
-        .select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
-    )
+    in_chunk = _window_pass(dfc, checks, cfg, "_chunk")
 
     # boundary reconciliation: per chunk, first/last value of each checked
     # column; compare chunk c's last against chunk c+1's first
@@ -548,16 +487,12 @@ def _window_pass_chunked(
     for c in checks:
         last, nfirst = F.col(f"_last_{c.check_id}"), F.col(f"_next_first_{c.check_id}")
         bstructs.append(_adjacent_fail(c, last, nfirst))
-    boundary = (
-        joined.select(
-            F.col("_next_part").alias("part"),
-            F.col(cfg.group_col).cast("string").alias("conv_id"),
-            F.col("_next_first_key")[cfg.order_col].cast("int").alias("turn_idx"),
-            F.array_compact(F.array(*bstructs)).alias("fails"),
-        )
-        .filter(F.size("fails") > 0)
-        .select("part", F.explode("fails").alias("f"), "conv_id", "turn_idx")
-        .select("part", "f.check_id", "conv_id", "turn_idx", "f.detail")
+    boundary = _emit(
+        joined,
+        bstructs,
+        F.col("_next_part").alias("part"),
+        F.col(cfg.group_col).cast("string").alias("conv_id"),
+        F.col("_next_first_key")[cfg.order_col].cast("int").alias("turn_idx"),
     )
     return in_chunk.unionAll(boundary)
 
@@ -611,45 +546,43 @@ def _seq_endpoint_pass(
             v = F.col(f"_v{kind[0]}_{c.check_id}")
             ok = F.coalesce(v.isin(list(vocab)), F.lit(False))
             structs.append(
-                F.when(
+                failed_check(
+                    c.check_id,
                     ~ok,
-                    F.struct(
-                        F.lit(c.check_id).alias("check_id"),
-                        F.format_string(
-                            f"{kind} {c.value_col} not in {sorted(vocab)}: %s",
-                            F.coalesce(v.cast("string"), F.lit("null")),
-                        ).alias("detail"),
-                        F.col(idx).cast("int").alias("turn_idx"),
+                    F.format_string(
+                        f"{kind} {c.value_col} not in {sorted(vocab)}: %s",
+                        F.coalesce(v.cast("string"), F.lit("null")),
                     ),
+                    F.col(idx).cast("int").alias("turn_idx"),
                 )
             )
-    fails = g.select(
-        "part",
-        "conv_id",
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        "part", F.explode("fails").alias("f"), "conv_id"
-    ).select("part", "f.check_id", "conv_id", "f.turn_idx", "f.detail")
+    return violation_rows(
+        explode_failures(g, structs, "part", "conv_id"),
+        F.col("f.check_id"),
+        F.col("f.detail"),
+        conv=F.col("conv_id"),
+        turn=F.col("f.turn_idx"),
+    )
+
+
+def _duplicate_rows(dups: DataFrame, check, cfg: EngineConfig, keys) -> DataFrame:
+    """One violation row per duplicated key of ``dups``, with its count."""
+    return violation_rows(
+        dups,
+        check.check_id,
+        F.format_string("duplicate key (n=%s)", F.col("count").cast("string")),
+        part=F.col(cfg.partition_col),
+        conv=F.col(keys[0]),
+        turn=F.col(keys[1]) if len(keys) > 1 else None,
+    )
 
 
 def _uniqueness_pass(
     df: DataFrame, check: UniquenessCheck, cfg: EngineConfig
 ) -> DataFrame:
     keys = list(check.keys or cfg.key_cols)
-    dups = (
-        df.groupBy(cfg.partition_col, *keys)
-        .count()
-        .filter(F.col("count") > 1)
-    )
-    return _viol(
-        cfg,
-        dups,
-        check.check_id,
-        F.format_string("duplicate key (n=%s)", F.col("count").cast("string")),
-        conv=F.col(keys[0]),
-        turn=F.col(keys[1]) if len(keys) > 1 else F.lit(None),
-    )
+    dups = df.groupBy(cfg.partition_col, *keys).count().filter(F.col("count") > 1)
+    return _duplicate_rows(dups, check, cfg, keys)
 
 
 def _uniqueness_via_window(
@@ -666,12 +599,7 @@ def _uniqueness_via_window(
         .groupBy(cfg.partition_col, cfg.group_col, cfg.order_col)
         .agg((F.count(F.lit(1)) + 1).alias("count"))
     )
-    return _viol(
-        cfg,
-        flagged,
-        check.check_id,
-        F.format_string("duplicate key (n=%s)", F.col("count").cast("string")),
-    )
+    return _duplicate_rows(flagged, check, cfg, (cfg.group_col, cfg.order_col))
 
 
 def _fd_pass(
@@ -698,8 +626,7 @@ def _fd_pass(
             for c in check.determinant
         ],
     )
-    return _viol(
-        cfg,
+    return violation_rows(
         viol,
         check.check_id,
         F.format_string(
@@ -712,8 +639,8 @@ def _fd_pass(
             F.col("variant_min"),
             F.col("variant_max"),
         ),
+        part=F.col(cfg.partition_col),
         conv=det_vals,
-        turn=F.lit(None),
     )
 
 
@@ -758,44 +685,27 @@ def _group_agg_pass(
         mn, mx = F.col(f"_{c.check_id}_mn"), F.col(f"_{c.check_id}_mx")
         ok = (mn == 0) & (mx == n - 1) & (nd == n)
         structs.append(
-            F.when(
+            failed_check(
+                c.check_id,
                 ~F.coalesce(ok, F.lit(False)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    F.format_string(
-                        "idx not 0..n-1: n=%s distinct=%s min=%s max=%s",
-                        n.cast("string"),
-                        nd.cast("string"),
-                        mn.cast("string"),
-                        mx.cast("string"),
-                    ).alias("detail"),
+                F.format_string(
+                    "idx not 0..n-1: n=%s distinct=%s min=%s max=%s",
+                    n.cast("string"),
+                    nd.cast("string"),
+                    mn.cast("string"),
+                    mx.cast("string"),
                 ),
             )
         )
     for c in group_checks:
         structs.append(
-            F.when(
+            failed_check(
+                c.check_id,
                 ~F.coalesce(c.predicate, F.lit(False)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    (c.detail if c.detail is not None else F.lit(c.description))
-                    .cast("string")
-                    .alias("detail"),
-                ),
+                c.detail if c.detail is not None else F.lit(c.description),
             )
         )
-    fails = agg_df.select(
-        F.col(cfg.partition_col).cast("string").alias("part"),
-        F.col(cfg.group_col).cast("string").alias("conv_id"),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select("part", F.explode("fails").alias("f"), "conv_id").select(
-        "part",
-        "f.check_id",
-        "conv_id",
-        F.lit(None).cast("int").alias("turn_idx"),
-        "f.detail",
-    )
+    return _emit(agg_df, structs, *_row_coords(cfg)[:2])
 
 
 def _health_pass(
@@ -904,9 +814,21 @@ def _health_pass(
             base = F.lit(float(c.baseline_frac))
         frame = frame.withColumn(f"_{c.check_id}_bf", base)
 
+    def band_fail(c, metric, text):
+        p = f"_{c.check_id}_"
+        return failed_check(
+            c.check_id,
+            F.coalesce(F.col(f"{p}flag"), F.lit(False)),
+            F.format_string(
+                f"{text} (med=%s mad=%s)",
+                F.col(metric).cast("string"),
+                F.col(f"{p}med").cast("string"),
+                F.col(f"{p}mad").cast("string"),
+            ),
+        )
+
     structs: list[Column] = []
     for c in vol_checks:
-        p = f"_{c.check_id}_"
         # name every configured rule part: a floor-fired row must not
         # read as a band violation
         rule = f"median±{c.k}·MAD"
@@ -917,35 +839,12 @@ def _health_pass(
         if c.max_rows is not None:
             rule += f", max_rows={c.max_rows}"
         structs.append(
-            F.when(
-                F.coalesce(F.col(f"{p}flag"), F.lit(False)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    F.format_string(
-                        f"partition_rows=%s violates volume rule [{rule}] "
-                        "(med=%s mad=%s)",
-                        F.col("n").cast("string"),
-                        F.col(f"{p}med").cast("string"),
-                        F.col(f"{p}mad").cast("string"),
-                    ).alias("detail"),
-                ),
-            )
+            band_fail(c, "n", f"partition_rows=%s violates volume rule [{rule}]")
         )
     for c in card_checks:
-        p = f"_{c.check_id}_"
         structs.append(
-            F.when(
-                F.coalesce(F.col(f"{p}flag"), F.lit(False)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    F.format_string(
-                        f"n_distinct=%s outside median±{c.k}·MAD "
-                        "(med=%s mad=%s)",
-                        F.col(f"d_{c.check_id}").cast("string"),
-                        F.col(f"{p}med").cast("string"),
-                        F.col(f"{p}mad").cast("string"),
-                    ).alias("detail"),
-                ),
+            band_fail(
+                c, f"d_{c.check_id}", f"n_distinct=%s outside median±{c.k}·MAD"
             )
         )
     for c in comp_checks:
@@ -954,28 +853,17 @@ def _health_pass(
             F.col(f"{p}nf") - F.col(f"{p}bf")
         ) > F.lit(float(c.tol))
         structs.append(
-            F.when(
+            failed_check(
+                c.check_id,
                 F.coalesce(drifted, F.lit(False)),
-                F.struct(
-                    F.lit(c.check_id).alias("check_id"),
-                    F.format_string(
-                        f"null_frac=%s vs baseline=%s (|delta| > {c.tol})",
-                        F.round(f"{p}nf", 6).cast("string"),
-                        F.round(f"{p}bf", 6).cast("string"),
-                    ).alias("detail"),
+                F.format_string(
+                    f"null_frac=%s vs baseline=%s (|delta| > {c.tol})",
+                    F.round(f"{p}nf", 6).cast("string"),
+                    F.round(f"{p}bf", 6).cast("string"),
                 ),
             )
         )
-    fails = frame.select(
-        "part", F.array_compact(F.array(*structs)).alias("fails")
-    ).filter(F.size("fails") > 0)
-    return fails.select("part", F.explode("fails").alias("f")).select(
-        "part",
-        "f.check_id",
-        F.lit(None).cast("string").alias("conv_id"),
-        F.lit(None).cast("int").alias("turn_idx"),
-        "f.detail",
-    )
+    return _emit(frame, structs, F.col("part"))
 
 
 def run_validation(
@@ -991,37 +879,45 @@ def run_validation(
     """
     cfg = cfg or EngineConfig()
     spark = df.sparkSession
+    unsupported = [c for c in checks if not isinstance(c, _COMPILED)]
+    if unsupported:
+        raise ValueError(
+            "unsupported checks "
+            f"{[(c.check_id, type(c).__name__) for c in unsupported]}: no "
+            "pass compiles them; every entry in `checks` must be one of "
+            + ", ".join(t.__name__ for t in _COMPILED)
+        )
 
-    row_checks = [c for c in checks if isinstance(c, RowCheck)]
-    mono_checks = [c for c in checks if isinstance(c, MonotoneCheck)]
-    gap_checks = [c for c in checks if isinstance(c, GapCheck)]
-    rate_checks = [c for c in checks if isinstance(c, RateCheck)]
-    run_checks = [c for c in checks if isinstance(c, RunLengthCheck)]
-    loop_checks = [c for c in checks if isinstance(c, PeriodicLoopCheck)]
-    seq_checks = [c for c in checks if isinstance(c, SequenceCheck)]
-    uniq_checks = [c for c in checks if isinstance(c, UniquenessCheck)]
-    fd_checks = [c for c in checks if isinstance(c, FunctionalDependencyCheck)]
-    contig_checks = [c for c in checks if isinstance(c, ContiguityCheck)]
-    group_checks = [c for c in checks if isinstance(c, GroupAggCheck)]
-    drift_checks = [c for c in checks if isinstance(c, DriftCheck)]
-    cat_drift_checks = [c for c in checks if isinstance(c, CategoricalDriftCheck)]
-    corr_drift_checks = [
-        c for c in checks if isinstance(c, CorrelationDriftCheck)
-    ]
-    cond_drift_checks = [
-        c for c in checks if isinstance(c, ConditionalDriftCheck)
-    ]
-    trans_drift_checks = [
-        c for c in checks if isinstance(c, TransitionDriftCheck)
-    ]
-    text_checks = [c for c in checks if isinstance(c, TextEqualityCheck)]
-    vol_checks = [c for c in checks if isinstance(c, VolumeAnomalyCheck)]
-    comp_checks = [
-        c for c in checks if isinstance(c, CompletenessDriftCheck)
-    ]
-    card_checks = [
-        c for c in checks if isinstance(c, CardinalityAnomalyCheck)
-    ]
+    def of(cls):
+        return [c for c in checks if isinstance(c, cls)]
+
+    def need_baseline(c, what):
+        if baseline is None:
+            raise ValueError(
+                f"{type(c).__name__} {c.check_id} has no {what} and no "
+                "baseline DataFrame was provided"
+            )
+
+    row_checks = of(RowCheck)
+    mono_checks = of(MonotoneCheck)
+    gap_checks = of(GapCheck)
+    rate_checks = of(RateCheck)
+    run_checks = of(RunLengthCheck)
+    loop_checks = of(PeriodicLoopCheck)
+    seq_checks = of(SequenceCheck)
+    uniq_checks = of(UniquenessCheck)
+    fd_checks = of(FunctionalDependencyCheck)
+    contig_checks = of(ContiguityCheck)
+    group_checks = of(GroupAggCheck)
+    drift_checks = of(DriftCheck)
+    cat_drift_checks = of(CategoricalDriftCheck)
+    corr_drift_checks = of(CorrelationDriftCheck)
+    cond_drift_checks = of(ConditionalDriftCheck)
+    trans_drift_checks = of(TransitionDriftCheck)
+    text_checks = of(TextEqualityCheck)
+    vol_checks = of(VolumeAnomalyCheck)
+    comp_checks = of(CompletenessDriftCheck)
+    card_checks = of(CardinalityAnomalyCheck)
 
     pieces: list[DataFrame] = []
     if row_checks:
@@ -1050,11 +946,10 @@ def run_validation(
     if loop_checks:
         pieces.append(_periodic_pass(df, loop_checks, cfg))
     for c in uniq_checks:
-        keys = tuple(c.keys or cfg.key_cols)
-        if (
-            cfg.uniqueness_via_window
-            and not cfg.window_chunk_size  # chunked windows can't see dups across chunks
-            and keys == (cfg.group_col, cfg.order_col)
+        # chunked windows can't see duplicates across chunks
+        if not cfg.window_chunk_size and tuple(c.keys or cfg.key_cols) == (
+            cfg.group_col,
+            cfg.order_col,
         ):
             pieces.append(_uniqueness_via_window(df, c, cfg))
         else:
@@ -1066,11 +961,7 @@ def run_validation(
     for c in drift_checks:
         bq = c.baseline_quantiles
         if bq is None:
-            if baseline is None:
-                raise ValueError(
-                    f"DriftCheck {c.check_id} has no baseline quantiles and no "
-                    "baseline DataFrame was provided"
-                )
+            need_baseline(c, "baseline quantiles")
             if c.method == "exact":
                 bq = exact_global_quantiles(baseline, c.value_expr, c.probes)
             else:
@@ -1087,20 +978,13 @@ def run_validation(
     for c in cat_drift_checks:
         bc = c.baseline_counts
         if bc is None:
-            if baseline is None:
-                raise ValueError(
-                    f"CategoricalDriftCheck {c.check_id} has no baseline "
-                    "counts and no baseline DataFrame was provided"
-                )
+            need_baseline(c, "baseline counts")
             bc = categorical_counts(baseline, c.cat_col)
         tv = categorical_tv(df, c.cat_col, cfg.partition_col, bc)
         pieces.append(categorical_drift_violations(tv, c.threshold, c.check_id))
     for c in corr_drift_checks:
-        if c.baseline_corr is None and baseline is None:
-            raise ValueError(
-                f"CorrelationDriftCheck {c.check_id} has no baseline_corr "
-                "and no baseline DataFrame was provided"
-            )
+        if c.baseline_corr is None:
+            need_baseline(c, "baseline_corr")
         cd = correlation_drift(
             df,
             c.x_expr,
@@ -1115,11 +999,7 @@ def run_validation(
     for c in cond_drift_checks:
         bc = c.baseline_counts
         if bc is None:
-            if baseline is None:
-                raise ValueError(
-                    f"ConditionalDriftCheck {c.check_id} has no baseline "
-                    "counts and no baseline DataFrame was provided"
-                )
+            need_baseline(c, "baseline counts")
             bc = conditional_counts(baseline, c.cond_expr, c.cat_expr)
         ct = conditional_tv(
             df, c.cond_expr, c.cat_expr, cfg.partition_col, bc
@@ -1132,11 +1012,7 @@ def run_validation(
         order = tuple(c.order_cols) or (cfg.order_col,)
         bc = c.baseline_counts
         if bc is None:
-            if baseline is None:
-                raise ValueError(
-                    f"TransitionDriftCheck {c.check_id} has no baseline "
-                    "counts and no baseline DataFrame was provided"
-                )
+            need_baseline(c, "baseline counts")
             bc = transition_counts(
                 baseline,
                 seq,
@@ -1176,14 +1052,8 @@ def run_validation(
 
     if not pieces:
         raise ValueError(
-            "no supported checks: every entry in `checks` must be a known "
-            "Check subclass (RowCheck, MonotoneCheck, SequenceCheck, "
-            "RateCheck, RunLengthCheck, PeriodicLoopCheck, "
-            "UniquenessCheck, FunctionalDependencyCheck, ContiguityCheck, "
-            "GroupAggCheck, DriftCheck, CategoricalDriftCheck, "
-            "CorrelationDriftCheck, ConditionalDriftCheck, "
-            "TransitionDriftCheck, TextEqualityCheck, VolumeAnomalyCheck, "
-            "CompletenessDriftCheck, CardinalityAnomalyCheck)"
+            "no supported checks: `checks` is empty or holds only rules "
+            "with nothing to check"
         )
     violations = pieces[0]
     for p in pieces[1:]:

@@ -21,7 +21,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..checks.base import RowCheck
+from ..checks.base import RowCheck, apply_row_checks
 
 
 def drain(
@@ -80,25 +80,10 @@ def stream_violations(
     key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Stateless violation stream: same array_compact row pass as the batch
-    engine, one row per (violating row, check)."""
-    structs = [
-        F.when(
-            ~c.holds(),
-            F.struct(
-                F.lit(c.check_id).alias("check_id"), c.detail_col().alias("detail")
-            ),
-        )
-        for c in checks
-    ]
-    fails = stream_df.select(
-        *[F.col(k) for k in key_cols],
-        F.col(ts_col),
-        F.array_compact(F.array(*structs)).alias("fails"),
-    ).filter(F.size("fails") > 0)
-    return fails.select(
-        *key_cols, ts_col, F.explode("fails").alias("f")
-    ).select(*key_cols, ts_col, "f.check_id", "f.detail")
+    """Stateless violation stream: the batch engine's row pass
+    (checks.base.apply_row_checks), one row per (violating row, check) as
+    ``(*key_cols, ts_col, check_id, detail)``."""
+    return apply_row_checks(stream_df, checks, (*key_cols, ts_col))
 
 
 def windowed_verdicts(
@@ -2250,7 +2235,7 @@ def stream_checks_from_suite(
         if cid in row_by_id:
             # vocab / range / not_null / format / row entries are pure
             # row predicates: the stateless violation stream runs each
-            # one verbatim (same array_compact pass as the batch engine)
+            # one verbatim (the batch engine's row pass)
             built[cid] = stream_violations(
                 stream_df,
                 [row_by_id[cid]],

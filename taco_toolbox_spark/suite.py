@@ -132,7 +132,6 @@ _ENGINE_KEYS = {
     "order_col",
     "key_cols",
     "persist_violations",
-    "uniqueness_via_window",
     "window_chunk_size",
     "concurrent_actions",
 }

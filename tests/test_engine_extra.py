@@ -1,4 +1,6 @@
-"""GroupAggCheck + the "tdigest" (approx alias) drift method via the engine."""
+"""GroupAggCheck + the "tdigest" (approx alias) drift method via the engine,
+the refusal of checks no pass compiles, and a one-of-each-class battery
+that must not depend on partition count or window chunking."""
 
 import pytest
 import pyspark.sql.functions as F
@@ -323,3 +325,133 @@ def test_periodic_loop_check_validates_params():
         PeriodicLoopCheck(check_id="x", value_col="role", period=0)
     with pytest.raises(ValueError, match="max_reps"):
         PeriodicLoopCheck(check_id="x", value_col="role", max_reps=0)
+
+
+def test_unsupported_check_is_refused(corpus):
+    """A check no pass compiles must not come back as a passed verdict:
+    run_validation refuses it by id and class, even beside supported
+    checks, and the message lists every class the engine compiles."""
+    from taco_toolbox_spark.checks.base import Check, not_null_check
+
+    with pytest.raises(ValueError, match=r"'mystery', 'Check'") as err:
+        run_validation(
+            corpus.corrupted,
+            [not_null_check("nn", "text"), Check(check_id="mystery")],
+        )
+    assert "GapCheck" in str(err.value)
+    assert "CardinalityAnomalyCheck" in str(err.value)
+
+
+def _one_check_of_each_class(clean):
+    from taco_toolbox_spark.checks.base import (
+        ROLE_LAST,
+        CardinalityAnomalyCheck,
+        CategoricalDriftCheck,
+        CompletenessDriftCheck,
+        ConditionalDriftCheck,
+        ContiguityCheck,
+        CorrelationDriftCheck,
+        FunctionalDependencyCheck,
+        GapCheck,
+        MonotoneCheck,
+        PeriodicLoopCheck,
+        RateCheck,
+        RunLengthCheck,
+        TextEqualityCheck,
+        TransitionDriftCheck,
+        UniquenessCheck,
+        VolumeAnomalyCheck,
+        role_sequence_check,
+        vocab_check,
+    )
+    from taco_toolbox_spark.schema import ROLE_VOCAB
+
+    return [
+        vocab_check("role_vocab", "role", ROLE_VOCAB),
+        MonotoneCheck(check_id="ts_monotone", value_col="ts"),
+        GapCheck(check_id="ts_gap", value_col="ts", max_step=3600),
+        RateCheck(check_id="ts_rate", value_col="ts", seconds=600, max_events=3),
+        RunLengthCheck(check_id="role_run", value_col="role", max_run=2),
+        PeriodicLoopCheck(
+            check_id="role_loop", value_col="role", period=2, max_reps=2
+        ),
+        UniquenessCheck(check_id="unique_turn"),
+        FunctionalDependencyCheck(
+            check_id="tool_role_fd",
+            determinant=("tool",),
+            dependent=("role",),
+            skip_null_determinant=True,
+        ),
+        ContiguityCheck(check_id="turn_contiguous", idx_col="turn_idx"),
+        role_sequence_check(last=ROLE_LAST),
+        CategoricalDriftCheck(check_id="role_drift", cat_col="role", threshold=0.05),
+        CorrelationDriftCheck(
+            check_id="len_idx_corr",
+            x_expr="length(text)",
+            y_expr="turn_idx",
+            threshold=0.05,
+        ),
+        ConditionalDriftCheck(
+            check_id="tool_role_cond",
+            cond_expr="coalesce(tool, 'none')",
+            cat_expr="role",
+            threshold=0.05,
+        ),
+        TransitionDriftCheck(check_id="role_trans", state_expr="role", threshold=0.05),
+        VolumeAnomalyCheck(check_id="volume", k=1.0),
+        CompletenessDriftCheck(check_id="text_complete", value_col="text", tol=0.01),
+        CardinalityAnomalyCheck(check_id="conv_card", value_col="conv_id", k=1.0),
+        GroupAggCheck(
+            check_id="has_system_start",
+            aggs=[
+                F.sum(
+                    ((F.col("turn_idx") == 0) & (F.col("role") == "system")).cast(
+                        "int"
+                    )
+                ).alias("_n_sys0")
+            ],
+            predicate=F.col("_n_sys0") >= 1,
+            detail=F.format_string("system-start turns: %s", F.col("_n_sys0")),
+        ),
+        DriftCheck(check_id="text_len_drift", value_expr="length(text)", threshold=0.1),
+        TextEqualityCheck(check_id="text_equality", reference=clean),
+    ]
+
+
+def test_full_battery_partition_invariant(spark):
+    """Verdicts and violation rows of a battery holding one check of each
+    of the 20 Check classes do not depend on the shuffle partition count
+    or on window chunking (hot conversations included)."""
+    from taco_toolbox_spark.datagen import generate_transcripts
+
+    c = generate_transcripts(
+        spark, n_convs=60, seed=7, violation_denom=40, hot_conv_every=20, hot_len=60
+    )
+    df, clean = c.corrupted.cache(), c.clean.cache()
+    checks = _one_check_of_each_class(clean)
+    assert len({type(x) for x in checks}) == 20
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    runs = []
+    try:
+        for n_parts, chunk in ((1, None), (7, 8), (64, None)):
+            spark.conf.set(key, str(n_parts))
+            res = run_validation(
+                df, checks, EngineConfig(window_chunk_size=chunk), baseline=clean
+            )
+            runs.append(
+                (
+                    sorted((tuple(r) for r in res.violations.collect()), key=repr),
+                    sorted((tuple(r) for r in res.verdicts.collect()), key=repr),
+                )
+            )
+    finally:
+        spark.conf.set(key, old)
+        df.unpersist()
+        clean.unpersist()
+    violations, verdicts = runs[0]
+    fired = {v[1] for v in violations}
+    assert len(fired) >= 18, fired
+    assert len(verdicts) == 20 * len({v[0] for v in verdicts})
+    for other in runs[1:]:
+        assert other == runs[0]

@@ -773,3 +773,60 @@ def test_stream_battery_passes_no_timestamp_to_python(spark, tmp_path):
     assert found == [
         [("conv_id", "string"), ("turn_idx", "int"), ("_ts_us", "bigint")]
     ], found
+
+
+def test_stream_row_pass_prefilters(spark, tmp_path):
+    """The stream's row pass is the batch engine's (apply_row_checks): a
+    Filter conjunct that is the OR chain over the raw columns drops
+    passing rows before any failed-check struct is built. A lone
+    ``size(fails) > 0`` filter would build every row's struct array
+    first."""
+    import datetime as dt
+    import re
+
+    from taco_toolbox_spark.checks.base import RowCheck
+    from taco_toolbox_spark.streaming.validate_stream import stream_violations
+
+    path = str(tmp_path / "in")
+    spark.createDataFrame(
+        [("c", 0, dt.datetime(2025, 1, 1), "user", None, "x")],
+        "conv_id string, turn_idx int, ts timestamp, role string, "
+        "tool string, text string",
+    ).write.parquet(path)
+    stream = spark.readStream.schema(spark.read.parquet(path).schema).parquet(
+        path
+    )
+    checks = [c for c in transcript_checks() if isinstance(c, RowCheck)]
+    q = (
+        stream_violations(stream, checks)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("t_stream_row_pass_plan")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        plan = q._jsq.streamingQuery().lastExecution().optimizedPlan()
+    finally:
+        q.stop()
+    conjuncts, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+        if node.nodeName() == "Filter":
+            preds = [node.condition()]
+            while preds:
+                p = preds.pop()
+                if p.nodeName() == "And":
+                    preds += [p.left(), p.right()]
+                else:
+                    conjuncts.append(p)
+    prefilters = [
+        p.toString()
+        for p in conjuncts
+        if p.nodeName() == "Or"
+        and not re.search(r"size\(|array_compact|filter\(array", p.toString())
+    ]
+    assert len(prefilters) == 1, [p.toString() for p in conjuncts]
+    assert all(col in prefilters[0] for col in ("conv_id", "role", "tool", "ts"))

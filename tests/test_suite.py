@@ -291,6 +291,10 @@ def test_suite_engine_config_applies(spark):
         # a key EngineConfig does not have is refused, not ignored
         ({"engine": {"drift_salt_buckets": 16}, "checks": []},
          "unknown keys"),
+        # the uniqueness pass is chosen from the key and the chunking;
+        # no engine key selects it
+        ({"engine": {"uniqueness_via_window": True}, "checks": []},
+         "unknown keys"),
     ],
 )
 def test_suite_validation_gates(spark, spec, frag):
