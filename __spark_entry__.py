@@ -2727,12 +2727,14 @@ def q_w13_loop_detect(spark, sf_dir):
     invisible to every other sequential rule: adjacent pairs all differ
     (no run, w12), gaps can be regular (no d10 signal), and the
     transition matrix (a10) only sees the marginal a->b mass, not that
-    one group loops contiguously. operators/runs.py:periodic_runs:
-    three stacked Windows + an exchange-reusing island aggregation on
-    ONE shuffle; emits the stretch's first-row order tuple (carried
-    through the island via min_by on lag(struct, p)), total length, and
-    floor(len/p) repetitions. DuckDB replays the identical lag-2
-    indicator -> island -> min_by pipeline."""
+    one group loops contiguously. operators/runs.py:periodic_runs: two
+    stacked Windows (lag-2 continuing indicator, then a running max over
+    the non-continuing rows — the islands kernel the run rule shares at
+    period 1) + an exchange-reusing island aggregation on ONE shuffle;
+    emits the stretch's first-row order tuple (carried through the
+    island via min_by on lag(struct, p)), total length, and floor(len/p)
+    repetitions. DuckDB replays the identical lag-2 indicator -> island
+    -> min_by pipeline."""
     from taco_toolbox_spark.operators.runs import periodic_runs
 
     ev = _t(spark, sf_dir, "events")
@@ -2791,10 +2793,12 @@ def q_stream_runs(spark, sf_dir):
     so arrival order is event-time order per key) and every event past
     position 2 of a run of consecutive identical event_type values is
     emitted LIVE with its exact run position — the stateful twin of
-    w12_stuck_runs (streaming/validate_stream.py:stream_run_violations:
-    per-key state is O(1) — last value + run length — with vectorized
-    pandas sort/shift/cumulative-max per micro-batch). The oracle is the
-    batch gaps-and-islands identity in SQL — identical rows."""
+    w12_stuck_runs (streaming/validate_stream.py:stream_run_violations,
+    the period-1 call of the periodic-loop emitter: per-key state is
+    O(1) — the last value + the continuing-run length — with a
+    vectorized numpy lag-compare + cumulative-max per micro-batch). The
+    oracle is the batch gaps-and-islands identity in SQL — identical
+    rows."""
     from taco_toolbox_spark.streaming.validate_stream import (
         drain,
         stream_run_violations,

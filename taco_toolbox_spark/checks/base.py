@@ -154,13 +154,16 @@ class RunLengthCheck(Check):
     agent / template-storm rule, the EQUALITY-run sibling of GapCheck's
     step bound (every adjacent pair inside a run is "equal", which no
     gap/monotone/rate rule forbids, yet 500 identical assistant turns is
-    exactly the pathology a transcript validator must flag). Compiled via
-    the gaps-and-islands identity (operators/runs.py): row_number + lag
-    start-markers, then a running max over the markers — two stacked
+    exactly the pathology a transcript validator must flag). A run is
+    the period-1 loop: the engine compiles this check as
+    ``PeriodicLoopCheck(period=1, max_reps=max_run)`` in the shared
+    islands pass (operators/runs.py) — row_number + lag-1 continuing
+    indicator, then a running max over the run starts — two stacked
     Window operators sharing the engine-key exchange and ONE sort. Only
     the OVERFLOW rows fire (run position > max_run), so dropping exactly
-    the flagged rows satisfies the rule. NULL values form runs too
-    (stuck-null is stuck); whether NULL is also illegal is the row
+    the flagged rows satisfies the rule; the detail reads
+    ``"{value_col} run position N > max_run"``. NULL values form runs
+    too (stuck-null is stuck); whether NULL is also illegal is the row
     pass's problem."""
 
     value_col: str = ""
@@ -187,13 +190,15 @@ class PeriodicLoopCheck(Check):
     alternating between two tools (``a b a b a b``) defeats every other
     sequential rule: adjacent pairs all differ (no run), gaps can be
     regular, and the transition grammar sees only legal ``a->b`` edges.
-    Compiled like the run pass (operators/runs.py:periodic_runs): a
-    lag-``period`` continuing indicator, island-start markers, a running
-    max — stacked Window operators sharing the engine-key exchange with
-    ONE sort. Only OVERFLOW rows fire (rows extending the stretch past
-    ``max_reps * period`` total rows), so dropping exactly the flagged
-    rows leaves at most ``max_reps`` repetitions. NULL cycling with NULL
-    is a loop (stuck-null discipline, as in the run rule)."""
+    Compiled in ONE islands pass with the run rules (operators/runs.py):
+    a lag-``period`` continuing indicator, then a running max over the
+    non-continuing rows — two stacked Window operators sharing the
+    engine-key exchange with ONE sort, however many run and loop checks
+    the battery holds. Only OVERFLOW rows fire (rows extending the
+    stretch past ``max_reps * period`` total rows), so dropping exactly
+    the flagged rows leaves at most ``max_reps`` repetitions. NULL
+    cycling with NULL is a loop (stuck-null discipline, as in the run
+    rule)."""
 
     value_col: str = ""
     period: int = 2
@@ -280,6 +285,14 @@ class SequenceCheck(Check):
     #: ``max_by`` alongside the ``min_by``, one shared shuffle of one row
     #: per group, correct under window chunking (the agg is global).
     last: Sequence[str] | None = None
+
+    def __post_init__(self) -> None:
+        if self.allowed is None and self.first is None and self.last is None:
+            raise ValueError(
+                f"SequenceCheck {self.check_id!r} needs 'allowed', 'first' "
+                "and/or 'last' — with none it compiles to no pass and "
+                "would silently pass everything"
+            )
 
     def pair_ok(self, prev: Column, cur: Column) -> Column:
         """Membership of the (prev, cur) pair in the allowed set, as one

@@ -15,9 +15,9 @@ Pass plan (the scale story — adding checks never adds scans):
                 ride one min_by/max_by group-agg piece; RateChecks
                 (trailing time-window burst bound) add RANGE-frame windows
                 on the SAME group-key exchange; RunLengthChecks (stuck-
-                value run bound) stack two Window selects (gaps-and-
-                islands) on that exchange with one sort; PeriodicLoopChecks
-                (period-p ping-pong bound) stack three the same way.
+                value run bound = the period-1 loop) and PeriodicLoopChecks
+                (period-p ping-pong bound) share ONE islands pass: two
+                stacked Window selects on that exchange with one sort.
   agg pass      Uniqueness of the (group, order) key rides the shared
                 window sort (a duplicate is order == lag(order)) when
                 windows are not chunked; any other key, or chunked
@@ -95,6 +95,7 @@ from .checks.drift import (
     transition_drift_violations,
 )
 from .checks.text_equality import text_equality_violations
+from .operators.runs import _islands
 from .schema import literal_frame
 
 
@@ -330,115 +331,47 @@ def _rate_pass(
     return _emit(df, structs, *_row_coords(cfg))
 
 
-def _runlength_pass(
-    df: DataFrame, checks: list[RunLengthCheck], cfg: EngineConfig
+def _periodic_pass(
+    df: DataFrame,
+    checks: list[RunLengthCheck | PeriodicLoopCheck],
+    cfg: EngineConfig,
 ) -> DataFrame:
-    """Stuck-value run rules: the gaps-and-islands identity
-    (operators/runs.py) per checked column — row_number + lag start
-    markers in one select, a running max over the markers in a second —
-    all window specs identical to the lag pass's (same partitioning,
-    same order), so Catalyst stacks the Window operators on the shared
-    engine-key exchange with ONE sort. Only overflow rows (run position
-    > max_run) fire."""
-    w = Window.partitionBy(cfg.partition_col, cfg.group_col).orderBy(
-        cfg.order_col
-    )
-    rn = F.row_number().over(w)
+    """Stuck-value run and ping-pong loop rules in one pass: a
+    RunLengthCheck is the period-1 loop capped at ``max_run``. Every rule
+    rides the islands kernel (operators/runs.py:_islands) — row_number
+    and the lag-``period`` continuing indicators in one select, a running
+    max over the non-continuing rows in a second — keyed identically to
+    the engine's lag pass, so Catalyst shares the exchange and ONE sort.
+    A row fires when it extends its stretch (``_rn - _reset + period``)
+    past ``cap * period`` rows, so dropping exactly the flagged rows
+    leaves at most ``cap`` repetitions (``max_run`` rows of a run)."""
+    rules, structs = {}, []
+    for i, c in enumerate(checks):
+        if isinstance(c, RunLengthCheck):
+            p, cap = 1, c.max_run
+            fmt = f"{c.value_col} run position %s > {c.max_run}"
+        else:
+            p, cap = c.period, c.max_reps
+            fmt = (
+                f"{c.value_col} period-{c.period} stretch row %s > "
+                f"{c.max_reps} reps"
+            )
+        rules[f"_{i}"] = (c.value_col, p)
+        pos = F.col("_rn") - F.col(f"_reset_{i}") + F.lit(int(p))
+        bad = F.col(f"_c_{i}") & (pos > F.lit(int(cap) * int(p)))
+        detail = F.format_string(fmt, pos.cast("string"))
+        structs.append(failed_check(c.check_id, bad, detail))
     # keep the ORIGINAL key/order columns through the intermediate select:
     # the second window keys on them verbatim, so Catalyst reuses the
     # exchange AND the sort (string-cast keys here would force a second
     # shuffle — the casts happen only in the final projection)
-    marked = df.select(
-        F.col(cfg.partition_col),
-        F.col(cfg.group_col),
-        F.col(cfg.order_col),
-        rn.alias("_rn"),
-        *[
-            (
-                (rn == F.lit(1))
-                | ~F.lag(F.col(c.value_col)).over(w).eqNullSafe(
-                    F.col(c.value_col)
-                )
-            ).alias(f"_new_{i}")
-            for i, c in enumerate(checks)
-        ],
+    marked = _islands(
+        df,
+        [cfg.partition_col, cfg.group_col],
+        [cfg.order_col],
+        rules,
+        [cfg.partition_col, cfg.group_col, cfg.order_col],
     )
-    wc = (
-        Window.partitionBy(cfg.partition_col, cfg.group_col)
-        .orderBy(cfg.order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    structs = []
-    for i, c in enumerate(checks):
-        start = F.max(F.when(F.col(f"_new_{i}"), F.col("_rn"))).over(wc)
-        pos = F.col("_rn") - start + F.lit(1)
-        detail = F.format_string(
-            f"{c.value_col} run position %s > {c.max_run}",
-            pos.cast("string"),
-        )
-        structs.append(failed_check(c.check_id, pos > F.lit(int(c.max_run)), detail))
-    return _emit(marked, structs, *_row_coords(cfg))
-
-
-def _periodic_pass(
-    df: DataFrame, checks: list["PeriodicLoopCheck"], cfg: EngineConfig
-) -> DataFrame:
-    """Ping-pong (period-p loop) rules: per check, a lag-``period``
-    null-safe continuing indicator, island-start markers over it, and a
-    running max — the same stacked-window shape as the run pass
-    (operators/runs.py:periodic_runs has the full rationale), every spec
-    keyed identically to the engine's lag pass, so Catalyst shares the
-    exchange and the sort. A row fires when it extends its stretch past
-    ``max_reps * period`` total rows (stretch-so-far = continuing-run
-    position + period), so dropping exactly the flagged rows leaves at
-    most ``max_reps`` full repetitions."""
-    w = Window.partitionBy(cfg.partition_col, cfg.group_col).orderBy(
-        cfg.order_col
-    )
-    rn = F.row_number().over(w)
-    conts = []
-    for i, c in enumerate(checks):
-        cont = (rn > F.lit(int(c.period))) & F.col(c.value_col).eqNullSafe(
-            F.lag(F.col(c.value_col), int(c.period)).over(w)
-        )
-        conts.append(cont.alias(f"_c_{i}"))
-    marked = df.select(
-        F.col(cfg.partition_col),
-        F.col(cfg.group_col),
-        F.col(cfg.order_col),
-        rn.alias("_rn"),
-        *conts,
-    )
-    # island-start markers need a second stacked select (they lag the
-    # continuing indicators computed above)
-    marked = marked.select(
-        "*",
-        *[
-            (
-                F.col(f"_c_{i}")
-                & ~F.lag(F.col(f"_c_{i}"), 1, False).over(w)
-            ).alias(f"_new_{i}")
-            for i in range(len(checks))
-        ],
-    )
-    wc = (
-        Window.partitionBy(cfg.partition_col, cfg.group_col)
-        .orderBy(cfg.order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    structs = []
-    for i, c in enumerate(checks):
-        start = F.max(F.when(F.col(f"_new_{i}"), F.col("_rn"))).over(wc)
-        stretch = F.col("_rn") - start + F.lit(1) + F.lit(int(c.period))
-        bad = F.col(f"_c_{i}") & (
-            stretch > F.lit(int(c.max_reps) * int(c.period))
-        )
-        detail = F.format_string(
-            f"{c.value_col} period-{c.period} stretch row %s > "
-            f"{c.max_reps} reps",
-            stretch.cast("string"),
-        )
-        structs.append(failed_check(c.check_id, bad, detail))
     return _emit(marked, structs, *_row_coords(cfg))
 
 
@@ -941,10 +874,8 @@ def run_validation(
         pieces.append(_seq_endpoint_pass(df, seq_endpoint, cfg))
     if rate_checks:
         pieces.append(_rate_pass(df, rate_checks, cfg))
-    if run_checks:
-        pieces.append(_runlength_pass(df, run_checks, cfg))
-    if loop_checks:
-        pieces.append(_periodic_pass(df, loop_checks, cfg))
+    if run_checks or loop_checks:
+        pieces.append(_periodic_pass(df, run_checks + loop_checks, cfg))
     for c in uniq_checks:
         # chunked windows can't see duplicates across chunks
         if not cfg.window_chunk_size and tuple(c.keys or cfg.key_cols) == (

@@ -1,33 +1,45 @@
-"""Run-length (gaps-and-islands) analysis — stuck-value / repeated-output
-detection over ordered groups.
+"""Run-length and periodic-loop (gaps-and-islands) analysis — stuck-value
+and ping-pong detection over ordered groups.
 
 The window family so far covers ordering (lag monotone), adjacent steps
 (GapCheck), and time-frame rates (rolling.py RANGE windows). The missing
-member is the RUN: a maximal block of consecutive rows (in the group's
-order) whose value is null-safe equal. Long runs are the signature of a
-stuck sensor, a looping agent repeating the same tool call, a retry
-storm re-emitting one response, or a template generator pinned to one
-output — invisible to every rule above (each adjacent pair is "equal",
-which no gap/monotone/rate rule forbids).
+member is the ISLAND: a maximal block of consecutive rows (in the
+group's order) where every value null-safe equals the value ``period``
+rows earlier. Period 1 is the RUN — the signature of a stuck sensor, a
+looping agent repeating the same tool call, a retry storm re-emitting
+one response, or a template generator pinned to one output. Period 2+
+is the LOOP — an agent alternating between two tools (``a b a b``), the
+retry pair, a template rotation. Both are invisible to every rule above
+(each adjacent pair is "equal", or each differs by a legal step).
+
+One kernel, :func:`_islands`, serves every member here and the engine's
+RunLengthCheck/PeriodicLoopCheck pass: a run is the loop with
+``period=1``. The streaming twin (stream_periodic_violations) replays
+the same identity per key in numpy.
 
 Plan shape — the scale contract:
 
-  * ONE shuffle on ``keys`` and ONE sort on ``order_cols``: run position
-    derives from two stacked window selects over the SAME window spec
-    (``row_number``+``lag`` first, then a running ``max`` over the
-    run-start markers), so Catalyst plans one Exchange, one Sort, and a
-    chain of Window operators — never a second exchange and never a
-    self-join (locked by tests/test_plan_assertions.py).
-  * run_pos = rn - max(rn where run starts, running) + 1 — the classic
-    gaps-and-islands identity, O(1) state per row inside the frame.
-  * Only OVERFLOW rows fire in :func:`stuck_runs` (position > max_run),
-    so dropping exactly the flagged rows satisfies the rule — the same
+  * ONE shuffle on ``keys`` and ONE sort on ``order_cols``: two stacked
+    window selects over the SAME window spec — ``row_number`` and the
+    continuing indicator ``_c = rn > p AND v <=> lag(v, p)`` first, then
+    ``_reset`` = running ``max(rn)`` over the NON-continuing rows — so
+    Catalyst plans one Exchange, one Sort, and two Window operators:
+    never a second exchange and never a self-join (locked by
+    tests/test_plan_assertions.py). The ``rn > p`` guard keeps the
+    out-of-range NULLs of ``lag`` from matching real NULLs.
+  * stretch position = rn - _reset + p — the classic gaps-and-islands
+    identity, O(1) state per row inside the frame. At p = 1, NOT ``_c``
+    is exactly the run-start marker and the position is the run
+    position.
+  * Only OVERFLOW rows fire in :func:`stuck_runs` (position > max_run)
+    and :func:`periodic_overflow` (position > max_reps * period), so
+    dropping exactly the flagged rows satisfies the rule — the same
     actionable-violation contract as the engine's RateCheck.
 
-Determinism: runs are defined by the ORDER of ``order_cols``; pass a
+Determinism: islands are defined by the ORDER of ``order_cols``; pass a
 tie-free ordering (the transcript battery orders by turn_idx, whose
 uniqueness is itself checked; event-stream callers add a unique id as a
-tiebreaker). NULL values form runs too — NULL is null-safe equal to
+tiebreaker). NULL values form islands too — NULL is null-safe equal to
 NULL, so a stuck-null column is reported like any other stuck value
 (whether NULL is also a row-pass problem is a separate check).
 
@@ -39,18 +51,90 @@ conversation-sized groups).
 
 Beyond-reference training-pipeline/validation operator (SURVEY.md §6);
 the reference validator has no run-length surface. DuckDB reproduces the
-result bit-for-bit with the same two stacked windows (IS DISTINCT FROM
-for the null-safe start marker).
+result bit-for-bit with the same stacked windows (IS DISTINCT FROM for
+the null-safe start marker).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_INTERNAL = {"_rn", "_new"}
+_INTERNAL = {"_rn", "_c", "_reset"}
+
+
+def _guard(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+    caller: str,
+    outputs: set[str],
+    value_col: str | None = None,
+    period: int = 1,
+) -> None:
+    """The family's argument checks, in one order: keys, period, value
+    column distinct from keys/order (when the caller projects them side
+    by side), then internal/output name collisions."""
+    if not keys or not order_cols:
+        raise ValueError(
+            f"{caller} needs at least one key and one order column"
+        )
+    if period < 1:
+        raise ValueError("period must be >= 1")
+    if value_col is not None and value_col in set(keys) | set(order_cols):
+        raise ValueError(
+            "value_col must be distinct from keys and order_cols"
+        )
+    clash = (_INTERNAL | outputs) & set(df.columns)
+    if clash:
+        raise ValueError(
+            f"columns {sorted(clash)} collide with {caller} "
+            "internals/outputs; rename them first"
+        )
+
+
+def _islands(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+    rules: Mapping[str, tuple[str, int]],
+    carry: Sequence[str | Column],
+) -> DataFrame:
+    """The islands kernel: ``carry``, ``_rn`` (row number under
+    ``order_cols`` within ``keys``) and, per rule ``tag -> (value_col,
+    period)``, ``_c{tag}`` (the value null-safe equals the one
+    ``period`` rows back) and ``_reset{tag}`` (row number of the latest
+    non-continuing row, so a row's stretch position is
+    ``_rn - _reset + period``). Two stacked Window selects on one
+    (keys, order) spec: one exchange, one sort."""
+    w = Window.partitionBy(*keys).orderBy(*order_cols)
+    rn = F.row_number().over(w)
+    marked = df.select(
+        *carry,
+        rn.alias("_rn"),
+        *[
+            (
+                (rn > F.lit(int(p)))
+                & F.col(v).eqNullSafe(F.lag(F.col(v), int(p)).over(w))
+            ).alias(f"_c{tag}")
+            for tag, (v, p) in rules.items()
+        ],
+    )
+    # the running max orders by the SAME order columns (not by _rn, which
+    # is order-equivalent but expression-different — ordering by
+    # order_cols lets Catalyst drop the second Sort entirely)
+    wc = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return marked.select(
+        "*",
+        *[
+            F.max(F.when(~F.col(f"_c{tag}"), F.col("_rn")))
+            .over(wc)
+            .alias(f"_reset{tag}")
+            for tag in rules
+        ],
+    )
 
 
 def run_positions(
@@ -64,33 +148,12 @@ def run_positions(
     maximal run of null-safe-equal ``value_col`` values within its key
     group under ``order_cols`` order. One shuffle, one sort (two stacked
     Window operators on one exchange)."""
-    if not keys or not order_cols:
-        raise ValueError("run_positions needs at least one key and one order column")
-    clash = (_INTERNAL | {out_col}) & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"columns {sorted(clash)} collide with run_positions internals; "
-            "rename them first"
-        )
-    w = Window.partitionBy(*keys).orderBy(*order_cols)
-    rn = F.row_number().over(w)
-    # run-start marker: first row of the group, or value differs from the
-    # predecessor under null-safe equality (NULL == NULL continues a run)
-    new = (rn == F.lit(1)) | ~F.lag(F.col(value_col)).over(w).eqNullSafe(
-        F.col(value_col)
+    _guard(df, keys, order_cols, "run_positions", {out_col})
+    marked = _islands(
+        df, keys, order_cols, {"": (value_col, 1)}, df.columns
     )
-    marked = df.select("*", rn.alias("_rn"), new.alias("_new"))
-    # cumulative window ordered by the SAME order columns (not by _rn,
-    # which is order-equivalent but expression-different — ordering by
-    # order_cols lets Catalyst drop the second Sort entirely)
-    wc = (
-        Window.partitionBy(*keys)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    run_start = F.max(F.when(F.col("_new"), F.col("_rn"))).over(wc)
     return marked.select(
-        *df.columns, (F.col("_rn") - run_start + F.lit(1)).alias(out_col)
+        *df.columns, (F.col("_rn") - F.col("_reset") + F.lit(1)).alias(out_col)
     )
 
 
@@ -110,40 +173,21 @@ def run_lengths(
     distribute), or aggregate it for a stuck-value profile.
 
     Plan: the same one-exchange two-window pass as run_positions, then
-    ONE aggregation grouped by (keys, run_start) — the grouping keys
+    ONE aggregation grouped by (keys, run start) — the grouping keys
     contain the window partition keys, so Catalyst reuses the exchange
     (no second shuffle) and the partial aggregation combines map-side.
     The value column aggregates with ``min`` — every member of a run is
     null-safe equal, so min IS the value (NULL for a NULL run)."""
-    if not keys or not order_cols:
-        raise ValueError("run_lengths needs at least one key and one order column")
-    if value_col in set(keys) | set(order_cols):
-        raise ValueError(
-            "value_col must be distinct from keys and order_cols"
-        )
-    clash = (_INTERNAL | {"_start", "_sk", out_col}) & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"columns {sorted(clash)} collide with run_lengths internals; "
-            "rename them first"
-        )
-    w = Window.partitionBy(*keys).orderBy(*order_cols)
-    rn = F.row_number().over(w)
-    new = (rn == F.lit(1)) | ~F.lag(F.col(value_col)).over(w).eqNullSafe(
-        F.col(value_col)
+    _guard(
+        df, keys, order_cols, "run_lengths", {"_sk", out_col},
+        value_col=value_col,
     )
-    marked = df.select(
-        *keys, *order_cols, value_col, rn.alias("_rn"), new.alias("_new")
+    marked = _islands(
+        df, keys, order_cols, {"": (value_col, 1)},
+        [*keys, *order_cols, value_col],
     )
-    wc = (
-        Window.partitionBy(*keys)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = F.max(F.when(F.col("_new"), F.col("_rn"))).over(wc)
     return (
-        marked.withColumn("_start", start)
-        .groupBy(*keys, "_start")
+        marked.groupBy(*keys, "_reset")
         .agg(
             F.count(F.lit(1)).alias(out_col),
             F.min(F.struct(*order_cols)).alias("_sk"),
@@ -156,73 +200,6 @@ def run_lengths(
             out_col,
         )
     )
-
-
-def _periodic_islands(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_cols: Sequence[str],
-    value_col: str,
-    period: int,
-    caller: str,
-    out_names: set[str],
-    carry_start_struct: bool,
-) -> DataFrame:
-    """Shared island stack for the loop family (guards + plan): the
-    lag-``period`` continuing indicator ``_c``, the island-start marker
-    ``_new``, and the running island-start row number ``_start``, all
-    over ONE (keys, order) window spec — three stacked Window selects on
-    one exchange. ``carry_start_struct`` additionally carries
-    ``lag(struct(order), period)`` as ``_ps`` (the summary grain's
-    motif-start attribution); the overflow grain carries the value
-    column itself instead."""
-    if not keys or not order_cols:
-        raise ValueError(
-            f"{caller} needs at least one key and one order column"
-        )
-    if period < 1:
-        raise ValueError("period must be >= 1")
-    if value_col in set(keys) | set(order_cols):
-        raise ValueError(
-            "value_col must be distinct from keys and order_cols"
-        )
-    internal = {"_rn", "_c", "_new", "_start"}
-    if carry_start_struct:
-        internal = internal | {"_ps"}
-    clash = (internal | out_names) & set(df.columns)
-    if clash:
-        raise ValueError(
-            f"columns {sorted(clash)} collide with {caller} "
-            "internals/outputs; rename them first"
-        )
-    w = Window.partitionBy(*keys).orderBy(*order_cols)
-    rn = F.row_number().over(w)
-    # continuing-row indicator: the value repeats the one `period` rows
-    # back (null-safe: a NULL cycling with NULLs is still a loop); the
-    # rn guard keeps out-of-range lag NULLs from matching real NULLs
-    cont = (rn > F.lit(period)) & F.col(value_col).eqNullSafe(
-        F.lag(F.col(value_col), period).over(w)
-    )
-    extra = (
-        # order tuple of the row that STARTS the periodic stretch
-        [F.lag(F.struct(*order_cols), period).over(w).alias("_ps")]
-        if carry_start_struct
-        else [F.col(value_col)]
-    )
-    marked = df.select(
-        *keys, *order_cols, *extra, rn.alias("_rn"), cont.alias("_c")
-    )
-    m2 = marked.select(
-        "*",
-        (F.col("_c") & ~F.lag(F.col("_c"), 1, False).over(w)).alias("_new"),
-    )
-    wc = (
-        Window.partitionBy(*keys)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = F.max(F.when(F.col("_new"), F.col("_rn"))).over(wc)
-    return m2.withColumn("_start", start)
 
 
 def periodic_runs(
@@ -253,24 +230,30 @@ def periodic_runs(
     ``out_reps`` = ``out_len // period`` full motif repetitions. Only
     stretches with at least ``min_reps`` repetitions are returned.
 
-    Plan: the same ONE-exchange contract as every member of this module
-    — three stacked Window selects over one (keys, order) spec (lag-p
-    indicator, island-start marker, running max), then a groupBy whose
-    keys contain the partition keys, so Catalyst reuses the exchange for
-    the island aggregation (locked by the plan test).
+    Plan: the module's two stacked Window selects over one (keys, order)
+    spec, then a groupBy of the continuing rows by (keys, ``_reset``)
+    whose keys contain the partition keys, so Catalyst reuses the
+    exchange for the island aggregation (locked by the plan test).
     """
     if min_reps < 1:
         raise ValueError("min_reps must be >= 1")
-    m2 = _periodic_islands(
-        df, keys, order_cols, value_col, period,
-        caller="periodic_runs",
-        out_names={out_len, out_reps, "period"},
-        carry_start_struct=True,
+    _guard(
+        df, keys, order_cols, "periodic_runs",
+        {"_ps", out_len, out_reps, "period"},
+        value_col=value_col, period=period,
+    )
+    # order tuple of the row that STARTS the periodic stretch
+    start_row = F.lag(F.struct(*order_cols), period).over(
+        Window.partitionBy(*keys).orderBy(*order_cols)
+    )
+    marked = _islands(
+        df, keys, order_cols, {"": (value_col, period)},
+        [*keys, *order_cols, start_row.alias("_ps")],
     )
     stretch = F.col("_clen") + F.lit(period)
     return (
-        m2.filter(F.col("_c"))
-        .groupBy(*keys, "_start")
+        marked.filter(F.col("_c"))
+        .groupBy(*keys, "_reset")
         .agg(
             F.count(F.lit(1)).alias("_clen"),
             F.min_by("_ps", "_rn").alias("_s0"),
@@ -296,31 +279,26 @@ def periodic_overflow(
 ) -> DataFrame:
     """Per-row overflow twin of :func:`periodic_runs` — the loop family's
     :func:`stuck_runs`: every row whose 1-based position in its
-    period-``period`` stretch (continuing-run position + ``period``)
-    exceeds ``max_reps * period``, so dropping exactly the returned rows
-    leaves at most ``max_reps`` full motif repetitions (the engine
+    period-``period`` stretch (``_rn - _reset + period``) exceeds
+    ``max_reps * period``, so dropping exactly the returned rows leaves
+    at most ``max_reps`` full motif repetitions (the engine
     PeriodicLoopCheck contract). Output: the key columns, the order
     columns, the row's value, and ``stretch_pos``. Same ONE-exchange
-    stacked-window plan as the summary variant."""
+    two-window plan as the summary variant."""
     if max_reps < 1:
         raise ValueError("max_reps must be >= 1")
-    m2 = _periodic_islands(
-        df, keys, order_cols, value_col, period,
-        caller="periodic_overflow",
-        out_names={"stretch_pos"},
-        carry_start_struct=False,
+    _guard(
+        df, keys, order_cols, "periodic_overflow", {"stretch_pos"},
+        value_col=value_col, period=period,
     )
-    stretch = (F.col("_rn") - F.col("_start") + F.lit(1 + period)).cast(
-        "long"
+    marked = _islands(
+        df, keys, order_cols, {"": (value_col, period)},
+        [*keys, *order_cols, value_col],
     )
-    return (
-        m2.withColumn("stretch_pos", stretch)
-        .filter(
-            F.col("_c")
-            & (F.col("stretch_pos") > F.lit(int(max_reps) * int(period)))
-        )
-        .select(*keys, *order_cols, value_col, "stretch_pos")
-    )
+    stretch = (F.col("_rn") - F.col("_reset") + F.lit(period)).cast("long")
+    return marked.filter(
+        F.col("_c") & (stretch > F.lit(int(max_reps) * int(period)))
+    ).select(*keys, *order_cols, value_col, stretch.alias("stretch_pos"))
 
 
 def stuck_runs(

@@ -1913,113 +1913,30 @@ def stream_run_violations(
     (operators/runs.py:stuck_runs / engine RunLengthCheck): one output
     row per event past position ``max_run`` of a run of consecutive
     equal ``value_col`` values within its key — the stuck-sensor /
-    looping-agent alarm LIVE, completing the batch↔stream matrix for
-    the RUN family (rates, transitions, digests, drift already have
-    streaming twins).
+    looping-agent alarm LIVE.
 
-    Per-key state is O(1) REGARDLESS of run length: the last value seen
-    plus the current run length — two fields, against the rate
-    emitter's in-window array. Within a micro-batch the run positions
-    are a vectorized pandas sort + shift + cumulative-max (the
-    gaps-and-islands identity, no per-row Python loop); only the first
-    row of the batch consults state.
+    A run is the period-1 loop: this is :func:`stream_periodic_violations`
+    with ``period=1`` and ``max_reps=max_run``, its ``stretch_pos``
+    renamed ``run_pos``. Per-key state is O(1) regardless of run length
+    (the last value plus the continuing-run length); the equality
+    contract (canonical string form, NULL continues a NULL run),
+    ordering, boundary semantics and ``state_ttl_ms`` eviction are that
+    emitter's.
 
-    Equality contract: runs compare on the CANONICAL STRING form of
-    ``value_col`` (cast JVM-side before Python) — identical to native
-    equality for string/integer/boolean columns, the engine-portable
-    move the hash families use; a NULL value continues a NULL run
-    (stuck-null is stuck), matching the batch rule's null-safe
-    equality. Rows are ordered by ``order_cols`` within the batch
-    (NULLs first, Spark's ascending convention).
-
-    Boundary semantics vs batch, stated honestly: positions are exact
-    when each key's rows arrive in ``order_cols`` order across
-    micro-batches — guaranteed unconditionally when each key is
-    confined to one source file (the oracle's staging). A late row
-    restarts or extends the CURRENT run as if appended; the batch path
-    would have spliced it into order. ``state_ttl_ms`` evicts idle keys
-    (open key vocabularies); an evicted key restarts its run count.
+    State format: ``vals array<string>, clen bigint`` (the periodic
+    emitter's). Checkpoints written by the former ``last string, run
+    bigint`` state are refused by Spark on restart
+    (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``), so a
+    ``jobs/stream_validate.py --suite`` run with a ``runlength`` entry
+    needs a fresh ``--checkpoint``.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if max_run < 1:
         raise ValueError(f"max_run must be >= 1, got {max_run}")
-    order_cols = list(order_cols)
-    if not order_cols:
-        raise ValueError("order_cols must name at least one column")
-
-    fields = {f.name: f.dataType.simpleString() for f in stream_df.schema.fields}
-    missing = [c for c in [key_col, value_col, *order_cols] if c not in fields]
-    if missing:
-        raise ValueError(f"columns {missing} not in stream schema")
-    keyed = stream_df.select(
-        F.col(key_col).cast("string").alias("_k"),
-        *[F.col(c) for c in order_cols],
-        F.col(value_col).cast("string").alias("_v"),
-    )
-    out_schema = (
-        f"{key_col} string, "
-        + ", ".join(f"{c} {fields[c]}" for c in order_cols)
-        + f", {value_col} string, run_pos long"
-    )
-    cap = int(max_run)
-
-    def fn(key, pdf_iter, state: GroupState):
-        import numpy as np
-        import pandas as pd
-
-        if state_ttl_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-
-        def park(last, run):
-            state.update((last, int(run)))
-            if state_ttl_ms is not None:
-                state.setTimeoutDuration(state_ttl_ms)
-
-        chunks = [p for p in pdf_iter if len(p)]
-        if not chunks:
-            if state.exists:
-                park(*state.get)
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-        pdf = pdf.sort_values(order_cols, na_position="first", kind="stable")
-        v = pdf["_v"].astype(object).where(pdf["_v"].notna(), None)
-        prev = v.shift(1)
-        eq = (v == prev) | (v.isna() & prev.isna())
-        is_new = ~eq.to_numpy(dtype=bool)
-        is_new[0] = True
-        carry = 0
-        if state.exists:
-            last, run = state.get
-            v0 = v.iloc[0]
-            if v0 == last or (v0 is None and last is None):
-                is_new[0] = False
-                carry = int(run)
-        idx = np.arange(len(pdf))
-        start = np.maximum.accumulate(np.where(is_new, idx, -1))
-        pos = np.where(start >= 0, idx - start + 1, carry + idx + 1)
-        park(v.iloc[-1], pos[-1])
-        bad = pos > cap
-        if bad.any():
-            out = {key_col: key[0]}
-            for c in order_cols:
-                out[c] = pdf[c].to_numpy()[bad]
-            out[value_col] = v.to_numpy(dtype=object)[bad]
-            out["run_pos"] = pos[bad]
-            yield pd.DataFrame(out)
-
-    return keyed.groupBy("_k").applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="last string, run bigint",
-        outputMode=output_mode,
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if state_ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
+    return stream_periodic_violations(
+        stream_df, key_col, order_cols, value_col,
+        period=1, max_reps=max_run,
+        output_mode=output_mode, state_ttl_ms=state_ttl_ms,
+    ).withColumnRenamed("stretch_pos", "run_pos")
 
 
 def stream_periodic_violations(
@@ -2037,8 +1954,8 @@ def stream_periodic_violations(
     output row per event extending a period-``period`` stretch (value
     null-safe equal to the value ``period`` rows earlier within its key)
     past ``max_reps`` full motif repetitions — the ping-pong agent
-    alarm LIVE, completing the batch↔stream matrix for the LOOP family
-    the way stream_run_violations does for runs (period 1).
+    alarm LIVE. Period 1 is the run rule (stream_run_violations calls
+    this kernel with ``period=1``).
 
     Per-key state is O(period) REGARDLESS of stretch length: the last
     ``period`` values plus the current continuing-run length — the
@@ -2048,11 +1965,19 @@ def stream_periodic_violations(
     lag compare + cumulative-max islands, no per-row Python); only the
     batch's opening rows consult the carried buffer.
 
-    Equality contract and boundary semantics are stream_run_violations'
-    verbatim: canonical-string comparison (cast JVM-side), NULL cycling
-    with NULL is a loop, positions exact when each key's rows arrive in
-    ``order_cols`` order across micro-batches (guaranteed when each key
-    is confined to one staged file), ``state_ttl_ms`` evicts idle keys.
+    Equality contract: values compare on their CANONICAL STRING form
+    (cast JVM-side before Python) — identical to native equality for
+    string/integer/boolean columns; NULL cycling with NULL is a loop
+    (a NULL run is stuck), matching the batch rule's null-safe
+    equality. Rows are ordered by ``order_cols`` within the batch
+    (NULLs first, Spark's ascending convention).
+
+    Boundary semantics vs batch: positions are exact when each key's
+    rows arrive in ``order_cols`` order across micro-batches —
+    guaranteed when each key is confined to one staged file. A late row
+    extends or breaks the CURRENT stretch as if appended; the batch path
+    would have spliced it into order. ``state_ttl_ms`` evicts idle keys
+    (open key vocabularies); an evicted key restarts its count.
 
     Emitted ``stretch_pos`` = the row's 1-based position in its stretch
     (continuing-run length + ``period``) — fires when it exceeds

@@ -375,17 +375,16 @@ def _build_check(entry: dict, where: str, reference: DataFrame | None, cfg):
             if "last" in entry
             else None
         )
-        if allowed is None and first is None and last is None:
-            raise SuiteError(
-                f"{where}: sequence needs 'allowed', 'first' and/or 'last'"
+        try:
+            c = SequenceCheck(
+                check_id=cid,
+                value_col=entry["col"],
+                allowed=allowed,
+                first=first,
+                last=last,
             )
-        c = SequenceCheck(
-            check_id=cid,
-            value_col=entry["col"],
-            allowed=allowed,
-            first=first,
-            last=last,
-        )
+        except ValueError as e:
+            raise SuiteError(f"{where}: {e}") from None
     elif t == "drift":
         _require(entry, where, "expr")
         method = entry.get("method", "approx")

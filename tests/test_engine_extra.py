@@ -1,6 +1,7 @@
 """GroupAggCheck + the "tdigest" (approx alias) drift method via the engine,
-the refusal of checks no pass compiles, and a one-of-each-class battery
-that must not depend on partition count or window chunking."""
+the run and loop rules (a run is the period-1 loop), the refusal of checks
+no pass compiles, and a one-of-each-class battery that must not depend on
+partition count or window chunking."""
 
 import pytest
 import pyspark.sql.functions as F
@@ -325,6 +326,134 @@ def test_periodic_loop_check_validates_params():
         PeriodicLoopCheck(check_id="x", value_col="role", period=0)
     with pytest.raises(ValueError, match="max_reps"):
         PeriodicLoopCheck(check_id="x", value_col="role", max_reps=0)
+
+
+def _stage_in_order(spark, tmp_path, rows, n_files):
+    """Write ``rows`` (part, conv_id, turn_idx, role) as ``n_files``
+    single-file parquet batches, file j holding the j-th slice of every
+    conversation's turns, with increasing mtimes so a stream reads each
+    conversation in turn order and runs span files."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    inp = str(tmp_path / "in_order")
+    os.makedirs(inp)
+    top = max(r[2] for r in rows) + 1
+    step = -(-top // n_files)
+    now = time.time()
+    for j in range(n_files):
+        part = [r for r in rows if j * step <= r[2] < (j + 1) * step]
+        d = str(tmp_path / f"slice{j}")
+        spark.createDataFrame(
+            part, "part string, conv_id string, turn_idx int, role string"
+        ).coalesce(1).write.parquet(d)
+        dst = f"{inp}/{j:03d}.parquet"
+        shutil.copy(glob.glob(f"{d}/part-*.parquet")[0], dst)
+        os.utime(dst, (now - 100 + 10 * j, now - 100 + 10 * j))
+    return inp
+
+
+@pytest.mark.parametrize("m", [1, 2, 3])
+def test_run_is_period_one_loop(spark, tmp_path, m):
+    """A run is the period-1 loop: RunLengthCheck(max_run=m) and
+    PeriodicLoopCheck(period=1, max_reps=m) flag the same rows in the
+    engine, stuck_runs and periodic_overflow(period=1) return the same
+    rows, and so do the two streaming emitters — one file per
+    micro-batch and all files at once — on a corpus with NULL runs and
+    runs spanning files."""
+    import random
+
+    from taco_toolbox_spark.checks.base import (
+        PeriodicLoopCheck,
+        RunLengthCheck,
+    )
+    from taco_toolbox_spark.operators.runs import (
+        periodic_overflow,
+        stuck_runs,
+    )
+    from taco_toolbox_spark.streaming.validate_stream import (
+        drain,
+        stream_periodic_violations,
+        stream_run_violations,
+    )
+
+    rnd = random.Random(12)
+    rows = []
+    for k in range(8):
+        vals = []
+        while len(vals) < 20:
+            vals += [rnd.choice(["a", "b", None])] * rnd.randint(1, 5)
+        rows += [(f"p{k % 2}", f"c{k}", i, v) for i, v in enumerate(vals[:20])]
+    df = spark.createDataFrame(
+        rows, "part string, conv_id string, turn_idx int, role string"
+    )
+
+    def engine_rows(check):
+        res = run_validation(df, [check], EngineConfig())
+        got = sorted(
+            tuple(r)
+            for r in res.violations.select(
+                "part", "conv_id", "turn_idx"
+            ).collect()
+        )
+        res.release()
+        return got
+
+    run = engine_rows(RunLengthCheck(check_id="c", value_col="role", max_run=m))
+    loop = engine_rows(
+        PeriodicLoopCheck(check_id="c", value_col="role", period=1, max_reps=m)
+    )
+    assert run == loop and len(run) > 0
+
+    def op_rows(frame, pos):
+        return sorted(
+            (r.conv_id, r.turn_idx, r.role, r[pos]) for r in frame.collect()
+        )
+
+    keys, order = ["conv_id"], ["turn_idx"]
+    stuck = op_rows(stuck_runs(df, keys, order, "role", m), "run_pos")
+    assert stuck == op_rows(
+        periodic_overflow(df, keys, order, "role", 1, m), "stretch_pos"
+    )
+    assert any(r[2] is None for r in stuck)  # a NULL run overflows
+
+    n_files = 4
+    inp = _stage_in_order(spark, tmp_path, rows, n_files)
+    for per_trigger in (1, n_files):
+        runs = drain(
+            spark,
+            inp,
+            lambda s: stream_run_violations(
+                s, "conv_id", ["turn_idx"], "role", max_run=m
+            ),
+            "update",
+            per_trigger,
+        )
+        loops = drain(
+            spark,
+            inp,
+            lambda s: stream_periodic_violations(
+                s, "conv_id", ["turn_idx"], "role", period=1, max_reps=m
+            ),
+            "update",
+            per_trigger,
+        )
+        assert op_rows(runs, "run_pos") == op_rows(loops, "stretch_pos")
+        assert op_rows(runs, "run_pos") == stuck
+
+
+def test_empty_sequence_check_is_refused():
+    """A SequenceCheck with no pair, opening or closing rule compiles to
+    no pass; it must be refused at construction instead of reading as
+    passed on every partition."""
+    from taco_toolbox_spark.checks.base import SequenceCheck
+
+    with pytest.raises(ValueError, match="'allowed', 'first' and/or 'last'"):
+        SequenceCheck(check_id="empty_seq", value_col="role", allowed=None)
+    # any one rule is enough
+    SequenceCheck(check_id="s", value_col="role", allowed=None, last=("a",))
 
 
 def test_unsupported_check_is_refused(corpus):

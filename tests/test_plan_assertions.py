@@ -654,7 +654,7 @@ def test_engine_runlength_pass_shares_exchange(spark):
     """The engine's RunLengthCheck pass compiles to the same one-exchange
     one-sort shape keyed by (part, conv)."""
     from taco_toolbox_spark.checks.base import RunLengthCheck
-    from taco_toolbox_spark.engine import _runlength_pass
+    from taco_toolbox_spark.engine import _periodic_pass
 
     df = spark.range(0, 500).selectExpr(
         "cast(id % 3 as string) AS part",
@@ -663,7 +663,7 @@ def test_engine_runlength_pass_shares_exchange(spark):
         "case when id % 5 < 3 then 'u' else 'a' end AS role",
     )
     plan = _plan(
-        _runlength_pass(
+        _periodic_pass(
             df,
             [RunLengthCheck(check_id="r", value_col="role", max_run=2)],
             EngineConfig(),
@@ -695,7 +695,7 @@ def test_periodic_runs_one_exchange(spark):
     ):
         plan = _plan(out)
         assert plan.count("Exchange") == 1, plan
-        assert plan.count("Window") == 3, plan
+        assert plan.count("Window") == 2, plan
         for bad in ("Join", "BatchEvalPython", "ArrowEvalPython"):
             assert bad not in plan, bad
 
@@ -722,7 +722,7 @@ def test_engine_periodic_pass_shares_exchange(spark):
     )
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Sort ") == 1, plan
-    assert plan.count("Window") == 3, plan
+    assert plan.count("Window") == 2, plan
     for bad in ("Join", "BatchEvalPython", "ArrowEvalPython"):
         assert bad not in plan, bad
 
