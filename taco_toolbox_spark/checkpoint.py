@@ -209,12 +209,12 @@ def record_categorical_state(
     can rebuild the corpus-wide baseline for a CategoricalDriftCheck — or
     drift-judge only its NEW partitions against the stored distribution —
     without rescanning finished partitions."""
-    from .checks.drift import NULL_CATEGORY
+    from .checks.drift import as_category
 
     rows = (
         df.groupBy(
             F.col(partition_col).cast("string").alias("part"),
-            F.coalesce(F.col(cat_col), F.lit(NULL_CATEGORY)).alias("_c"),
+            as_category(F.col(cat_col)).alias("_c"),
         )
         .agg(F.count(F.lit(1)).alias("_n"))
         .collect()

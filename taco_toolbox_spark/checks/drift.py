@@ -17,6 +17,20 @@ two paths, both plain JVM aggregations with no Python workers.
 Both feed the same column-expression judge (:func:`drift_violations_approx`,
 deviation :func:`rel_dev`). The checkpoint manifest stores Spark's native
 KLL sketches (checkpoint.record_sketch_state).
+
+The other members each compute their statistic in one kernel:
+
+  total variation  :func:`_tv_grid` over a (keys…, cond, cat) count
+                   table (:func:`_cell_counts`, categories normalized by
+                   :func:`as_category`). ``categorical_tv`` is the table at
+                   one constant condition, ``conditional_tv`` the table
+                   itself, ``transition_drift`` the table over transition
+                   pairs; suite calibration feeds it too. Its streaming
+                   twin is ``streaming.stream_conditional_tv``.
+  Pearson          :func:`_pearson_moments` (exact DECIMAL moments) and
+                   :func:`pearson_corr` (the one float expression).
+  KS, centroid     :func:`ks_statistic_by_partition`,
+                   :func:`embedding_centroid_drift`.
 """
 
 from __future__ import annotations
@@ -141,15 +155,119 @@ def drift_violations_approx(
 NULL_CATEGORY = "<null>"
 
 
+def as_category(c: Column) -> Column:
+    """THE category normalizer of the TV family, batch, stream, suite and
+    checkpoint alike: the value cast to string, NULL folded into
+    ``NULL_CATEGORY``. The cast comes first so the coalesce never asks
+    Spark to cast ``'<null>'`` to the column's own type (a
+    ``CAST_INVALID_INPUT`` error under ANSI mode for a numeric column)."""
+    return F.coalesce(c.cast("string"), F.lit(NULL_CATEGORY))
+
+
+def _cell_counts(
+    df: DataFrame, keys: Sequence[Column], cond: Column, cat: Column
+) -> DataFrame:
+    """The one data-sized pass of the TV family: ``(keys…, _k, _c, _n)``,
+    a grouped count (map-side partial agg) per (keys, cond, cat) cell. A
+    marginal histogram is the table at one constant condition."""
+    return df.groupBy(
+        *keys, as_category(cond).alias("_k"), as_category(cat).alias("_c")
+    ).agg(F.count(F.lit(1)).alias("_n"))
+
+
+def _baseline_frame(spark, baseline_counts: dict) -> DataFrame:
+    """A {(cond, cat): n} baseline as a broadcastable literal frame
+    ``(_k, _c, _nb)`` — built JVM-side, never a Python RDD scan."""
+    from ..schema import literal_frame
+
+    return literal_frame(
+        spark,
+        [(str(k), str(c), int(n))
+         for (k, c), n in sorted(baseline_counts.items())],
+        "_k string, _c string, _nb long",
+    )
+
+
+def _tv_grid(counts: DataFrame, base: DataFrame) -> DataFrame:
+    """THE exact total-variation kernel of the batch drift family.
+
+    ``counts`` is ``(keys…, _k, _c, _n)`` (:func:`_cell_counts`);
+    ``base`` is ``(bkeys…, _k, _c, _nb)`` with ``bkeys`` a subset of
+    ``keys`` (none for a stored baseline; the member id for the suite's
+    self-baseline calibration). Per (keys, _k) group:
+
+        TV = 1/2 · Σ_c | n(c)/N − n_b(c)/N_b |
+
+    with each observed category's term the cross-multiplied INTEGER
+    ``|n·N_b − n_b·N|`` (no per-category float division), summed as
+    BIGINT (order-independent), ONE float division at the end — so an
+    independent engine (the DuckDB oracle) reproduces every row
+    bit-for-bit, which no float-accumulated KL/PSI statistic can promise.
+    Products stay < 2^63 up to ~3·10^9 rows per condition per side; past
+    that, pre-scale the baseline (TV needs only its per-condition
+    *proportions*, so a common per-condition divisor is lossless for the
+    verdict).
+
+    Baseline categories MISSING from a group never need a grid row: their
+    numerator mass is the closed form ``(N_b − Σ_present n_b) · N``.
+    Materializing them (the naive union-of-categories grid) would
+    re-derive the category axis from the input and, because Catalyst
+    collapses the aggregate-over-aggregate into a second direct
+    aggregation of the input, re-execute the whole data-sized subtree.
+    Everything here runs over the grid: per-group totals via one window,
+    the baseline through broadcast joins. A condition the baseline has
+    never seen surfaces with ``n_base`` and ``tv`` NULL.
+
+    Returns ``(keys…, _k, n_part, n_base, tv_num, tv)``.
+    """
+    keys = [c for c in counts.columns if c not in ("_k", "_c", "_n")]
+    bkeys = [c for c in base.columns if c not in ("_k", "_c", "_nb")]
+    base_tot = base.groupBy(*bkeys, "_k").agg(F.sum("_nb").alias("n_base"))
+    w = Window.partitionBy(*keys, "_k")
+    stats = (
+        counts.join(F.broadcast(base), [*bkeys, "_k", "_c"], "left")
+        .join(F.broadcast(base_tot), [*bkeys, "_k"], "left")
+        .select(
+            "*",
+            F.sum("_n").over(w).alias("n_part"),
+            F.sum(F.coalesce(F.col("_nb"), F.lit(0)))
+            .over(w)
+            .alias("_nb_present"),
+        )
+    )
+    term = F.abs(
+        F.col("_n") * F.col("n_base")
+        - F.coalesce(F.col("_nb"), F.lit(0)) * F.col("n_part")
+    )
+    return (
+        stats.groupBy(*keys, "_k", "n_part", "n_base", "_nb_present")
+        .agg(F.sum(term).alias("_present_num"))
+        .select(
+            *keys,
+            "_k",
+            "n_part",
+            "n_base",
+            (
+                F.col("_present_num")
+                + (F.col("n_base") - F.col("_nb_present")) * F.col("n_part")
+            ).alias("tv_num"),
+        )
+        .select(
+            "*",
+            (
+                F.col("tv_num")
+                / (F.lit(2.0) * F.col("n_part") * F.col("n_base"))
+            ).alias("tv"),
+        )
+    )
+
+
 def categorical_counts(df: DataFrame, cat_col: str) -> dict[str, int]:
     """Baseline category histogram as a plain dict (tiny: one row per
-    category). The collect is over the post-aggregation frame — a handful
-    of rows regardless of input size."""
-    rows = (
-        df.groupBy(F.coalesce(F.col(cat_col), F.lit(NULL_CATEGORY)).alias("_c"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
+    category) — the conditional table at one constant condition. The
+    collect is over the post-aggregation frame — a handful of rows
+    regardless of input size."""
+    rows = _cell_counts(df, [], F.lit(""), F.col(cat_col)).collect()
     return {r["_c"]: r["_n"] for r in rows}
 
 
@@ -164,78 +282,24 @@ def categorical_tv(
 
         TV = 1/2 · Σ_c | n_part(c)/N_part − n_base(c)/N_base |
 
-    computed EXACTLY: each category's term is the integer
-    ``|n_part(c)·N_base − n_base(c)·N_part|`` (cross-multiplied — no
-    per-category float division), summed as BIGINT (order-independent),
-    with ONE float division at the end. An independent engine (the DuckDB
-    oracle) reproduces the result bit-for-bit, which no float-accumulated
-    KL/PSI statistic can promise. Products stay < 2^63 up to ~3·10^9 rows
-    per side; past that, pre-scale the baseline histogram (TV only needs
-    the baseline's *proportions*, so dividing all baseline counts by a
-    common factor is lossless for the verdict and keeps the integer
-    headroom at 10^12 rows).
+    computed EXACTLY by the family's one kernel (:func:`_tv_grid`): a
+    marginal histogram is the conditional table of :func:`conditional_tv`
+    at ONE constant condition. Plan shape: the input is touched EXACTLY
+    ONCE — one grouped count; nothing after it touches more than
+    |parts|·|categories| rows.
 
-    Returns (part, n_part, tv_num, tv) — one row per partition. Plan
-    shape: the input is touched EXACTLY ONCE — one grouped count
-    (partial-aggregated map-side); nothing after the first aggregation
-    touches more than |parts|·|categories| rows. Baseline categories a
-    partition lacks never need a grid row: their numerator mass is the
-    closed form ``(N_base − Σ_present n_b) · N_part`` (materializing a
-    union-of-categories grid would re-derive the category axis from the
-    input, and Catalyst collapses that aggregate-over-aggregate into a
-    SECOND full input scan).
+    Returns (part, n_part, tv_num, tv) — one row per partition.
     """
-    from ..schema import literal_frame
-
-    n_base_total = int(sum(baseline_counts.values()))
-    if n_base_total <= 0:
+    if sum(int(v) for v in baseline_counts.values()) <= 0:
         raise ValueError("baseline_counts must hold at least one observation")
-
-    cat = F.coalesce(F.col(cat_col), F.lit(NULL_CATEGORY))
-    counts = (
-        df.groupBy(F.col(part_col).cast("string").alias("part"), cat.alias("_c"))
-        .agg(F.count(F.lit(1)).alias("_n"))
+    counts = _cell_counts(
+        df, [F.col(part_col).cast("string").alias("part")],
+        F.lit(""), F.col(cat_col),
     )
-    base = literal_frame(
-        df.sparkSession,
-        [(str(k), int(v)) for k, v in sorted(baseline_counts.items())],
-        "_c string, _nb long",
+    base = _baseline_frame(
+        df.sparkSession, {("", k): v for k, v in baseline_counts.items()}
     )
-    w = Window.partitionBy("part")
-    stats = counts.join(F.broadcast(base), ["_c"], "left").select(
-        "*",
-        F.sum("_n").over(w).alias("n_part"),
-        F.sum(F.coalesce(F.col("_nb"), F.lit(0)))
-        .over(w)
-        .alias("_nb_present"),
-    )
-    # categories observed in the partition: exact cross-multiplied term;
-    # baseline categories the partition lacks each contribute n_b·N_part —
-    # summed in closed form from the per-partition present mass
-    term = F.abs(
-        F.col("_n") * F.lit(n_base_total)
-        - F.coalesce(F.col("_nb"), F.lit(0)) * F.col("n_part")
-    )
-    return (
-        stats.groupBy("part", "n_part", "_nb_present")
-        .agg(F.sum(term).alias("_present_num"))
-        .select(
-            "part",
-            "n_part",
-            (
-                F.col("_present_num")
-                + (F.lit(n_base_total) - F.col("_nb_present"))
-                * F.col("n_part")
-            ).alias("tv_num"),
-        )
-        .select(
-            "*",
-            (
-                F.col("tv_num")
-                / (F.lit(2.0) * F.col("n_part") * F.lit(float(n_base_total)))
-            ).alias("tv"),
-        )
-    )
+    return _tv_grid(counts, base).select("part", "n_part", "tv_num", "tv")
 
 
 def categorical_drift_violations(
@@ -470,19 +534,30 @@ def _pearson_moments(
         F.sum(y * y).alias("_syy"),
         F.sum(x * y).alias("_sxy"),
     )
-    nd = F.col("n").cast("double")
-    sx, sy = F.col("_sx").cast("double"), F.col("_sy").cast("double")
-    sxx = F.col("_sxx").cast("double")
-    syy = F.col("_syy").cast("double")
-    sxy = F.col("_sxy").cast("double")
-    num = nd * sxy - sx * sy
-    vx = nd * sxx - sx * sx
-    vy = nd * syy - sy * sy
-    corr = F.when(
-        (F.col("n") >= 2) & (vx > 0) & (vy > 0),
+    return m, pearson_corr("n", "_sx", "_sy", "_sxx", "_syy", "_sxy")
+
+
+def pearson_corr(
+    n: str, sx: str, sy: str, sxx: str, syy: str, sxy: str
+) -> Column:
+    """The float64 Pearson expression over the six named exact moment
+    columns (count, Σx, Σy, Σx², Σy², Σxy) — shared by
+    :func:`_pearson_moments` and the suite's correlation calibration:
+
+        corr = (n·Σxy − Σx·Σy) / (√(n·Σx² − Σx²) · √(n·Σy² − Σy²))
+
+    NULL for n < 2 or zero variance on either side."""
+    nd = F.col(n).cast("double")
+    dx, dy = F.col(sx).cast("double"), F.col(sy).cast("double")
+    dxx, dyy = F.col(sxx).cast("double"), F.col(syy).cast("double")
+    dxy = F.col(sxy).cast("double")
+    num = nd * dxy - dx * dy
+    vx = nd * dxx - dx * dx
+    vy = nd * dyy - dy * dy
+    return F.when(
+        (F.col(n) >= 2) & (vx > 0) & (vy > 0),
         num / (F.sqrt(vx) * F.sqrt(vy)),
     )
-    return m, corr
 
 
 def correlation_by_partition(
@@ -616,16 +691,7 @@ def conditional_counts(
     post-aggregation frame — |conds|·|cats| rows regardless of input size.
     Both axes accept SQL expressions (``least(floor(value/100), 4)``), cast
     to string with NULLs folded into the shared ``NULL_CATEGORY``."""
-    rows = (
-        df.groupBy(
-            F.coalesce(F.expr(cond_expr).cast("string"),
-                       F.lit(NULL_CATEGORY)).alias("_k"),
-            F.coalesce(F.expr(cat_expr).cast("string"),
-                       F.lit(NULL_CATEGORY)).alias("_c"),
-        )
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
+    rows = _cell_counts(df, [], F.expr(cond_expr), F.expr(cat_expr)).collect()
     return {(r["_k"], r["_c"]): r["_n"] for r in rows}
 
 
@@ -647,18 +713,13 @@ def conditional_tv(
     given tool co-occurs with silently shifts) — the contingency-table
     failure class no marginal check can see.
 
-    Exact in the family's discipline (categorical_tv): for each
-    (part, cond) the statistic is
+    For each (part, cond) the statistic is
 
         TV = 1/2 · Σ_c | n(part,cond,c)/N(part,cond) − n_b(cond,c)/N_b(cond) |
 
-    with each category term the cross-multiplied INTEGER
-    ``|n·N_b(cond) − n_b·N(part,cond)|``, summed as BIGINT
-    (order-independent), ONE float division at the end — bit-for-bit
-    reproducible by an independent engine. Products stay < 2^63 up to
-    ~3·10^9 rows per conditioning value per side; past that, pre-scale the
-    baseline table (TV needs only the baseline's per-cond *proportions*,
-    so a common per-cond divisor is lossless for the verdict).
+    computed EXACTLY by the family's one kernel (:func:`_tv_grid`:
+    cross-multiplied INTEGER terms summed as BIGINT, the closed-form mass
+    of baseline categories the partition lacks, ONE float division).
 
     A conditioning value observed in a partition but ABSENT from the
     baseline has no distribution to compare against: its row surfaces with
@@ -666,80 +727,20 @@ def conditional_tv(
     helper fires it as its own "novel conditioning value" class.
 
     Plan shape: the input is touched EXACTLY ONCE — one grouped count
-    (map-side partial agg, shuffle keyed (part, cond, cat)). Everything
-    after runs over the |parts|·|conds|·|cats| grid: per-(part, cond)
-    totals via one grid-sized window, the baseline through broadcast
-    joins. Baseline categories MISSING from a (part, cond) never need a
-    grid row: their numerator mass is the closed form
-    ``(N_b(cond) − Σ_present n_b) · N(part, cond)`` — materializing them
-    (the naive union-of-categories grid) would re-derive the category
-    axis from the input and, because Catalyst collapses the
-    aggregate-over-aggregate into a second direct aggregation of the
-    input, re-execute the whole data-sized subtree (a second scan here; a
-    second lag/lead window pass in :func:`transition_drift`).
+    (map-side partial agg, shuffle keyed (part, cond, cat)); everything
+    after runs over the |parts|·|conds|·|cats| grid.
 
     Returns (part, cond, n_part, n_base, tv_num, tv) — one row per
     (partition, conditioning value) observed in ``df``.
     """
-    from ..schema import literal_frame
-
     if not baseline_counts:
         raise ValueError("baseline_counts must hold at least one observation")
-
-    cond = F.coalesce(F.expr(cond_expr).cast("string"), F.lit(NULL_CATEGORY))
-    cat = F.coalesce(F.expr(cat_expr).cast("string"), F.lit(NULL_CATEGORY))
-    counts = df.groupBy(
-        F.col(part_col).cast("string").alias("part"),
-        cond.alias("_k"),
-        cat.alias("_c"),
-    ).agg(F.count(F.lit(1)).alias("_n"))
-    base = literal_frame(
-        df.sparkSession,
-        [(str(k), str(c), int(n))
-         for (k, c), n in sorted(baseline_counts.items())],
-        "_k string, _c string, _nb long",
+    counts = _cell_counts(
+        df, [F.col(part_col).cast("string").alias("part")],
+        F.expr(cond_expr), F.expr(cat_expr),
     )
-    base_tot = base.groupBy("_k").agg(F.sum("_nb").alias("n_base"))
-    w = Window.partitionBy("part", "_k")
-    stats = (
-        counts.join(F.broadcast(base), ["_k", "_c"], "left")
-        .join(F.broadcast(base_tot), ["_k"], "left")
-        .select(
-            "*",
-            F.sum("_n").over(w).alias("n_part"),
-            F.sum(F.coalesce(F.col("_nb"), F.lit(0)))
-            .over(w)
-            .alias("_nb_present"),
-        )
-    )
-    # categories observed in the partition: exact cross-multiplied term;
-    # baseline categories the partition lacks: n = 0, so each contributes
-    # n_b·n_part — summed in closed form from the per-group present mass
-    term = F.abs(
-        F.col("_n") * F.col("n_base")
-        - F.coalesce(F.col("_nb"), F.lit(0)) * F.col("n_part")
-    )
-    return (
-        stats.groupBy("part", "_k", "n_part", "n_base", "_nb_present")
-        .agg(F.sum(term).alias("_present_num"))
-        .select(
-            "part",
-            F.col("_k").alias("cond"),
-            "n_part",
-            "n_base",
-            (
-                F.col("_present_num")
-                + (F.col("n_base") - F.col("_nb_present")) * F.col("n_part")
-            ).alias("tv_num"),
-        )
-        .select(
-            "*",
-            (
-                F.col("tv_num")
-                / (F.lit(2.0) * F.col("n_part") * F.col("n_base"))
-            ).alias("tv"),
-        )
-    )
+    base = _baseline_frame(df.sparkSession, baseline_counts)
+    return _tv_grid(counts, base).withColumnRenamed("_k", "cond")
 
 
 def conditional_drift_violations(
@@ -826,7 +827,7 @@ def transition_pairs(
             f"input columns collide with transition_pairs internals: "
             f"{sorted(hit)}"
         )
-    s = F.coalesce(F.expr(state_expr).cast("string"), F.lit(NULL_CATEGORY))
+    s = as_category(F.expr(state_expr))
     w = Window.partitionBy(seq_col).orderBy(*[F.col(c) for c in order_cols])
     staged = (
         df.withColumn("_s", s)

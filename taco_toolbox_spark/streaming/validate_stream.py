@@ -1143,7 +1143,7 @@ def stream_transition_pairs(
     the batch window, so the parity contract holds on NULL-ordered rows
     too.
     """
-    from ..checks.drift import NULL_CATEGORY, START_TOKEN
+    from ..checks.drift import START_TOKEN, as_category
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     if seq_col in ("from_state", "to_state"):
@@ -1159,8 +1159,7 @@ def stream_transition_pairs(
     keyed = stream_df.select(
         F.col(seq_col).cast("string").alias("_seq"),
         *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols)],
-        F.coalesce(F.col(state_col).cast("string"), F.lit(NULL_CATEGORY))
-        .alias("_s"),
+        as_category(F.col(state_col)).alias("_s"),
         *(
             [F.col(ts_col).cast("timestamp").alias("_t")]
             if ts_col is not None
@@ -1241,92 +1240,21 @@ def stream_categorical_tv(
     batch<->stream drift matrix (numeric quantile drift already streams
     via ``stream_drift``).
 
-    Same arithmetic discipline as the batch check: each baseline
-    category's term is the integer ``|n_win(c)·N_base − n_base(c)·N_win|``
-    (cross-multiplied — no per-category float division), categories the
-    stream sees that the baseline lacks contribute their closed-form mass
-    ``(N_win − Σ_present n_win(c))·N_base``, everything summed as BIGINT,
-    with ONE float division at the end — so an independent engine
-    reproduces every row bit-for-bit, which a float-accumulated KL/PSI
-    stream cannot promise.
-
-    State/plan shape: ONE watermarked streaming aggregation; the state per
-    open window is |baseline categories|+1 longs (the per-category
-    conditional sums are columns of a single grouped agg, partial-combined
-    map-side inside each micro-batch). The baseline is a plain dict — it
-    rides the closure as literals, no join, no broadcast, no per-batch
-    recollection. Emits (window_start, window_end, n_win, tv_num, tv
-    [, check_id, passed]) per window.
+    A marginal histogram is the conditional table at ONE constant
+    condition, so this is :func:`stream_conditional_tv` at condition
+    ``''`` projected to (window_start, window_end, n_win, tv_num, tv
+    [, check_id, passed]) per window — the same integer arithmetic, the
+    same single watermarked aggregation, the same small-vocabulary
+    contract (<= 1000 categories).
     """
-    from ..checks.drift import NULL_CATEGORY
-
-    # str-key the histogram exactly like the batch path's literal frame
-    # ([(str(k), int(v))]): a raw non-string literal would make Spark
-    # coerce the string-cast category column back to the literal's type
-    # ('1.0' == 1 is TRUE under numeric coercion) and break batch parity
-    norm_counts: dict[str, int] = {}
-    for k, v in baseline_counts.items():
-        norm_counts[str(k)] = norm_counts.get(str(k), 0) + int(v)
-    cats = sorted(norm_counts)
-    n_base = int(sum(norm_counts.values()))
-    if n_base <= 0:
+    if sum(int(v) for v in baseline_counts.values()) <= 0:
         raise ValueError("baseline_counts must hold at least one observation")
-    # one conditional-sum aggregate column per category: plan width (and
-    # codegen size) is O(|categories|) — the small-vocabulary contract.
-    # Past ~1k categories whole-stage codegen falls off the 64KB method
-    # cliff; route wide vocabularies through the batch categorical_tv
-    # (grouped count + broadcast literal frame) per micro-batch instead.
-    if len(cats) > 1000:
-        raise ValueError(
-            f"baseline has {len(cats)} categories; stream_categorical_tv "
-            "is contracted to small vocabularies (<= 1000) — use the "
-            "batch categorical_tv over foreachBatch for wide ones"
-        )
-
-    cat = F.coalesce(F.col(cat_col).cast("string"), F.lit(NULL_CATEGORY))
-    per_cat = [
-        F.sum(F.when(cat == F.lit(c), F.lit(1)).otherwise(F.lit(0)))
-        .cast("long")
-        .alias(f"_n{i}")
-        for i, c in enumerate(cats)
-    ]
-    agg = (
-        _event_time(stream_df, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window))
-        .agg(F.count(F.lit(1)).alias("n_win"), *per_cat)
-    )
-    present = sum(
-        (F.col(f"_n{i}") for i in range(len(cats))), F.lit(0).cast("long")
-    )
-    tv_num = sum(
-        (
-            F.abs(
-                F.col(f"_n{i}") * F.lit(n_base)
-                - F.lit(norm_counts[c]) * F.col("n_win")
-            )
-            for i, c in enumerate(cats)
-        ),
-        (F.col("n_win") - present) * F.lit(n_base),
-    )
-    # tv divides the NAMED tv_num column so the expression mirrors the
-    # batch categorical_tv (and the oracle SQL) token-for-token
-    out = agg.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        F.col("n_win"),
-        tv_num.cast("long").alias("tv_num"),
-    ).withColumn(
-        "tv",
-        F.col("tv_num") / (F.lit(2.0) * F.col("n_win") * F.lit(float(n_base))),
-    )
-    if threshold is not None:
-        out = out.select(
-            "*",
-            F.lit(check_id).alias("check_id"),
-            (F.col("tv") <= F.lit(float(threshold))).alias("passed"),
-        )
-    return out
+    return stream_conditional_tv(
+        stream_df, "''", cat_col,
+        {("", k): v for k, v in baseline_counts.items()},
+        ts_col=ts_col, window=window, watermark=watermark,
+        threshold=threshold, check_id=check_id,
+    ).drop("cond", "n_base")
 
 
 def stream_conditional_tv(
@@ -1367,7 +1295,7 @@ def stream_conditional_tv(
     aggregation. ``baseline_counts`` accepts the batch helper's
     {(cond, cat): n} or the suite document's nested {cond: {cat: n}}.
     """
-    from ..checks.drift import NULL_CATEGORY
+    from ..checks.drift import as_category
 
     flat: dict[tuple[str, str], int] = {}
     for k, v in baseline_counts.items():
@@ -1388,19 +1316,24 @@ def stream_conditional_tv(
         raise ValueError("baseline_counts must hold at least one observation")
     conds = sorted({k for k, _ in flat})
     cats = sorted({c for _, c in flat})
+    # one conditional-sum aggregate column per category: plan width (and
+    # codegen size) is O(|categories|) — the small-table contract. Past
+    # ~1k cells whole-stage codegen falls off the 64KB method cliff;
+    # route wide tables through the batch conditional_tv (grouped count
+    # + broadcast literal frame) per micro-batch instead.
     if len(conds) * len(cats) > 1000:
         raise ValueError(
-            f"baseline spans {len(conds)}x{len(cats)} cells; "
-            "stream_conditional_tv is contracted to small contingency "
-            "tables (<= 1000 cells) — use the batch conditional_tv over "
-            "foreachBatch for wide ones"
+            f"baseline spans {len(conds)} conditions x {len(cats)} "
+            "categories; stream_conditional_tv is contracted to small "
+            "contingency tables (<= 1000 cells) — use the batch "
+            "conditional_tv over foreachBatch for wide ones"
         )
     n_base = {
         k: sum(n for (k2, _), n in flat.items() if k2 == k) for k in conds
     }
 
-    cond = F.coalesce(F.expr(cond_expr).cast("string"), F.lit(NULL_CATEGORY))
-    cat = F.coalesce(F.expr(cat_expr).cast("string"), F.lit(NULL_CATEGORY))
+    cond = as_category(F.expr(cond_expr))
+    cat = as_category(F.expr(cat_expr))
     per_cat = [
         F.sum(F.when(cat == F.lit(c), F.lit(1)).otherwise(F.lit(0)))
         .cast("long")

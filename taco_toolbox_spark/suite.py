@@ -1305,20 +1305,17 @@ def suggest_suite(
     # health bands: baselines are the corpus's OWN exact counts, and each
     # threshold is the smallest 3-decimal value (floored at the 0.05
     # convention) under which every observed partition passes — computed
-    # with the enforcement passes' identical integer TV arithmetic, so
-    # discovery and enforcement cannot disagree. Scale shape: a marginal
-    # histogram is a conditional table with ONE conditioning value, so
-    # every `cat_drift` column AND every ordered `cond_drift` pair melts
-    # into a single exploded member axis and the WHOLE family calibrates
-    # from ONE data scan (one grouped count over (part, member, cond,
-    # cat)); the TV per (part, member, cond) then replays conditional_tv
-    # verbatim — present-category cross-multiplied integer terms plus the
-    # closed-form mass of baseline categories the partition lacks — as
-    # window/group sums over the grid-sized counts frame (persisted:
-    # grid-sized, reused for thresholds and document baselines without a
-    # second scan). Single-category columns are vacuous (TV ≡ 0) and
-    # skipped, like constant FD dependents.
-    from .checks.drift import NULL_CATEGORY
+    # by the enforcement passes' own TV kernel (checks.drift._tv_grid),
+    # so discovery and enforcement cannot disagree. Scale shape: a
+    # marginal histogram is a conditional table with ONE conditioning
+    # value, so every `cat_drift` column AND every ordered `cond_drift`
+    # pair melts into a single exploded member axis and the WHOLE family
+    # calibrates from ONE data scan (one grouped count over (part,
+    # member, cond, cat), persisted: grid-sized, reused for the kernel's
+    # per-member baseline, the thresholds and the document baselines
+    # without a second scan). Single-category columns are vacuous
+    # (TV ≡ 0) and skipped, like constant FD dependents.
+    from .checks.drift import _cell_counts, _tv_grid
 
     cat_cand = [
         c for c in sorted(vocab_sets)
@@ -1330,71 +1327,37 @@ def suggest_suite(
     cat_drift: list[tuple[str, dict[str, int], float]] = []
     cond_entries: list[tuple[str, str, dict, float]] = []
     if cat_cand:
-
-        def _snorm(c: str) -> Column:
-            return F.coalesce(F.col(c).cast("string"), F.lit(NULL_CATEGORY))
-
         structs = [
             F.struct(
                 F.lit(c).alias("m"), F.lit("").alias("k"),
-                _snorm(c).alias("c"),
+                F.col(c).cast("string").alias("c"),
             )
             for c in cat_cand
         ] + [
             F.struct(
                 F.lit(f"{det}\x1f{dep}").alias("m"),
-                _snorm(det).alias("k"), _snorm(dep).alias("c"),
+                F.col(det).cast("string").alias("k"),
+                F.col(dep).cast("string").alias("c"),
             )
             for det, dep in pair_list
         ]
-        counts = (
-            df.select(
-                F.col(cfg.partition_col).cast("string").alias("p"),
-                F.explode(F.array(*structs)).alias("e"),
-            )
-            .groupBy("p", "e.m", "e.k", "e.c")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .persist()
+        melted = df.select(
+            F.col(cfg.partition_col).cast("string").alias("part"),
+            F.explode(F.array(*structs)).alias("e"),
         )
-        nb = F.sum("n").over(Window.partitionBy("m", "k", "c"))
-        n_base = F.sum("n").over(Window.partitionBy("m", "k"))
-        n_part = F.sum("n").over(Window.partitionBy("p", "m", "k"))
-        stats = counts.select(
-            "p", "m", "k", "n",
-            nb.alias("nb"), n_base.alias("n_base"), n_part.alias("n_part"),
-        )
-        per = (
-            stats.groupBy("p", "m", "k", "n_base", "n_part")
-            .agg(
-                F.sum(
-                    F.abs(
-                        F.col("n") * F.col("n_base")
-                        - F.col("nb") * F.col("n_part")
-                    )
-                ).alias("present_num"),
-                F.sum("nb").alias("nb_present"),
-            )
-            .select(
-                "m",
-                (
-                    (
-                        F.col("present_num")
-                        + (F.col("n_base") - F.col("nb_present"))
-                        * F.col("n_part")
-                    )
-                    / (F.lit(2.0) * F.col("n_part") * F.col("n_base"))
-                ).alias("tv"),
-            )
-        )
+        counts = _cell_counts(
+            melted, [F.col("part"), F.col("e.m").alias("m")],
+            F.col("e.k"), F.col("e.c"),
+        ).persist()
+        base = counts.groupBy("m", "_k", "_c").agg(F.sum("_n").alias("_nb"))
         maxes = {
             r["m"]: float(r["mx"] or 0.0)
-            for r in per.groupBy("m").agg(F.max("tv").alias("mx")).collect()
-        }
-        bases = (
-            counts.groupBy("m", "k", "c")
-            .agg(F.sum("n").alias("nb"))
+            for r in _tv_grid(counts, base)
+            .groupBy("m")
+            .agg(F.max("tv").alias("mx"))
             .collect()
-        )
+        }
+        bases = base.collect()
         counts.unpersist()
         # one pass over the collected grid (keyed by member), not one
         # rescan per column/pair
@@ -1404,7 +1367,7 @@ def suggest_suite(
         for c in cat_cand:
             hist = dict(
                 sorted(
-                    (r["c"], int(r["nb"])) for r in by_member.get(c, [])
+                    (r["_c"], int(r["_nb"])) for r in by_member.get(c, [])
                 )
             )
             thr = max(
@@ -1415,9 +1378,9 @@ def suggest_suite(
             mkey = f"{det}\x1f{dep}"
             nested: dict[str, dict[str, int]] = {}
             for r in sorted(
-                by_member.get(mkey, []), key=lambda r: (r["k"], r["c"])
+                by_member.get(mkey, []), key=lambda r: (r["_k"], r["_c"])
             ):
-                nested.setdefault(r["k"], {})[r["c"]] = int(r["nb"])
+                nested.setdefault(r["_k"], {})[r["_c"]] = int(r["_nb"])
             thr = max(
                 0.05, math.ceil(maxes.get(mkey, 0.0) * 1000.0) / 1000.0
             )
@@ -1442,7 +1405,7 @@ def suggest_suite(
     # the whole family (the exact mode's documented verification-corpus
     # cost class), not two per column; the percentile expression is
     # exact_quantiles_by_partition's verbatim.
-    from .checks.drift import rel_dev
+    from .checks.drift import pearson_corr, rel_dev
 
     drift_probes = (0.1, 0.25, 0.5, 0.75, 0.9)
     num_drift: list[tuple[str, list[float], float]] = []
@@ -1567,18 +1530,8 @@ def suggest_suite(
     dec = "decimal(19,0)"
 
     def _corr(i: int) -> Column:
-        nd = F.col(f"_n{i}").cast("double")
-        sx = F.col(f"_sx{i}").cast("double")
-        sy = F.col(f"_sy{i}").cast("double")
-        sxx = F.col(f"_sxx{i}").cast("double")
-        syy = F.col(f"_syy{i}").cast("double")
-        sxy = F.col(f"_sxy{i}").cast("double")
-        num = nd * sxy - sx * sy
-        vx = nd * sxx - sx * sx
-        vy = nd * syy - sy * sy
-        return F.when(
-            (F.col(f"_n{i}") >= 2) & (vx > 0) & (vy > 0),
-            num / (F.sqrt(vx) * F.sqrt(vy)),
+        return pearson_corr(
+            *(f"_{f}{i}" for f in ("n", "sx", "sy", "sxx", "syy", "sxy"))
         )
 
     for lo in range(0, len(int_pairs), _CORR_PAIR_CHUNK):

@@ -45,14 +45,9 @@ def test_engine_verdicts_matches_duckdb_oracle(spark, tmp_path):
 SF0001 = "/root/testdata/sf0.001"
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(SF0001), reason="sf0.001 test tables not present"
-)
-@pytest.mark.parametrize("name", ["d5_corr_drift", "stream_corr_drift"])
-def test_corr_drift_matches_duckdb_oracle(spark, name):
-    """The batch and streaming Pearson drift queries share one moment
-    kernel (checks/drift.py:_pearson_moments); both must still reproduce
-    their DuckDB oracles bit-for-bit on the sf0.001 tables (TESTDATA.md)."""
+def _assert_matches_sf0001_oracle(spark, name):
+    """Run ``name`` on Spark and its oracle SQL on DuckDB over the sf0.001
+    tables (TESTDATA.md) and require a non-empty, exact match."""
     duckdb = pytest.importorskip("duckdb")
     import __spark_entry__ as entrymod
 
@@ -70,3 +65,38 @@ def test_corr_drift_matches_duckdb_oracle(spark, name):
         con.close()
     assert len(spark_pdf) > 0
     assert check_oracle.compare(name, spark_pdf, oracle_pdf) == []
+
+
+needs_sf0001 = pytest.mark.skipif(
+    not os.path.isdir(SF0001), reason="sf0.001 test tables not present"
+)
+
+
+@needs_sf0001
+@pytest.mark.parametrize("name", ["d5_corr_drift", "stream_corr_drift"])
+def test_corr_drift_matches_duckdb_oracle(spark, name):
+    """The batch and streaming Pearson drift queries share one moment
+    kernel (checks/drift.py:_pearson_moments); both must still reproduce
+    their DuckDB oracles bit-for-bit on the sf0.001 tables (TESTDATA.md)."""
+    _assert_matches_sf0001_oracle(spark, name)
+
+
+@needs_sf0001
+@pytest.mark.parametrize(
+    "name",
+    [
+        "d2_cat_drift",
+        "d6_cond_drift",
+        "d7_transition_drift",
+        "d10_gap_drift",
+        "d11_runlength_drift",
+        "stream_cat_drift",
+        "stream_cond_drift",
+    ],
+)
+def test_tv_drift_matches_duckdb_oracle(spark, name):
+    """Every total-variation drift query — the batch family on the one
+    grid kernel (checks/drift.py:_tv_grid) and the stream family on
+    stream_conditional_tv — reproduces its DuckDB oracle bit-for-bit on
+    the sf0.001 tables."""
+    _assert_matches_sf0001_oracle(spark, name)

@@ -188,6 +188,52 @@ def test_categorical_state_roundtrip(spark, tmp_path):
     assert merged_categorical_from_manifest(m2, "absent") == {}
 
 
+def test_categorical_tv_int_column_with_null_under_ansi(spark, tmp_path):
+    """An integer category column holding a NULL goes through the
+    histogram, the TV and the checkpoint state with ANSI mode on (Spark
+    4's default): the value is cast to string before NULL folds into
+    NULL_CATEGORY, so no '<null>' -> int cast is ever attempted, and the
+    TV rows equal the conditional path's at one constant condition."""
+    from taco_toolbox_spark.checkpoint import (
+        CheckpointManifest,
+        record_categorical_state,
+    )
+    from taco_toolbox_spark.checks.drift import (
+        conditional_counts,
+        conditional_tv,
+    )
+
+    df = spark.createDataFrame(
+        [("p1", 1), ("p1", 2), ("p1", None), ("p2", 1), ("p2", 1)],
+        "part string, cat int",
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        base = categorical_counts(df, "cat")
+        assert base == {"1": 3, "2": 1, NULL_CATEGORY: 1}
+        got = sorted(
+            tuple(r) for r in categorical_tv(df, "cat", "part", base).collect()
+        )
+        ct = conditional_tv(
+            df, "'all'", "cat", "part", conditional_counts(df, "'all'", "cat")
+        )
+        want = sorted(
+            tuple(r)
+            for r in ct.select("part", "n_part", "tv_num", "tv").collect()
+        )
+        assert got == want and len(got) == 2
+        m = CheckpointManifest.load_or_create(
+            str(tmp_path / "manifest.json"), "r1", "in"
+        )
+        record_categorical_state(m, df, "cat")
+        assert m.doc["partitions"]["p1"]["categorical"]["cat"] == {
+            "1": 1, "2": 1, NULL_CATEGORY: 1,
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_gap_check_max_and_min_step(spark):
     """GapCheck flags adjacent steps above max_step / below min_step; the
     violation lands on the CURRENT row of the bad pair; NULL values never

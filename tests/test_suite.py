@@ -661,6 +661,48 @@ def test_suggest_drift_calibration_matches_enforcement(spark, corpus):
     assert flat == {k: int(v) for k, v in bc2.items()}
 
 
+def test_suggest_every_tv_threshold_matches_enforcement(spark, corpus):
+    """Discovery equals enforcement for the WHOLE total-variation family:
+    every cat_drift and cond_drift entry suggest_suite mines on the
+    corpus carries the public counts helpers' baseline and the threshold
+    max(0.05, ceil(1000·max tv)/1000) computed by the public
+    categorical_tv / conditional_tv over that baseline."""
+    import math
+
+    from taco_toolbox_spark.checks.drift import (
+        categorical_counts,
+        categorical_tv,
+        conditional_counts,
+        conditional_tv,
+    )
+    from taco_toolbox_spark.engine import EngineConfig
+    from taco_toolbox_spark.suite import suggest_suite
+
+    df = corpus.clean
+    spec = suggest_suite(df, EngineConfig(), health=False)
+    entries = [
+        c for c in spec["checks"] if c["type"] in ("cat_drift", "cond_drift")
+    ]
+    assert {c["type"] for c in entries} == {"cat_drift", "cond_drift"}
+    for e in entries:
+        if e["type"] == "cat_drift":
+            bc = categorical_counts(df, e["col"])
+            assert e["baseline_counts"] == bc, e["id"]
+            tv = categorical_tv(df, e["col"], "part", bc)
+        else:
+            bc = conditional_counts(df, e["cond"], e["cat"])
+            flat = {
+                (k, c): n
+                for k, inner in e["baseline_counts"].items()
+                for c, n in inner.items()
+            }
+            assert flat == bc, e["id"]
+            tv = conditional_tv(df, e["cond"], e["cat"], "part", bc)
+        m = float(tv.agg(F.max("tv")).first()[0])
+        want = max(0.05, math.ceil(m * 1000.0) / 1000.0)
+        assert e["threshold"] == want, e["id"]
+
+
 def test_suggest_suite_guards(spark):
     from taco_toolbox_spark.engine import EngineConfig
     from taco_toolbox_spark.suite import suggest_suite
